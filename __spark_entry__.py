@@ -414,13 +414,13 @@ def _kg_nif_text_links(spark, sf_dir):
 def _kg_file_types(spark, sf_dir):
     """FileTypeExtractor over the part-derived File-ns corpus: extension →
     mime + ontology class + commons fileURL (FileTypeExtractor.scala:40-226)."""
-    from kgforge.extractors.structural import extract_file_types
+    from kgforge.extractors import run_extractors
     from kgforge.parse import prepare
 
     key = sf_dir + "::file_types"
     if key not in _QUADS_CACHE:
-        _QUADS_CACHE[key] = extract_file_types(
-            prepare(file_corpus_from_parts(spark, sf_dir))
+        _QUADS_CACHE[key] = run_extractors(
+            prepare(file_corpus_from_parts(spark, sf_dir)), ["file_types"]
         ).persist()
         _QUADS_CACHE[key].count()
     return _QUADS_CACHE[key].select("subject", "predicate", "value", "datatype")

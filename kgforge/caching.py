@@ -28,7 +28,14 @@ def no_pushdown(cond: Column) -> Column:
     folded by Spark 4 (rand's range is known). ``monotonically_increasing_id()
     < -1`` ≡ false (ids are non-negative), is non-deterministic (never
     pushed/reordered) and is not folded, so results are unchanged and task
-    retries are safe (the arm is false on every draw)."""
+    retries are safe (the arm is false on every draw).
+
+    Rule: wrap only predicates over DERIVED, non-scan columns. The guard
+    disables pruning — a wrapped predicate over a scan column never reaches
+    the scan, so partition pruning and pushed row-group filters are lost.
+    Keep cheap scan-column predicates separate and unwrapped (as
+    ``parse.prepare`` does with its ``path contains ':'`` prefilter).
+    tests/test_plan_shape.py pins that the guard survives the optimizer."""
     return cond | (F.monotonically_increasing_id() < F.lit(-1))
 
 

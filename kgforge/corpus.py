@@ -554,7 +554,7 @@ def golden_quads_for(i: int, n: int) -> list[dict]:
     if f.ns == MAIN:
         # MetaInformationExtractor + ContributorExtractor → revision_meta
         # (deterministic modified date + repo-as-contributor derivations,
-        # kgforge/extractors/structural.py extract_meta_information)
+        # kgforge/extractors/fused.py meta_information/contributors)
         import datetime as _dt
 
         rid = revision_id_of(i, n)

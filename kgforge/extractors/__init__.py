@@ -1,37 +1,14 @@
-"""Extractor suite: parsed-page DataFrame → quad DataFrames.
+"""Extractor suite: parsed-page DataFrame → quad DataFrame.
 
-Each extractor is a pure function ``DataFrame → DataFrame[QUAD_SCHEMA]`` over
-the nested feature columns the parse stage produced — the Spark-first
-re-expression of the reference's ``Extractor[N].extract(page) → Seq[Quad]``
-contract (mappings/Extractor.scala:9-33). The page is parsed once
-(CompositeParseExtractor parse-once semantics) and every extractor below is
-Catalyst-optimizable: explode / filter / project, no Python in the loop except
-the vectorized IRI-encode and value-typing UDFs.
+Each extractor is a named segment — parsed columns → ``array<quad>`` — the
+Spark-first re-expression of the reference's ``Extractor[N].extract(page) →
+Seq[Quad]`` contract (mappings/Extractor.scala:9-33). The page is parsed once
+(CompositeParseExtractor parse-once semantics) and every segment is
+Catalyst-optimizable: ``fused_quads`` explodes all of them in one narrow
+pass, ``run_extractors`` a named subset. No Python runs in the loop except
+the vectorized infobox-typing UDF (``fused.py``). ``structural.py`` holds the
+reference configuration tables and the standalone extractors outside the
+suite.
 """
 
-from .fused import fused_quads  # noqa: F401
-from .structural import (  # noqa: F401
-    ALL_EXTRACTORS,
-    extract_abstracts,
-    extract_anchor_text,
-    extract_article_categories,
-    extract_article_page,
-    extract_article_templates,
-    extract_category_labels,
-    extract_disambiguations,
-    extract_external_links,
-    extract_geo,
-    extract_homepages,
-    extract_infobox,
-    extract_interlanguage_links,
-    extract_labels,
-    extract_page_ids,
-    extract_page_length,
-    extract_page_links,
-    extract_out_degree,
-    extract_redirects,
-    extract_revision_ids,
-    extract_skos_categories,
-    extract_template_parameters,
-    run_extractors,
-)
+from .fused import ALL_EXTRACTORS, fused_quads, run_extractors  # noqa: F401

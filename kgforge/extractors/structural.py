@@ -1,38 +1,24 @@
-"""Structural extractors (SURVEY.md §2.3) as Catalyst expressions.
+"""Reference configuration tables for the extractor suite, and the
+standalone extractors that run outside it.
 
-Reference parity notes cite file:line under /root/reference/core/src/main/
-scala/org/dbpedia/extraction/. All quads carry ``context = null`` (Quad
+The suite itself — one segment per ``ALL_EXTRACTORS`` name — lives in
+``fused.py``; the per-language tables it reads (homepage property names,
+disambiguation suffixes, gender pronouns, ...) are kept here, next to the
+extractors that are separate passes (long abstracts, IRI/URI sameAs, fr
+population) and the page_props disambiguation source.
+
+Reference parity notes cite file:line under the reference's
+core/src/main/scala/org/dbpedia/extraction/. All quads carry ``context = null`` (Quad
 equality ignores context, transform/Quad.scala:120-157).
 """
 
 from __future__ import annotations
 
-import functools
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import vocab as V
-from ..namespaces import (
-    CATEGORY,
-    FILE,
-    MAIN,
-    RDF_LANGSTRING,
-    RDF_TYPE,
-    RDFS_LABEL,
-    TEMPLATE,
-    XSD_INTEGER,
-    XSD_NONNEG_INT,
-    XSD_STRING,
-    normalize_title,
-    resource_base,
-    title_with_namespace,
-    wiki_base,
-    wiki_encode,
-)
+from ..namespaces import DBO, MAIN, RDF_LANGSTRING, TEMPLATE
 
-# All IRIs are minted at parse time inside the single mapInPandas stage
-# (kgforge/parse.py) — extractors are 100% JVM-side Catalyst expressions.
 
 def _quads(
     df: DataFrame,
@@ -56,193 +42,75 @@ def _quads(
     ).filter(F.col("subject").isNotNull() & F.col("value").isNotNull())
 
 
-def _prop_base() -> Column:
-    """Per-language property namespace (Language.propertyUri)."""
-    return F.when(F.col("lang") == "en", F.lit("http://dbpedia.org/property/")).otherwise(
-        F.concat(F.lit("http://"), F.col("lang"), F.lit(".dbpedia.org/property/"))
+# --- standalone extractors (separate passes, outside the fused suite) ------
+
+
+def extract_long_abstracts(parsed: DataFrame) -> DataFrame:
+    """Long-abstract dataset (DBpediaDatasets long_abstracts; the reference's
+    NIF/PlainAbstract pipeline renders via MediaWiki — this engine's
+    deterministic substitute is the FULL plain_text, consistent with
+    nif:isString; the short abstract stays the first paragraph). Standalone
+    pass like the NIF group — not part of the fused golden set."""
+    pages = parsed.filter(
+        (F.col("namespace") == MAIN)
+        & F.col("redirect_target").isNull()
+        & (F.col("plain_text") != "")
     )
+    return _quads(pages, V.LONG_ABSTRACTS, F.col("subject"), V.ABSTRACT_PROP,
+                  F.col("plain_text"), langstring=True)
 
 
-def _main(df: DataFrame) -> DataFrame:
-    return df.filter(F.col("namespace") == MAIN)
+def extract_uri_same_as_iri(parsed: DataFrame) -> DataFrame:
+    """UriSameAsIriExtractor (mappings/UriSameAsIriExtractor.scala:30-60):
+    every page whose subject IRI differs from its ASCII-URI form → one
+    (iri, owl:sameAs, uri) quad. Per-page twin of the
+    CreateIriSameAsUriLinks script (kgforge/canonicalize.py
+    iri_same_as_uri_quads) using the SAME transcoder UDF."""
+    from ..canonicalize import iri_to_uri_udf
+
+    pages = parsed.select("lang", "subject").withColumn(
+        "uri", iri_to_uri_udf(F.col("subject"))
+    ).filter(F.col("uri") != F.col("subject"))
+    return _quads(pages, "uri_same_as_iri", F.col("subject"), V.OWL_SAME_AS, F.col("uri"))
 
 
-def _is_redirect() -> Column:
-    return F.col("redirect_target").isNotNull()
-
-
-def _internal_links() -> Column:
-    # internal links = iw == '' (InterWikiLinkNode vs InternalLinkNode)
-    return F.filter(F.col("links"), lambda l: l["iw"] == "")
-
-
-# ---------------------------------------------------------------------------
-# extractors
-# ---------------------------------------------------------------------------
-
-
-def extract_labels(parsed: DataFrame) -> DataFrame:
-    """LabelExtractor (mappings/LabelExtractor.scala:27-37): Main-ns title as
-    rdfs:label langString."""
-    return _quads(_main(parsed), V.LABELS, F.col("subject"), RDFS_LABEL, F.col("title"), langstring=True)
-
-
-def extract_page_ids(parsed: DataFrame) -> DataFrame:
-    """PageIdExtractor (mappings/PageIdExtractor.scala:23-29): all namespaces."""
-    return _quads(parsed, V.PAGE_IDS, F.col("subject"), V.WIKI_PAGE_ID, F.col("page_id"), XSD_INTEGER)
-
-
-def extract_revision_ids(parsed: DataFrame) -> DataFrame:
-    """RevisionIdExtractor (mappings/RevisionIdExtractor.scala:23-29)."""
-    return _quads(
-        parsed, V.REVISION_IDS, F.col("subject"), V.WIKI_PAGE_REVISION_ID, F.col("revision_id"), XSD_INTEGER
+def extract_fr_population(parsed: DataFrame) -> DataFrame:
+    """fr.PopulationExtractor (mappings/fr/PopulationExtractor.scala:27-55):
+    French Template-ns pages titled '…/<City>/…évolution population…'
+    carrying a '|pop=N' row → <City> dbo:populationTotal N (FIRST pop match
+    only — the reference returns on the first hit; all-digit 'city'
+    segments dropped; Discussion/Modèles pages excluded). Language-gated to
+    fr, so it costs nothing elsewhere."""
+    title = F.col("title")
+    city_raw = F.try_element_at(F.split(title, "/"), F.lit(2))
+    pop = F.regexp_extract(F.col("content"), r"pop=(\d+)", 1)
+    pages = parsed.filter(
+        (F.col("lang") == "fr")
+        & (F.col("namespace") == TEMPLATE)
+        & F.col("redirect_target").isNull()
+        & F.lower(title).contains("évolution population")
+        & ~title.contains("Discussion")
+        & ~title.contains("Modèles")
+        & F.col("content").contains("|pop=")
+    ).select(
+        "lang", city_raw.alias("city"), pop.alias("pop")
+    ).filter(
+        F.col("city").isNotNull() & (F.col("city") != "")
+        & ~F.col("city").rlike("^[0-9]*$") & (F.col("pop") != "")
     )
+    from ..wikidata import wiki_encode_expr
 
-
-def extract_page_length(parsed: DataFrame) -> DataFrame:
-    """WikiPageLengthExtractor (mappings/WikiPageLengthExtractor.scala:22-32)."""
-    return _quads(
-        _main(parsed),
-        V.PAGE_LENGTH,
-        F.col("subject"),
-        V.WIKI_PAGE_LENGTH,
-        F.length("content"),
-        XSD_NONNEG_INT,
-    )
-
-
-def extract_out_degree(parsed: DataFrame) -> DataFrame:
-    """WikiPageOutDegreeExtractor (:25-37): count of internal-link nodes."""
-    return _quads(
-        _main(parsed),
-        V.OUT_DEGREE,
-        F.col("subject"),
-        V.WIKI_PAGE_OUT_DEGREE,
-        F.size(_internal_links()),
-        XSD_NONNEG_INT,
-    )
-
-
-def _exploded_internal_links(parsed: DataFrame) -> DataFrame:
-    return _main(parsed).select(
-        "lang", "subject", F.explode(_internal_links()).alias("link")
-    )
-
-
-def extract_page_links(parsed: DataFrame) -> DataFrame:
-    """PageLinksExtractor (:27-41): every internal link on a Main page,
-    any destination namespace."""
-    ex = _exploded_internal_links(parsed)
-    return _quads(ex, V.PAGE_LINKS, F.col("subject"), V.WIKI_PAGE_WIKI_LINK, F.col("link.iri"))
-
-
-def extract_anchor_text(parsed: DataFrame) -> DataFrame:
-    """AnchorTextExtractor (:24-48): subject = link TARGET, value = anchor
-    text — the surface-form generator feeding entity linking."""
-    ex = _exploded_internal_links(parsed).filter(F.col("link.ns") == MAIN)
-    return _quads(
-        ex, V.ANCHOR_TEXT, F.col("link.iri"), V.WIKI_PAGE_WIKI_LINK_TEXT, F.col("link.label"), langstring=True
-    )
-
-
-def extract_external_links(parsed: DataFrame) -> DataFrame:
-    """ExternalLinksExtractor (:24-37)."""
-    ex = _main(parsed).select("lang", "subject", F.explode("external_links").alias("e"))
-    return _quads(ex, V.EXTERNAL_LINKS, F.col("subject"), V.WIKI_PAGE_EXTERNAL_LINK, F.col("e.uri"))
-
-
-def extract_article_categories(parsed: DataFrame) -> DataFrame:
-    """ArticleCategoriesExtractor (:16-29): Main-page links into Category ns."""
-    ex = _exploded_internal_links(parsed).filter(F.col("link.ns") == CATEGORY)
-    return _quads(ex, V.ARTICLE_CATEGORIES, F.col("subject"), V.DCT_SUBJECT, F.col("link.iri"))
-
-
-def extract_category_labels(parsed: DataFrame) -> DataFrame:
-    """CategoryLabelExtractor (:17-25)."""
-    cats = parsed.filter(F.col("namespace") == CATEGORY)
-    return _quads(cats, V.CATEGORY_LABELS, F.col("subject"), RDFS_LABEL, F.col("title"), langstring=True)
-
-
-def extract_skos_categories(parsed: DataFrame) -> DataFrame:
-    """SkosCategoriesExtractor (:24-41): Concept type + prefLabel + broader
-    per category-destination link on Category pages."""
-    cats = parsed.filter(F.col("namespace") == CATEGORY)
-    types = _quads(cats, V.SKOS_CATEGORIES, F.col("subject"), RDF_TYPE, F.lit(V.SKOS_CONCEPT))
-    labels = _quads(cats, V.SKOS_CATEGORIES, F.col("subject"), V.SKOS_PREF_LABEL, F.col("title"), langstring=True)
-    broader_links = cats.select(
-        "lang", "subject", F.explode(F.filter(F.col("links"), lambda l: (l["iw"] == "") & (l["ns"] == CATEGORY))).alias("link")
-    )
-    broader = _quads(
-        broader_links, V.SKOS_CATEGORIES, F.col("subject"), V.SKOS_BROADER, F.col("link.iri")
-    )
-    return types.unionByName(labels).unionByName(broader)
-
-
-def extract_article_page(parsed: DataFrame) -> DataFrame:
-    """ArticlePageExtractor (:23-41): foaf:isPrimaryTopicOf / primaryTopic /
-    dc:language / rdf:type foaf:Document."""
-    pages = _main(parsed).select("lang", "subject", "page_iri")
-    a = _quads(pages, V.WIKIPEDIA_LINKS, F.col("subject"), V.FOAF_IS_PRIMARY_TOPIC_OF, F.col("page_iri"))
-    b = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), V.FOAF_PRIMARY_TOPIC, F.col("subject"))
-    c = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), V.DC_LANGUAGE, F.col("lang"), XSD_STRING)
-    d = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), RDF_TYPE, F.lit(V.FOAF_DOCUMENT))
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-def extract_article_templates(parsed: DataFrame) -> DataFrame:
-    """ArticleTemplatesExtractor (:31-65): top-level templates →
-    article_templates, nested → article_templates_nested; predicate in the
-    per-language PROPERTY namespace (see the FIXME at :25-27)."""
-    pred = F.concat(_prop_base(), F.lit("wikiPageUsesTemplate"))
-    ex = parsed.select("lang", "subject", F.explode("templates").alias("t"))
-    tpl_iri = F.col("t.iri")
-    top = _quads(ex.filter(F.col("t.depth") == 0), V.ARTICLE_TEMPLATES, F.col("subject"), pred, tpl_iri)
-    nested = _quads(
-        ex.filter(F.col("t.depth") > 0), V.ARTICLE_TEMPLATES_NESTED, F.col("subject"), pred, tpl_iri
-    )
-    return top.unionByName(nested)
-
-
-def extract_template_parameters(parsed: DataFrame) -> DataFrame:
-    """TemplateParameterExtractor (:26-55): declared {{{params}}} on
-    non-redirect Template-ns pages, distinct per page, xsd:string."""
-    tpl = parsed.filter((F.col("namespace") == TEMPLATE) & ~_is_redirect())
-    ex = tpl.select("lang", "subject", F.explode(F.array_distinct("param_decls")).alias("param")).filter(
-        F.col("param") != ""
-    )
-    pred = F.concat(_prop_base(), F.lit("templateUsesParameter"))
-    return _quads(ex, V.TEMPLATE_PARAMETERS, F.col("subject"), pred, F.col("param"), XSD_STRING)
-
-
-def extract_redirects(parsed: DataFrame) -> DataFrame:
-    """RedirectExtractor (:27-38): redirect pages in {Main, Template,
-    Category} whose target is in the SAME namespace."""
-    red = parsed.filter(_is_redirect() & (F.size("links") > 0))
-    first = F.element_at("links", 1)
-    red = red.select("lang", "namespace", "subject", first.alias("link")).filter(
-        (F.col("link.iw") == "") & (F.col("link.ns") == F.col("namespace"))
-    )
-    return _quads(red, V.REDIRECTS, F.col("subject"), V.WIKI_PAGE_REDIRECTS, F.col("link.iri"))
-
-
-def extract_interlanguage_links(parsed: DataFrame) -> DataFrame:
-    """InterLanguageLinksExtractor (:17-26): InterWikiLinkNodes on
-    Main/Template/Category pages."""
-    df = parsed.filter(F.col("namespace").isin(MAIN, TEMPLATE, CATEGORY))
-    ex = df.select(
-        "lang", "subject", F.explode(F.filter(F.col("links"), lambda l: l["iw"] != "")).alias("link")
+    subject = F.concat(
+        F.lit("http://fr.dbpedia.org/resource/"), wiki_encode_expr(F.col("city"))
     )
     return _quads(
-        ex, V.INTERLANGUAGE_LINKS, F.col("subject"), V.WIKI_PAGE_INTER_LANGUAGE_LINK, F.col("link.iri")
+        pages, V.FRENCH_POPULATION, subject,
+        "http://dbpedia.org/ontology/populationTotal", F.col("pop"),
+        datatype="http://www.w3.org/2001/XMLSchema#nonNegativeInteger",
     )
 
 
-def extract_abstracts(parsed: DataFrame) -> DataFrame:
-    """Deterministic first-paragraph abstract (substitute for the reference's
-    live-API PlainAbstractExtractor — SURVEY.md §2.3 abstracts group)."""
-    df = _main(parsed).filter(~_is_redirect() & (F.col("abstract") != ""))
-    return _quads(df, V.ABSTRACTS, F.col("subject"), V.ABSTRACT_PROP, F.col("abstract"), langstring=True)
-
+# --- disambiguation: page_props source and the isAcronym rule --------------
 
 _DISAMBIG_TEMPLATES = ("disambiguation", "disambig", "dab", "begriffsklärung", "homonymie")
 
@@ -262,19 +130,6 @@ _DISAMBIG_SUFFIX: dict[str, str] = {
     "ro": r" \(dezambiguizare\)$", "ru": r" \(значения\)$",
     "sk": r" \(Rozlišovacia stránka\)$", "uk": r" \(значення\)$",
 }
-
-
-def extract_long_abstracts(parsed: DataFrame) -> DataFrame:
-    """Long-abstract dataset (DBpediaDatasets long_abstracts; the reference's
-    NIF/PlainAbstract pipeline renders via MediaWiki — this engine's
-    deterministic substitute is the FULL plain_text, consistent with
-    nif:isString; the short abstract stays the first paragraph). Standalone
-    pass like the NIF group — not part of the fused golden set."""
-    pages = _main(parsed).filter(
-        F.col("redirect_target").isNull() & (F.col("plain_text") != "")
-    )
-    return _quads(pages, V.LONG_ABSTRACTS, F.col("subject"), V.ABSTRACT_PROP,
-                  F.col("plain_text"), langstring=True)
 
 
 def acronym_matches(clean_title: Column, target: Column) -> Column:
@@ -308,51 +163,34 @@ def load_page_props_disambig(lines: DataFrame, column: str = "value") -> DataFra
     ).distinct()
 
 
-def extract_disambiguations(parsed: DataFrame, page_props_ids: DataFrame | None = None) -> DataFrame:
-    """DisambiguationExtractor (:31-83): on disambiguation pages keep links
-    whose target contains the cleaned page title (case-insensitive) OR
-    spells it out as an acronym (:68-83). A page is a disambiguation page if
-    its page_id is in the (broadcast) page_props set — the reference's
-    primary source, Disambiguations.scala:60-113 — OR it carries a
-    disambiguation template (the load-failure fallback, :70-77). The id set
-    is bounded by the number of disambiguation pages (~0.3% of enwiki), so
-    the semi-join broadcasts even at dump scale."""
-    is_disambig = F.exists(
-        F.col("templates"), lambda t: F.lower(t["name"]).isin(*_DISAMBIG_TEMPLATES)
-    )
-    if page_props_ids is not None:
-        ids = F.broadcast(
-            page_props_ids.select(F.col("page_id").cast("long").alias("_pp_id")).distinct()
-        )
-        marked = parsed.join(ids, parsed["page_id"] == ids["_pp_id"], "left")
-        pages = _main(marked).filter(is_disambig | F.col("_pp_id").isNotNull())
-    else:
-        pages = _main(parsed).filter(is_disambig)
-    strip = F.regexp_replace(F.col("title"), _DISAMBIG_SUFFIX["en"], "")
-    for _lg, _pat in _DISAMBIG_SUFFIX.items():
-        if _lg != "en":
-            strip = F.when(
-                F.col("lang") == _lg, F.regexp_replace(F.col("title"), _pat, "")
-            ).otherwise(strip)
-    clean_title = F.upper(strip)
-    ex = pages.select(
-        "lang", "subject", clean_title.alias("clean_title"), F.explode(_internal_links()).alias("link")
-    ).filter(
-        (F.col("link.ns") == MAIN)
-        & (
-            F.upper(F.col("link.target")).contains(F.col("clean_title"))
-            | acronym_matches(F.col("clean_title"), F.col("link.target"))
-        )
-    )
-    return _quads(ex, V.DISAMBIGUATIONS, F.col("subject"), V.WIKI_PAGE_DISAMBIGUATES, F.col("link.iri"))
+# optional parsed-frame column the disambiguations segment reads
+PP_DISAMBIG = "_pp_disambig"
 
+
+def with_page_props_disambig(parsed: DataFrame, page_props_ids: DataFrame) -> DataFrame:
+    """``parsed`` plus the boolean ``PP_DISAMBIG`` column: the page's id is
+    in the page_props disambiguation set (load_page_props_disambig) — the
+    reference's primary disambiguation source, Disambiguations.scala:60-113;
+    the template heuristic stays the fallback (:70-77). The id set is
+    bounded by the number of disambiguation pages (~0.3% of enwiki), so the
+    join broadcasts even at dump scale."""
+    ids = F.broadcast(
+        page_props_ids.select(F.col("page_id").cast("long").alias("_pp_id")).distinct()
+    )
+    return (
+        parsed.join(ids, parsed["page_id"] == ids["_pp_id"], "left")
+        .withColumn(PP_DISAMBIG, F.col("_pp_id").isNotNull())
+        .drop("_pp_id")
+    )
+
+
+# --- per-language configuration tables of the fused segments --------------
 
 # HomepageExtractorConfig.propertyNamesMap (:11-50) — per-language infobox
 # property names; unknown languages fall back to the en set (the reference
 # returns Set() there, but en names dominate real infobox reuse)
-_HOMEPAGE_KEYS = ("website", "homepage", "web", "site")
 _HOMEPAGE_KEYS_BY_LANG: dict[str, tuple[str, ...]] = {
-    "en": _HOMEPAGE_KEYS,
+    "en": ("website", "homepage", "web", "site"),
     "am": ("ድህረገፅ", "ድህረ ገፅ", "ገጽ", "ድህረ ገጽ", "ድረ ገፅ", "ድረገፅ", "ድረገጽ",
            "ድረ ገጽ", "ዋና ገጽ", "ዌብሳይት", "website", "web", "site"),
     "ar": ("الموقع", "الصفحة الرسمية", "موقع", "الصفحة الرئيسية", "صفحة ويب", "موقع ويب"),
@@ -421,153 +259,6 @@ _URL_IN_VALUE = r"\[?\s*((?:https?|ftp)://[^\s\]\|]+)"
 _BARE_DOMAIN = r"^\s*([A-Za-z0-9][\w.-]*\.\w[\w/.~%#?=&-]*)\s*$"
 
 
-def _lang_match(col: Column, table: dict[str, str]) -> Column:
-    """lang-dispatched rlike over a per-language regex table (en fallback)."""
-    expr = col.rlike(table["en"])
-    for lg, pat in table.items():
-        if lg != "en":
-            expr = F.when(F.col("lang") == lg, col.rlike(pat)).otherwise(expr)
-    return expr
-
-
-def extract_homepages(parsed: DataFrame) -> DataFrame:
-    """HomepageExtractor (mappings/HomepageExtractor.scala:47-102): in
-    priority order — (1) the first URL in a website/homepage infobox
-    property (per-language property names, bare domains prefixed http://),
-    (2) an {{official website}}-family template inside the external-links
-    section, (3) an external link whose label matches the language's
-    'official' keyword inside that section. All three branches are Catalyst
-    expressions over the parse columns; 'inside the section' = line number
-    within [section line, next section line)."""
-    main = _main(parsed)
-
-    # branch 1: infobox property
-    keys_expr = F.lower(F.col("p.key")).isin(*_HOMEPAGE_KEYS)
-    for lg, names in _HOMEPAGE_KEYS_BY_LANG.items():
-        if lg != "en":
-            keys_expr = F.when(
-                F.col("lang") == lg, F.lower(F.col("p.key")).isin(*names)
-            ).otherwise(keys_expr)
-    params = main.select(
-        "lang", "subject", F.explode("templates").alias("t")
-    ).select(
-        "lang", "subject", F.col("t.pos").alias("pos"), F.explode("t.params").alias("p")
-    ).filter(keys_expr)
-    url1 = F.regexp_extract(F.col("p.value"), _URL_IN_VALUE, 1)
-    bare = F.regexp_extract(F.col("p.value"), _BARE_DOMAIN, 1)
-    prop_urls = params.select(
-        "lang", "subject", F.lit(0).alias("rank"), "pos",
-        F.when(url1 != "", url1)
-        .when(bare != "", F.concat(F.lit("http://"), bare))
-        .alias("url"),
-    ).filter(F.col("url").isNotNull())
-
-    # the external-links section line range per page: [line, next_line)
-    secs = main.withColumn(
-        "_els_line",
-        F.array_min(
-            F.transform(
-                F.filter(F.col("sections"), lambda s: _lang_match(s["name"], _EXT_SECTION_RE)),
-                lambda s: s["line"],
-            )
-        ),
-    ).withColumn(
-        "_els_end",
-        F.coalesce(
-            F.array_min(
-                F.transform(
-                    F.filter(F.col("sections"), lambda s: s["line"] > F.col("_els_line")),
-                    lambda s: s["line"],
-                )
-            ),
-            F.lit(2**31 - 1),
-        ),
-    ).filter(F.col("_els_line").isNotNull())
-
-    # branch 2: {{official website|url}} template inside the section
-    tname = F.lower(F.regexp_replace(F.col("t.name"), "_", " "))
-    tpl_name_expr = tname == _OFFICIAL_TEMPLATE["en"][0]
-    key_expr = F.lit(_OFFICIAL_TEMPLATE["en"][1])
-    for lg, (nm, key) in _OFFICIAL_TEMPLATE.items():
-        if lg != "en":
-            tpl_name_expr = F.when(F.col("lang") == lg, tname == nm).otherwise(tpl_name_expr)
-            key_expr = F.when(F.col("lang") == lg, F.lit(key)).otherwise(key_expr)
-    tpls = secs.select(
-        "lang", "subject", "_els_line", "_els_end", F.explode("templates").alias("t")
-    ).filter(
-        tpl_name_expr
-        & (F.col("t.line") >= F.col("_els_line"))
-        & (F.col("t.line") < F.col("_els_end"))
-    )
-    tpl_val = F.array_min(
-        F.transform(
-            F.filter(F.col("t.params"), lambda p: p["key"] == key_expr),
-            lambda p: p["value"],
-        )
-    )
-    tpl_urls = tpls.select(
-        "lang", "subject", F.lit(1).alias("rank"), F.col("t.line").alias("pos"),
-        F.when(tpl_val.rlike(r"^(?:https?|ftp)://"), tpl_val)
-        .when(tpl_val.rlike(_BARE_DOMAIN), F.concat(F.lit("http://"), F.trim(tpl_val)))
-        .alias("url"),
-    ).filter(F.col("url").isNotNull())
-
-    # branch 3: external link in the section whose LIST-ITEM text mentions
-    # the 'official' keyword (the reference's listItemStartRegex over the
-    # text node, HomepageExtractor.scala:38,180-196 — the keyword sits in
-    # the item text, not necessarily the link label; a transformed
-    # {{Official website}} link has no label at all). Line-shift-proof:
-    # match any source line carrying both the link URI and the keyword.
-    links = secs.select(
-        "lang", "subject", "content", "_els_line", "_els_end",
-        F.explode("external_links").alias("e"),
-    ).filter(
-        (F.col("e.line") >= F.col("_els_line"))
-        & (F.col("e.line") < F.col("_els_end"))
-        & (
-            _lang_match(F.col("e.label"), _OFFICIAL_RE)
-            | F.exists(
-                F.split(F.col("content"), "\n"),
-                lambda ln: ln.contains(F.col("e.uri")) & _lang_match(ln, _OFFICIAL_RE),
-            )
-        )
-    )
-    link_urls = links.select(
-        "lang", "subject", F.lit(2).alias("rank"),
-        F.col("e.line").alias("pos"), F.col("e.uri").alias("url"),
-    )
-
-    allu = prop_urls.unionByName(tpl_urls).unionByName(link_urls)
-    first = allu.groupBy("lang", "subject").agg(
-        F.min_by("url", F.struct("rank", "pos")).alias("url")
-    )
-    return _quads(first, V.HOMEPAGES, F.col("subject"), V.FOAF_HOMEPAGE, F.col("url"))
-
-
-# --- geo ---------------------------------------------------------------
-
-
-def extract_geo(parsed: DataFrame) -> DataFrame:
-    """GeoExtractor (:26-58): first ROOT template parseable as a coordinate →
-    4 quads. The coordinate itself is computed at parse time
-    (wikitext.ParsedPage.first_coord) so this is a pure projection."""
-    first = _main(parsed).filter(F.col("coord_lat").isNotNull()).select(
-        "lang", "subject", "coord_lat", "coord_lon"
-    )
-    lat_s = F.col("coord_lat").cast("string")  # double repr == vocab.fmt_double
-    lon_s = F.col("coord_lon").cast("string")
-    xsd_float = "http://www.w3.org/2001/XMLSchema#float"
-    a = _quads(first, V.GEO_COORDINATES, F.col("subject"), RDF_TYPE, F.lit(V.GEO_SPATIAL_THING))
-    b = _quads(first, V.GEO_COORDINATES, F.col("subject"), V.GEO_LAT, lat_s, xsd_float)
-    c = _quads(first, V.GEO_COORDINATES, F.col("subject"), V.GEO_LONG, lon_s, xsd_float)
-    d = _quads(
-        first, V.GEO_COORDINATES, F.col("subject"), V.GEORSS_POINT, F.concat_ws(" ", lat_s, lon_s), XSD_STRING
-    )
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-# --- infobox -----------------------------------------------------------
-
 _IGNORE_TEMPLATES = (
     "redirect", "seealso", "see_also", "main", "cquote", "chess diagram", "ipa", "lang",
     "تحويل",  # ar redirect (InfoboxExtractorConfig.ignoreTemplates)
@@ -585,60 +276,6 @@ _IGNORE_PROPS_BY_LANG: dict[str, tuple[str, ...]] = {
     "eo": ("dosiero",),
     "pt": ("imagem", "foto", "mapa"),
 }
-_IGNORE_PROPS = _IGNORE_PROPS_BY_LANG["en"]
-
-
-def extract_infobox(parsed: DataFrame) -> DataFrame:
-    """InfoboxExtractor (mappings/InfoboxExtractor.scala:108-197): raw
-    template harvest with quality gates + typing cascade; delegates to the
-    same array-in/array-out UDF as the fused path so split/parens semantics
-    stay identical."""
-    from .fused import infobox_props_udf
-
-    ib_col = (
-        F.col("_ib")
-        if "_ib" in parsed.columns
-        else infobox_props_udf(F.col("lang"), F.col("templates"))
-    )
-    typed = (
-        _main(parsed)
-        .select("lang", "subject", F.explode(ib_col).alias("r"))
-    )
-    props = typed.select(
-        F.col("lang").alias("language"),
-        F.lit(V.INFOBOX_PROPERTIES).alias("dataset"),
-        F.col("subject"),
-        F.col("r.prop_iri").alias("predicate"),
-        F.col("r.value").alias("value"),
-        F.lit(None).cast("string").alias("context"),
-        F.col("r.datatype").alias("datatype"),
-    )
-    defs_src = typed.select(
-        "lang", F.col("r.prop_iri").alias("prop_iri"), F.col("r.prop_label").alias("lbl")
-    ).distinct()
-    d1 = _quads(defs_src, V.INFOBOX_PROPERTY_DEFINITIONS, F.col("prop_iri"), RDF_TYPE, F.lit(V.RDF_PROPERTY))
-    d2 = _quads(defs_src, V.INFOBOX_PROPERTY_DEFINITIONS, F.col("prop_iri"), RDFS_LABEL, F.col("lbl"), None)
-    d2 = d2.withColumn("datatype", F.lit(RDF_LANGSTRING))
-    return props.unionByName(d1).unionByName(d2)
-
-
-def extract_provenance(parsed: DataFrame) -> DataFrame:
-    """ProvenanceExtractor (mappings/ProvenanceExtractor.scala:25-29):
-    prov:wasDerivedFrom sourceIri (WikiPage.scala:62)."""
-    src = F.concat(
-        F.col("page_iri"), F.lit("?oldid="), F.col("revision_id"), F.lit("&ns="), F.col("namespace")
-    )
-    return _quads(parsed, V.PROVENANCE, F.col("subject"), V.PROV_WAS_DERIVED_FROM, src)
-
-
-def _pronoun_count(pronoun: str):
-    # regexp_count keeps the reference's exact non-overlapping-match
-    # semantics (GenderExtractor.scala:58 findAllIn) without materializing a
-    # split array of the full page per pronoun (7 such arrays per row
-    # before); the Capitalized form counts too (pronounsMap lists both)
-    first = pronoun[0]
-    cased = f"[{first.upper()}{first}]{pronoun[1:]}" if first.upper() != first else pronoun
-    return F.regexp_count(F.col("content"), F.lit(r"\W" + cased + r"\W"))
 
 
 # GenderExtractorConfig.pronounsMap (:6-27): per-language pronoun sets AND
@@ -651,42 +288,6 @@ _GENDER_TABLES: dict[str, tuple[tuple[str, ...], tuple[str, ...], str, str]] = {
 }
 
 
-# template names mapped to dbo:Person (GenderExtractor applies only to
-# Person-typed pages; the reference re-runs the MappingExtractor to find out,
-# GenderExtractor.scala:39-49 — we consult the mapping config directly)
-def _person_template_names():
-    from ..mapping_engine import default_mappings
-    from ..ontology import DBO
-
-    return [n for n, m in default_mappings().items() if m.map_to_class == DBO + "Person"]
-
-
-def extract_gender(parsed: DataFrame) -> DataFrame:
-    """GenderExtractor (mappings/GenderExtractor.scala:39-86): argmax of
-    gendered pronoun counts over the raw wikitext; emit when
-    count > 3 and count/second > 2 (GenderExtractorConfig.scala:31-33)."""
-    en_m, en_f, _, _ = _GENDER_TABLES["en"]
-    male = sum((_pronoun_count(p) for p in en_m), F.lit(0))
-    female = sum((_pronoun_count(p) for p in en_f), F.lit(0))
-    m_val, f_val = F.lit("male"), F.lit("female")
-    for lg, (mw, fw, mv, fv) in _GENDER_TABLES.items():
-        if lg == "en":
-            continue
-        male = F.when(F.col("lang") == lg, sum((_pronoun_count(p) for p in mw), F.lit(0))).otherwise(male)
-        female = F.when(F.col("lang") == lg, sum((_pronoun_count(p) for p in fw), F.lit(0))).otherwise(female)
-        m_val = F.when(F.col("lang") == lg, F.lit(mv)).otherwise(m_val)
-        f_val = F.when(F.col("lang") == lg, F.lit(fv)).otherwise(f_val)
-    is_person = F.exists(
-        F.col("templates"), lambda t: F.lower(t["name"]).isin(*_person_template_names())
-    )
-    gender = (
-        F.when((male > 3) & ((female == 0) | (male / female > 2)), m_val)
-        .when((female > 3) & ((male == 0) | (female / male > 2)), f_val)
-    )
-    df = _main(parsed).filter(is_person).withColumn("g", gender).filter(F.col("g").isNotNull())
-    return _quads(df, V.GENDERS, F.col("subject"), V.FOAF_GENDER, F.col("g"), langstring=True)
-
-
 # TopicalConceptsExtractorConfig.catMainTemplates (:10-22) — one shared set
 # across languages (the reference FIXME acknowledges the conflation)
 _CAT_MAIN_TEMPLATES = tuple(t.lower() for t in (
@@ -694,243 +295,6 @@ _CAT_MAIN_TEMPLATES = tuple(t.lower() for t in (
     "Article principal", "Voce principale", "torna a", "Artigo principal",
     "Основная статья по теме категории", "Catmain",
 ))
-
-
-def extract_topical_concepts(parsed: DataFrame) -> DataFrame:
-    """TopicalConceptsExtractor (mappings/TopicalConceptsExtractor.scala:
-    37-62): Category pages carrying a {{Cat main|Article}}-family template →
-    mainArticleForCategory to the named article (first positional param).
-    The blank-sort-label link path ([[Main article| ]]) rides along as a
-    documented extension — the golden corpus marks main articles that way."""
-    from ..wikidata import wiki_encode_expr
-
-    cats = parsed.filter(F.col("namespace") == CATEGORY)
-    ex = cats.select(
-        "lang",
-        "subject",
-        F.explode(
-            F.filter(
-                F.col("links"),
-                lambda l: (l["iw"] == "") & (l["ns"] == MAIN) & (F.trim(l["label"]) == ""),
-            )
-        ).alias("link"),
-    )
-    by_label = _quads(
-        ex, V.TOPICAL_CONCEPTS, F.col("subject"), V.MAIN_ARTICLE_FOR_CATEGORY, F.col("link.iri")
-    )
-    tpls = cats.select(
-        "lang", "subject", F.explode("templates").alias("t")
-    ).filter(F.lower(F.col("t.name")).isin(*_CAT_MAIN_TEMPLATES))
-    first_param = F.array_min(
-        F.transform(
-            F.filter(F.col("t.params"), lambda p: p["key"] == "1"),
-            lambda p: p["value"],
-        )
-    )
-    rb = F.when(F.col("lang") == "en", F.lit("http://dbpedia.org/resource/")).otherwise(
-        F.concat(F.lit("http://"), F.col("lang"), F.lit(".dbpedia.org/resource/"))
-    )
-    by_tpl = _quads(
-        tpls.filter(first_param.isNotNull() & (F.trim(first_param) != "")),
-        V.TOPICAL_CONCEPTS,
-        F.col("subject"),
-        V.MAIN_ARTICLE_FOR_CATEGORY,
-        F.concat(rb, wiki_encode_expr(first_param)),
-    )
-    return by_label.unionByName(by_tpl)
-
-
-def extract_uri_same_as_iri(parsed: DataFrame) -> DataFrame:
-    """UriSameAsIriExtractor (mappings/UriSameAsIriExtractor.scala:30-60):
-    every page whose subject IRI differs from its ASCII-URI form → one
-    (iri, owl:sameAs, uri) quad. Per-page twin of the
-    CreateIriSameAsUriLinks script (kgforge/canonicalize.py
-    iri_same_as_uri_quads) using the SAME transcoder UDF."""
-    from ..canonicalize import iri_to_uri_udf
-
-    pages = parsed.select("lang", "subject").withColumn(
-        "uri", iri_to_uri_udf(F.col("subject"))
-    ).filter(F.col("uri") != F.col("subject"))
-    return _quads(pages, "uri_same_as_iri", F.col("subject"), V.OWL_SAME_AS, F.col("uri"))
-
-
-# ---------------------------------------------------------------------------
-
-ALL_EXTRACTORS = {
-    "labels": extract_labels,
-    "page_ids": extract_page_ids,
-    "revision_ids": extract_revision_ids,
-    "page_length": extract_page_length,
-    "out_degree": extract_out_degree,
-    "page_links": extract_page_links,
-    "anchor_text": extract_anchor_text,
-    "external_links": extract_external_links,
-    "article_categories": extract_article_categories,
-    "category_labels": extract_category_labels,
-    "skos_categories": extract_skos_categories,
-    "article_page": extract_article_page,
-    "article_templates": extract_article_templates,
-    "template_parameters": extract_template_parameters,
-    "redirects": extract_redirects,
-    "interlanguage_links": extract_interlanguage_links,
-    "abstracts": extract_abstracts,
-    "disambiguations": extract_disambiguations,
-    "homepages": extract_homepages,
-    "geo": extract_geo,
-    "infobox": extract_infobox,
-    "provenance": extract_provenance,
-    "gender": extract_gender,
-    "topical_concepts": extract_topical_concepts,
-}
-
-
-def run_extractors(parsed: DataFrame, names: list[str] | None = None) -> DataFrame:
-    """CompositeParseExtractor analog: one parsed DataFrame fanned out to all
-    extractors, results unioned. Caller is responsible for persisting/
-    checkpointing `parsed` so the parse stage runs once."""
-    dfs = [ALL_EXTRACTORS[n](parsed) for n in (names or list(ALL_EXTRACTORS))]
-    return functools.reduce(lambda a, b: a.unionByName(b), dfs)
-
-
-# --- revision meta -----------------------------------------------------
-
-from ..ontology import DBO  # noqa: E402  (section-local import, avoids cycle at module top)
-
-META_CONTRIBUTOR = "http://dbpedia.org/meta/contributor"
-META_CONTRIBUTOR_ID = "http://dbpedia.org/meta/contributorID"
-_XSD_DATE_IRI = "http://www.w3.org/2001/XMLSchema#date"
-
-
-def _meta_links():
-    """edit/revision/history index.php links built from the page IRI's
-    encoded title segment (MetaInformationExtractor.scala:36-39)."""
-    base = F.concat(F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/w/index.php?title="))
-    enc_title = F.regexp_extract(F.col("page_iri"), r"([^/]+)$", 1)
-    edit = F.concat(base, enc_title, F.lit("&action=edit"))
-    revision = F.concat(base, enc_title, F.lit("&oldid="), F.col("revision_id").cast("string"))
-    history = F.concat(base, enc_title, F.lit("&action=history"))
-    return edit, revision, history
-
-
-def _modified_date():
-    """Deterministic modification date: 2000-01-01 + (revision_id % 9000)
-    days. Divergence (documented): the corpus carries no edit timestamps, so
-    the date derives from the revision id; emitted as xsd:date, and the
-    reference's wall-clock wikiPageExtracted quad is NOT emitted — a
-    non-deterministic value would break exact resume and P/R comparison."""
-    return F.date_add(F.to_date(F.lit("2000-01-01")), (F.col("revision_id") % 9000).cast("int")).cast("string")
-
-
-def extract_meta_information(parsed: DataFrame) -> DataFrame:
-    """MetaInformationExtractor (mappings/MetaInformationExtractor.scala:
-    24-53): modification date + edit/revision/history links for Main-ns
-    pages → revision_meta."""
-    pages = _main(parsed).select("lang", "subject", "page_iri", "revision_id")
-    edit, revision, history = _meta_links()
-    a = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageModified", _modified_date(), _XSD_DATE_IRI)
-    b = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageEditLink", edit)
-    c = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageRevisionLink", revision)
-    d = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageHistoryLink", history)
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-def extract_contributors(parsed: DataFrame) -> DataFrame:
-    """ContributorExtractor (mappings/ContributorExtractor.scala:28-65).
-    Derivation decision (the corpus carries no contributor columns): the
-    committing entity is the repo — name = repo, id = a deterministic small
-    int from the repo string; subject of the page→contributor quad is the
-    wiki page IRI, mirroring the reference's pageURL choice."""
-    pages = _main(parsed).select("lang", "page_iri", "repo")
-    curl = F.concat(F.lit("http://dbpedia.org/contributor/"),
-                    F.regexp_replace(F.col("repo"), " ", "_"))
-    cid = (F.length("repo") * 1000 + F.ascii(F.substring("repo", 1, 1))).cast("string")
-    a = _quads(pages, V.REVISION_META, F.col("page_iri"), META_CONTRIBUTOR, curl)
-    b = _quads(pages.select("lang", F.col("repo"), curl.alias("c")).distinct(),
-               V.REVISION_META, F.col("c"), RDFS_LABEL, F.col("repo"), XSD_STRING)
-    c = _quads(pages.select("lang", F.col("repo"), curl.alias("c")).distinct(),
-               V.REVISION_META, F.col("c"), META_CONTRIBUTOR_ID, cid, XSD_INTEGER)
-    return a.unionByName(b).unionByName(c)
-
-
-ALL_EXTRACTORS["meta_information"] = extract_meta_information
-ALL_EXTRACTORS["contributors"] = extract_contributors
-
-
-def extract_infobox_references(parsed: DataFrame) -> DataFrame:
-    """InfoboxReferencesExtractor (mappings/InfoboxReferencesExtractor.scala:
-    60-170, simplified): <ref> bodies attributed to the infobox property on
-    whose line they sit → (page, property IRI, plain ref text). Named refs
-    resolve self-closing reuses. Attribution + IRI minting happen at parse
-    time (kgforge/wikitext._extract_refs); this is a pure projection."""
-    ex = _main(parsed).select("lang", "subject", F.explode("ref_texts").alias("r"))
-    # refs whose body renders to '' (pure cite markup) are carried for the
-    # CitedFactsExtractor but emit no reference-text quad
-    keyed = ex.filter(F.col("r.prop_iri").isNotNull() & (F.col("r.text") != ""))
-    return _quads(
-        keyed, V.INFOBOX_REFERENCES, F.col("subject"), F.col("r.prop_iri"),
-        F.col("r.text"), langstring=True,
-    )
-
-
-def extract_images(parsed: DataFrame) -> DataFrame:
-    """ImageExtractor (mappings/ImageExtractorNew.scala:54-94, link-based
-    core): File-namespace links on Main pages → foaf:depiction + commons
-    FilePath URL, per-image type/rights quads, dbo:thumbnail for the FIRST
-    image. Codec-free — media decoding itself stays in kgforge/multimodal.py
-    (stub codecs, real plumbing)."""
-    file_links = F.filter(
-        F.col("links"), lambda l: (l["iw"] == "") & (l["ns"] == FILE)
-    )
-    pages = _main(parsed).filter(F.size(file_links) > 0).select(
-        "lang", "subject",
-        F.explode(file_links).alias("link"),
-        file_links[0]["iri"].alias("first_iri"),
-    )
-    enc = F.regexp_extract(F.col("link.iri"), r"File:(.*)$", 1)
-    url = F.concat(F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), enc)
-    thumb = F.concat(url, F.lit("?width=300"))
-    wiki_page = F.concat(
-        F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/wiki/File:"), enc
-    )
-    is_first = F.col("link.iri") == F.col("first_iri")
-    a = _quads(pages, V.IMAGES, F.col("subject"), V.FOAF_DEPICTION, url)
-    b = _quads(pages.filter(is_first), V.IMAGES, F.col("subject"), V.DBO_THUMBNAIL, thumb)
-    c = _quads(pages, V.IMAGES, url, V.FOAF_THUMBNAIL, thumb)
-    d = _quads(pages, V.IMAGES, url, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    e = _quads(pages, V.IMAGES, thumb, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    f = _quads(pages, V.IMAGES, url, V.DC_RIGHTS, wiki_page)
-    g = _quads(pages, V.IMAGES, thumb, V.DC_RIGHTS, wiki_page)
-    out = a
-    for df in (b, c, d, e, f, g):
-        out = out.unionByName(df)
-    return out
-
-
-def extract_gallery_images(parsed: DataFrame) -> DataFrame:
-    """GalleryExtractor (mappings/GalleryExtractor.scala:24-122): files
-    listed inside ``<gallery>`` bodies on Main pages → the same image quad
-    shapes as the link-based ImageExtractor (minus the first-image
-    dbo:thumbnail, which stays link-based)."""
-    pages = _main(parsed).filter(F.size("galleries") > 0).select(
-        "lang", "subject", F.explode("galleries").alias("g")
-    )
-    url = F.concat(
-        F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), F.col("g.enc")
-    )
-    thumb = F.concat(url, F.lit("?width=300"))
-    wiki_page = F.concat(
-        F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/wiki/File:"), F.col("g.enc")
-    )
-    a = _quads(pages, V.IMAGES, F.col("subject"), V.FOAF_DEPICTION, url)
-    b = _quads(pages, V.IMAGES, url, V.FOAF_THUMBNAIL, thumb)
-    c = _quads(pages, V.IMAGES, url, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    d = _quads(pages, V.IMAGES, thumb, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    e = _quads(pages, V.IMAGES, url, V.DC_RIGHTS, wiki_page)
-    f = _quads(pages, V.IMAGES, thumb, V.DC_RIGHTS, wiki_page)
-    out = a
-    for df in (b, c, d, e, f):
-        out = out.unionByName(df)
-    return out
 
 
 # extension → (mime, ontology class) — FileTypeExtractorConfig.scala:40-67's
@@ -965,77 +329,3 @@ FILE_TYPE_MAP: dict[str, tuple[str, str]] = {
     "mp4": ("video/mp4", V.DBO_MOVING_IMAGE),
     "js": ("application/javascript", DBO + "Software"),
 }
-
-
-def extract_file_types(parsed: DataFrame) -> DataFrame:
-    """FileTypeExtractor (mappings/FileTypeExtractor.scala:40-226): File-ns
-    pages with a recognizable extension → dbo:fileExtension, dct:format
-    (mime), rdf:type dbo:File + the specific media class, dbo:fileURL to the
-    commons FilePath. Pages without an extension are skipped (the reference
-    logs and skips too)."""
-    ext = F.lower(F.regexp_extract(F.col("title"), r"\.([A-Za-z0-9]+)$", 1))
-    pages = parsed.filter((F.col("namespace") == FILE) & (ext != "")).select(
-        "lang", "subject", "title", ext.alias("ext"),
-        F.regexp_extract(F.col("subject"), r"File:(.*)$", 1).alias("enc"),
-    )
-    mime_pairs: list[Column] = []
-    cls_pairs: list[Column] = []
-    for e, (mime, cls) in FILE_TYPE_MAP.items():
-        mime_pairs += [F.lit(e), F.lit(mime)]
-        cls_pairs += [F.lit(e), F.lit(cls)]
-    mime = F.element_at(F.create_map(*mime_pairs), F.col("ext"))
-    cls = F.element_at(F.create_map(*cls_pairs), F.col("ext"))
-    url = F.concat(F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), F.col("enc"))
-    a = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DBO_FILE_EXTENSION,
-               F.col("ext"), datatype=XSD_STRING)
-    b = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DCT_FORMAT, mime,
-               datatype=XSD_STRING)
-    c = _quads(pages, V.FILE_TYPES, F.col("subject"), RDF_TYPE, F.lit(V.DBO_FILE))
-    d = _quads(pages, V.FILE_TYPES, F.col("subject"), RDF_TYPE, cls)
-    e_ = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DBO_FILE_URL, url)
-    out = a
-    for df in (b, c, d, e_):
-        out = out.unionByName(df)
-    return out
-
-
-ALL_EXTRACTORS["infobox_references"] = extract_infobox_references
-ALL_EXTRACTORS["images"] = extract_images
-ALL_EXTRACTORS["gallery_images"] = extract_gallery_images
-ALL_EXTRACTORS["file_types"] = extract_file_types
-
-
-def extract_fr_population(parsed: DataFrame) -> DataFrame:
-    """fr.PopulationExtractor (mappings/fr/PopulationExtractor.scala:27-55):
-    French Template-ns pages titled '…/<City>/…évolution population…'
-    carrying a '|pop=N' row → <City> dbo:populationTotal N (FIRST pop match
-    only — the reference returns on the first hit; all-digit 'city'
-    segments dropped; Discussion/Modèles pages excluded). Language-gated to
-    fr, so it costs nothing elsewhere."""
-    title = F.col("title")
-    city_raw = F.try_element_at(F.split(title, "/"), F.lit(2))
-    pop = F.regexp_extract(F.col("content"), r"pop=(\d+)", 1)
-    pages = parsed.filter(
-        (F.col("lang") == "fr")
-        & (F.col("namespace") == TEMPLATE)
-        & F.col("redirect_target").isNull()
-        & F.lower(title).contains("évolution population")
-        & ~title.contains("Discussion")
-        & ~title.contains("Modèles")
-        & F.col("content").contains("|pop=")
-    ).select(
-        "lang", city_raw.alias("city"), pop.alias("pop")
-    ).filter(
-        F.col("city").isNotNull() & (F.col("city") != "")
-        & ~F.col("city").rlike("^[0-9]*$") & (F.col("pop") != "")
-    )
-    from ..wikidata import wiki_encode_expr
-
-    subject = F.concat(
-        F.lit("http://fr.dbpedia.org/resource/"), wiki_encode_expr(F.col("city"))
-    )
-    return _quads(
-        pages, V.FRENCH_POPULATION, subject,
-        "http://dbpedia.org/ontology/populationTotal", F.col("pop"),
-        datatype="http://www.w3.org/2001/XMLSchema#nonNegativeInteger",
-    )

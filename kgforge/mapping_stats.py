@@ -82,7 +82,6 @@ def template_statistics(
     mapped_property_not_used (mapped in the rules, never set in any
     article — the InvalidTarget set), mapped_ratio, mapped_use_ratio
     (MappingStats.scala:44-53)."""
-    from .extractors.structural import _is_redirect
     from .mapping_engine import default_mappings
 
     mp = mappings or default_mappings()
@@ -105,7 +104,7 @@ def template_statistics(
     )
 
     ex = (
-        parsed.filter((F.col("namespace") == MAIN) & ~_is_redirect())
+        parsed.filter((F.col("namespace") == MAIN) & F.col("redirect_target").isNull())
         .select("subject", F.explode("templates").alias("t"))
         .filter(F.col("t.depth") == 0)
     )

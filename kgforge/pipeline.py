@@ -18,7 +18,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .extractors import fused_quads, run_extractors
+from .extractors import fused_quads
 from .linker import entity_link_quads
 from .mapping_engine import mapping_quads, table_mapping_quads, type_consistency
 from .parse import prepare
@@ -147,7 +147,6 @@ class Pipeline:
     def run(
         self,
         corpus: DataFrame,
-        extractors: list[str] | None = None,
         mappings=None,
         ontology=None,
         wikidata_corpus: DataFrame | None = None,
@@ -164,25 +163,22 @@ class Pipeline:
         checkpointed stage, the reference's separate wikidata-dump run
         folded into one resumable job."""
         parsed = self._stage("parsed", lambda: prepare(corpus))
-        if extractors is None:
-            # template-redirect map (Redirects.load analog): tiny driver-side
-            # dict shipped inside the UDF closures, so infobox/mapping
-            # dispatch sees through Template-ns redirects (resolveMap)
-            tred = template_redirect_map(
-                parsed, relevant_targets=dispatch_relevant_targets()
-            )
-            # fused single-pass generator (identical quad set; 1 scan not 21)
-            # + the mapping engine (instance types, mapping-based statements)
-            quads = self._stage(
-                "quads",
-                lambda: fused_quads(parsed, tred)
-                .unionByName(mapping_quads(parsed, template_redirects=tred,
-                                           mappings=mappings, ontology=ontology))
-                .unionByName(table_mapping_quads(parsed)),
-                ("dataset",),
-            )
-        else:
-            quads = self._stage("quads", lambda: run_extractors(parsed, extractors), ("dataset",))
+        # template-redirect map (Redirects.load analog): tiny driver-side
+        # dict shipped inside the UDF closures, so infobox/mapping
+        # dispatch sees through Template-ns redirects (resolveMap)
+        tred = template_redirect_map(
+            parsed, relevant_targets=dispatch_relevant_targets()
+        )
+        # the extractor suite in one pass + the mapping engine (instance
+        # types, mapping-based statements)
+        quads = self._stage(
+            "quads",
+            lambda: fused_quads(parsed, tred)
+            .unionByName(mapping_quads(parsed, template_redirects=tred,
+                                       mappings=mappings, ontology=ontology))
+            .unionByName(table_mapping_quads(parsed)),
+            ("dataset",),
+        )
         transitive = self._stage(
             "transitive_redirects", lambda: transitive_redirect_quads(quads), materialize=False
         )
@@ -213,13 +209,12 @@ def run_pipeline(
     spark: SparkSession,
     corpus: DataFrame,
     workdir: str | None = None,
-    extractors: list[str] | None = None,
     fmt: str = "parquet",
     mappings=None,
     ontology=None,
     wikidata_corpus: DataFrame | None = None,
 ) -> DataFrame:
     return Pipeline(spark, workdir, fmt=fmt).run(
-        corpus, extractors, mappings=mappings, ontology=ontology,
+        corpus, mappings=mappings, ontology=ontology,
         wikidata_corpus=wikidata_corpus,
     )

@@ -23,11 +23,7 @@ from collections import defaultdict
 from pyspark.sql import SparkSession
 
 from .extractors import fused_quads
-from .extractors.structural import (
-    extract_file_types,
-    extract_infobox_references,
-    extract_long_abstracts,
-)
+from .extractors.structural import extract_long_abstracts
 from .media import (
     commons_kml_quads,
     commons_resource_quads,
@@ -52,8 +48,7 @@ def extract_page(
     title: str = "Debug page",
     lang: str = "en",
     extra_pages: list[tuple[str, str]] | None = None,
-    include: tuple[str, ...] = ("fused", "nif", "long_abstracts", "media", "image_meta",
-                               "file_types", "infobox_references"),
+    include: tuple[str, ...] = ("fused", "nif", "long_abstracts", "media", "image_meta"),
 ) -> dict[str, list[dict]]:
     """Run every extractor group over one in-memory page and return its quads
     grouped by dataset.
@@ -85,10 +80,6 @@ def extract_page(
             parts.append(image_annotation_quads(parsed))
         if "image_meta" in include:
             parts.append(image_meta_quads(parsed))
-        if "file_types" in include:
-            parts.append(extract_file_types(parsed))
-        if "infobox_references" in include:
-            parts.append(extract_infobox_references(parsed))
         out: dict[str, list[dict]] = defaultdict(list)
         for df in parts:
             for row in df.collect():

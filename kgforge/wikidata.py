@@ -1406,14 +1406,17 @@ def wikidata_site_links_quads(links: DataFrame, languages: list[str]) -> DataFra
     )
     sts = F.array_sort(F.col("st"))
     idx = F.sequence(F.lit(1), F.size(F.col("sts")))
+    # an entry opens its site's run when it is the first entry or its site
+    # differs from the previous one; the CASE keeps element_at(sts, 0) from
+    # ever being formed (an index-0 element_at raises)
     firsts = F.transform(
         F.filter(
             idx,
-            lambda i: (i == 1)
-            | (
+            lambda i: F.when(
+                i > 1,
                 F.element_at(F.col("sts"), i)["site"]
-                != F.element_at(F.col("sts"), i - 1)["site"]
-            ),
+                != F.element_at(F.col("sts"), i - 1)["site"],
+            ).otherwise(F.lit(True)),
         ),
         lambda i: F.struct(
             F.element_at(F.col("sts"), i)["lang"].alias("lang"),

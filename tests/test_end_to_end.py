@@ -57,17 +57,3 @@ def test_content_sha_invariant(spark):
     bad = parsed.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
     assert bad == 0
 
-
-def test_fused_equals_branch_extractors(spark):
-    """The fused single-pass generator and the 21 branch extractors must
-    produce the identical distinct quad set."""
-    from kgforge import corpus as C
-    from kgforge.compare import quad_pr
-    from kgforge.extractors import fused_quads, run_extractors
-    from kgforge.parse import prepare
-
-    parsed = prepare(C.generate_corpus_df(spark, 150, partitions=4)).persist()
-    parsed.count()
-    pr = quad_pr(fused_quads(parsed), run_extractors(parsed))
-    parsed.unpersist()
-    assert pr.precision == 1.0 and pr.recall == 1.0, str(pr)

@@ -1,18 +1,10 @@
 """GalleryExtractor + FileTypeExtractor (mappings/GalleryExtractor.scala,
 mappings/FileTypeExtractor.scala): gallery harvesting at parse, extension →
-mime/class typing, and fused-path equivalence."""
-
-from pyspark.sql import functions as F
+mime/class typing, through the extractor suite."""
 
 from kgforge import wikitext
-from kgforge.extractors import fused_quads
-from kgforge.extractors.structural import (
-    extract_file_types,
-    extract_gallery_images,
-    run_extractors,
-)
+from kgforge.extractors import run_extractors
 from kgforge.parse import prepare
-from kgforge.vocab import FILE_TYPES, IMAGES
 
 DBO = "http://dbpedia.org/ontology/"
 
@@ -52,7 +44,7 @@ def _fixture(spark):
 def test_gallery_images_quads(spark):
     parsed = _fixture(spark)
     got = {(r.subject, r.predicate, r.value)
-           for r in extract_gallery_images(parsed).collect()}
+           for r in run_extractors(parsed, ["gallery_images"]).collect()}
     town = "http://dbpedia.org/resource/Town"
     url = "http://commons.wikimedia.org/wiki/Special:FilePath/Town_hall.jpg"
     assert (town, "http://xmlns.com/foaf/0.1/depiction", url) in got
@@ -64,7 +56,7 @@ def test_gallery_images_quads(spark):
 
 def test_file_types_quads(spark):
     parsed = _fixture(spark)
-    ft = extract_file_types(parsed).collect()
+    ft = run_extractors(parsed, ["file_types"]).collect()
     by_subj: dict[str, set] = {}
     for r in ft:
         by_subj.setdefault(r.subject, set()).add((r.predicate, r.value, r.datatype))
@@ -87,26 +79,13 @@ def test_file_types_quads(spark):
     assert not any("Noext" in s for s in by_subj)
 
 
-def test_fused_matches_branch_for_new_extractors(spark):
-    """The fused single-pass plan must emit EXACTLY the same gallery/file
-    quads as the branch extractors (the invariant every extractor pair keeps,
-    tests/test_end_to_end.py model)."""
-    parsed = _fixture(spark).persist()
-    parsed.count()
-    fused = fused_quads(parsed).filter(F.col("dataset").isin(IMAGES, FILE_TYPES))
-    branch = run_extractors(parsed, ["images", "gallery_images", "file_types"])
-    f = {tuple(r) for r in fused.collect()}
-    b = {tuple(r) for r in branch.collect()}
-    assert f == b and len(f) > 0
-
-
 def test_page_props_disambiguations(spark):
     """Disambiguations page_props path (Disambiguations.scala:86-113): a page
     disambig by page_props but WITHOUT the template still disambiguates; the
     template heuristic remains as fallback."""
     from kgforge.extractors.structural import (
-        extract_disambiguations,
         load_page_props_disambig,
+        with_page_props_disambig,
     )
 
     rows = [
@@ -128,7 +107,8 @@ def test_page_props_disambiguations(spark):
     lines = spark.createDataFrame([(sql_dump,)], "value string")
     ids = load_page_props_disambig(lines)
     assert {r.page_id for r in ids.collect()} == {mercury_id, 999999999}
-    got = {(r.subject, r.value) for r in extract_disambiguations(parsed, ids).collect()}
+    marked = with_page_props_disambig(parsed, ids)
+    got = {(r.subject, r.value) for r in run_extractors(marked, ["disambiguations"]).collect()}
     merc = "http://dbpedia.org/resource/Mercury"
     assert (merc, "http://dbpedia.org/resource/Mercury_Planet") in got
     assert (merc, "http://dbpedia.org/resource/Mercury_Metal") in got
@@ -136,7 +116,7 @@ def test_page_props_disambiguations(spark):
     assert any(s.endswith("/Venus") for s, _ in got)
     assert not any(s.endswith("/Mars") for s, _ in got)
     # without page_props, Mercury (no template) emits nothing
-    tpl_only = {(r.subject, r.value) for r in extract_disambiguations(parsed).collect()}
+    tpl_only = {(r.subject, r.value) for r in run_extractors(parsed, ["disambiguations"]).collect()}
     assert not any(s.endswith("/Mercury") for s, _ in tpl_only)
 
 

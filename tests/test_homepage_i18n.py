@@ -4,14 +4,14 @@ and language-scoped disambiguation title suffixes
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from kgforge.extractors.structural import extract_disambiguations, extract_homepages
+from kgforge.extractors import run_extractors
 from kgforge.parse import prepare
 from kgforge.schema import CORPUS_SCHEMA
 
 
 def _run(spark, rows):
     df = prepare(spark.createDataFrame(rows, CORPUS_SCHEMA))
-    return {r.subject.rsplit("/", 1)[-1]: r.value for r in extract_homepages(df).collect()}
+    return {r.subject.rsplit("/", 1)[-1]: r.value for r in run_extractors(df, ["homepages"]).collect()}
 
 
 def test_homepage_priority_and_branches(spark):
@@ -75,7 +75,7 @@ def test_disambig_suffix_language_scoped(spark):
     ]
     df = prepare(spark.createDataFrame(rows, CORPUS_SCHEMA))
     got = {(r.subject.rsplit("/", 1)[-1], r.value.rsplit("/", 1)[-1])
-           for r in extract_disambiguations(df).collect()}
+           for r in run_extractors(df, ["disambiguations"]).collect()}
     assert got == {
         ("Foo_(homonymie)", "Foo_(ville)"),
         ("Bar_(значения)", "Bar_(река)"),
@@ -83,28 +83,24 @@ def test_disambig_suffix_language_scoped(spark):
 
 
 def test_gender_language_tables(spark):
-    from kgforge.extractors.structural import extract_gender
-
     en = ("{{Infobox person\n| name = X\n}}\n"
           "He was born. He lived. His work. He died. Him too.\n")
     pt = ("{{Infobox person\n| name = Y\n}}\n"
           "Ela nasceu. Ela viveu. Dela obra. Ela morreu. Nela história.\n")
     rows = [("r", "p/X.wiki", "c", "en", en), ("r", "p/Y.wiki", "c", "pt", pt)]
     df = prepare(spark.createDataFrame(rows, CORPUS_SCHEMA))
-    got = {(r.subject.rsplit("/", 1)[-1], r.value) for r in extract_gender(df).collect()}
+    got = {(r.subject.rsplit("/", 1)[-1], r.value) for r in run_extractors(df, ["gender"]).collect()}
     # pt emits the LOCALIZED gender word (GenderExtractorConfig pt table)
     assert got == {("X", "male"), ("Y", "mulher")}
 
 
 def test_topical_concepts_cat_main_templates(spark):
-    from kgforge.extractors.structural import extract_topical_concepts
-
     rows = [
         ("r", "p/Category:Physics.wiki", "c", "en", "{{Cat main|Physics}}\nStuff.\n"),
         ("r", "p/Category:Physique.wiki", "c", "fr", "{{Article principal|Physique}}\n"),
     ]
     df = prepare(spark.createDataFrame(rows, CORPUS_SCHEMA))
-    got = {(r.subject.rsplit("/", 1)[-1], r.value) for r in extract_topical_concepts(df).collect()}
+    got = {(r.subject.rsplit("/", 1)[-1], r.value) for r in run_extractors(df, ["topical_concepts"]).collect()}
     assert got == {
         ("Category:Physics", "http://dbpedia.org/resource/Physics"),
         ("Category:Physique", "http://fr.dbpedia.org/resource/Physique"),

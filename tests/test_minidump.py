@@ -35,7 +35,7 @@ EXPECTED_DATASETS = {
     "external_links": 905,
     "genders": 2,
     "geo_coordinates": 36,
-    "homepages": 40,
+    "homepages": 53,
     "images": 13413,
     "infobox_properties": 8028,
     "infobox_property_definitions": 16056,
@@ -52,6 +52,7 @@ EXPECTED_DATASETS = {
     "revision_uris": 158,
     "short_abstracts": 154,
     "skos_categories": 8,
+    "topical_concepts": 1,
     "wikipedia_links": 628,
 }
 
@@ -213,8 +214,8 @@ def test_full_pipeline_over_real_pages(spark, tmp_path):
     corpus = spark.read.parquet(FIXTURE)
     wd = str(tmp_path / "wd")
     graph = run_pipeline(spark, corpus, workdir=wd).persist()
-    assert graph.count() == 106493
-    assert graph.select("dataset").distinct().count() == 37
+    assert graph.count() == 106507
+    assert graph.select("dataset").distinct().count() == 38
     # the two real redirect pages resolve transitively
     tr = {(r.subject.rsplit("/", 1)[-1], r.value.rsplit("/", 1)[-1])
           for r in graph.filter(F.col("dataset") == "transitive_redirects").collect()}
@@ -270,7 +271,7 @@ def test_production_config_pipeline(spark, tmp_path):
         spark, corpus, workdir=str(tmp_path / "wd"),
         mappings=dump_mappings_by_lang(), ontology=full_ontology(),
     ).persist()
-    assert graph.count() == 107893
+    assert graph.count() == 107907
     assert graph.filter(F.col("dataset") == "instance_types").count() == 76
     assert graph.filter(F.col("dataset") == "instance_types_transitive").count() == 168
     merkel = sorted(

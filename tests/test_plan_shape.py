@@ -1,0 +1,39 @@
+"""Physical-plan shape of the extractor suite and the parse gate, over the
+small real-page fixture: the whole suite is one narrow pass (no shuffle, one
+explode), a subset that skips the infobox segment carries no Python UDF, and
+the parse's namespace gate keeps its no_pushdown guard through the
+optimizer."""
+
+import re
+
+import pytest
+
+from kgforge.extractors import fused_quads, run_extractors
+from kgforge.parse import prepare
+
+FIXTURE = "tests/fixtures/minidump/corpus.parquet"
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.plan_shape
+def test_extractor_suite_plan_shape(spark):
+    parsed = prepare(spark.read.parquet(FIXTURE))
+    fused = _physical(fused_quads(parsed))
+    assert len(re.findall(r"\bExchange\b", fused)) == 0, fused
+    assert len(re.findall(r"\bGenerate\b", fused)) == 1, fused
+    assert "ArrowEvalPython" in fused  # the infobox segment reads `_ib`
+    labels = _physical(run_extractors(parsed, ["labels"]))
+    assert "ArrowEvalPython" not in labels, labels
+    assert len(re.findall(r"\bGenerate\b", labels)) == 1, labels
+
+
+def test_no_pushdown_guard_survives_optimizer(spark):
+    """caching.no_pushdown ORs an always-false non-deterministic arm onto the
+    namespace gate; if a Spark upgrade folds it away, the gate is pushed
+    below the fan-out again and this fails."""
+    plan = prepare(spark.read.parquet(FIXTURE))._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+    assert filters and all("OR (monotonically_increasing_id() < -1)" in ln for ln in filters), plan

@@ -86,3 +86,15 @@ def test_infobox_ignore_properties_language_scoped(spark):
     en = extract_page(spark, body, title="Porto", lang="en", include=("fused",))
     en_props = {q["predicate"].rsplit("/", 1)[-1] for q in en.get("infobox_properties", [])}
     assert "imagem" in en_props  # en fallback only ignores image/image_photo/map
+
+
+def test_extract_page_no_repeated_quads(spark):
+    """Every dataset list holds each quad once: no default group re-runs an
+    extractor the suite already covers (file types, infobox references)."""
+    out = extract_page(
+        spark, PAGE, title="Testville", extra_pages=[("File:Map.png", "A map.\n")]
+    )
+    assert len(out["file_types"]) == 5
+    for ds, quads in out.items():
+        keys = [tuple(sorted(q.items())) for q in quads]
+        assert len(keys) == len(set(keys)), ds

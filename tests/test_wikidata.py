@@ -834,3 +834,24 @@ def test_site_links_min_title_per_site_ignores_nulls(spark):
         "http://de.dbpedia.org/resource/Gamma",
         "http://wikidata.dbpedia.org/resource/Q2",
     }
+
+
+def test_site_links_two_links_same_site(spark):
+    """An item with two links to ONE site: the second entry of the site run
+    takes the CASE arm that compares it with its predecessor (never index
+    0), and only the least title represents the site."""
+    from kgforge.wikidata import wikidata_site_links_quads
+
+    links = spark.createDataFrame(
+        [(3, "enwiki", "Beta"), (3, "enwiki", "Alpha"), (3, "dewiki", "Gamma")],
+        "item_id INT, site STRING, title STRING",
+    )
+    rows = wikidata_site_links_quads(links, ["en", "de"]).collect()
+    subjects = {r.subject for r in rows}
+    # en Alpha + de Gamma + wikidata Q3 → 6 ordered pairs
+    assert len(rows) == 6
+    assert subjects == {
+        "http://dbpedia.org/resource/Alpha",
+        "http://de.dbpedia.org/resource/Gamma",
+        "http://wikidata.dbpedia.org/resource/Q3",
+    }

@@ -29,7 +29,7 @@ def main():
     from pyspark.sql import functions as F
 
     from kgforge import corpus as C
-    from kgforge.extractors import extract_labels, fused_quads
+    from kgforge.extractors import fused_quads, run_extractors
     from kgforge.linker import build_surface_forms, link_mentions
     from kgforge.mapping_engine import type_consistency
     from kgforge.parse import prepare
@@ -84,8 +84,9 @@ def main():
     results["consistency_adaptive"] = "AdaptiveSparkPlan" in p4
     print(f"== type_consistency adaptive: {results['consistency_adaptive']} ==")
 
-    # 5. nested-schema pruning: labels-only plan must not read `templates`
-    lbl = extract_labels(parsed)
+    # 5. nested-schema pruning: the labels-only subset plan must not read
+    # `templates`
+    lbl = run_extractors(parsed, ["labels"])
     p5 = plan_of(lbl)
     read_schema = re.search(r"ReadSchema: .*", p5)
     results["nested_pruning"] = read_schema is not None and "templates" not in read_schema.group(0)
@@ -151,9 +152,7 @@ def main():
           f"none in a Filter: {results['entity_parse_once_above_fanout']} ==")
 
     # 8. file types: map-only expression plan over the parse output
-    from kgforge.extractors.structural import extract_file_types
-
-    p8 = plan_of(extract_file_types(parsed_c))
+    p8 = plan_of(run_extractors(parsed_c, ["file_types"]))
     results["file_types_map_only"] = "Exchange" not in p8 and not any(
         s in p8 for s in ("BatchEvalPython", "ArrowEvalPython")
     )
