@@ -45,14 +45,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from kgforge.pipeline import _exists as _done  # Hadoop-FS _SUCCESS probe  # noqa: E402
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath, hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+from kgforge.pipeline import _fs, _write_atomic  # noqa: E402
 
 
 def _read_json(spark: SparkSession, path: str) -> dict:
@@ -60,11 +53,11 @@ def _read_json(spark: SparkSession, path: str) -> dict:
     local); unreadable/corrupt → {} so a crash mid-write never bricks
     the job (stage entries are re-derived from the checkpoints)."""
     try:
-        jvm, hpath, fs = _fs(spark, path)
+        hpath, fs = _fs(spark, path)
         if not fs.exists(hpath):
             return {}
         stream = fs.open(hpath)
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        text = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
         stream.close()
         return json.loads(text)
     except Exception:
@@ -72,15 +65,8 @@ def _read_json(spark: SparkSession, path: str) -> dict:
 
 
 def _write_json(spark: SparkSession, path: str, obj: dict) -> None:
-    """Atomic metrics write: create <path>.tmp then rename over."""
-    jvm, hpath, fs = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(obj, indent=1), "utf-8"))
-    out.close()
-    if fs.exists(hpath):
-        fs.delete(hpath, False)
-    fs.rename(tmp, hpath)
+    """Atomic metrics write (temp file, then rename over)."""
+    _write_atomic(spark, path, json.dumps(obj, indent=1).encode("utf-8"))
 
 
 def keep_signals(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,19 +4,48 @@ resume (the north rule's resumability requirement; analog of the reference's
 `.obj` caches Redirects.scala:110-139 and the extraction-complete marker,
 destinations/MarkerDestination.scala).
 
+Stage DAG::
+
+    parsed → quads ┬→ transitive_redirects ─┐
+                   ├→ type_consistency ─────┤
+                   └→ entity_links ─────────┼→ graph
+    wikidata_quads (optional second corpus) ┘
+
+The stages in the middle column (and ``wikidata_quads``) need nothing but
+``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
+fill the cluster alone, so with a workdir they run concurrently on a thread
+pool; ``graph`` starts once all of them have committed.
+
 Checkpoint contract: every stage writes parquet under
-``<workdir>/<stage>/`` plus a row in ``<workdir>/_lineage`` recording
-(stage, rows, wall_ms, content_sha_ok). A re-run skips any stage whose
+``<workdir>/<stage>/`` plus one row in ``<workdir>/_lineage`` recording
+(stage, rows, wall_ms, content_sha_ok, at). A re-run skips any stage whose
 output already exists (`_SUCCESS` present) — kill the job at any point and
-rerun to get byte-identical output.
+rerun to get byte-identical output. With parquet stages the lineage
+bookkeeping runs no Spark job of its own apart from the sha check:
+
+- ``rows`` is observed during the stage's own write (``DataFrame.observe``),
+  not counted afterwards (Iceberg stages still count the written table);
+- ``content_sha_ok`` is a read-back of the written parquet. It cannot ride on
+  the write: ``content_sha256`` is derived from ``content`` in the same
+  plan, so a pre-write check would only compare the plan with itself;
+- the lineage row is encoded on the driver (pyarrow) as a one-row parquet
+  file and written through the Hadoop FileSystem under a hidden temp name,
+  then renamed to ``_lineage/part-<stage>-<uuid>.parquet``. Unique names let
+  concurrent stages append without sharing a committer directory.
 """
 
 from __future__ import annotations
 
+import io
 import os
 import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .extractors import fused_quads
 from .linker import entity_link_quads
@@ -27,7 +56,14 @@ from .redirects import (
     template_redirect_map,
     transitive_redirect_quads,
 )
-from .schema import QUAD_SCHEMA
+
+LINEAGE_SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("rows", pa.int64()),
+    ("wall_ms", pa.int64()),
+    ("content_sha_ok", pa.bool_()),
+    ("at", pa.string()),
+])
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -41,19 +77,50 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop Path, its FileSystem): the same calls serve local, hdfs:// and
+    s3a:// paths."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath, hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+
+
 def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    hpath, fs = _fs(spark, path + "/_SUCCESS")
     return bool(fs.exists(hpath))
 
 
+def _write_atomic(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` through the Hadoop FileSystem: create a
+    hidden ``.<name>.tmp`` beside it, then rename it over ``path``, so a
+    reader sees the whole file or none. Spark's file listing skips names
+    starting with '.', so a temp file left by a crash is never read."""
+    hpath, fs = _fs(spark, path)
+    tmp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        hpath.getParent(), f".{hpath.getName()}.tmp"
+    )
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    if fs.exists(hpath):
+        fs.delete(hpath, False)
+    if not fs.rename(tmp, hpath):
+        raise OSError(f"could not rename {tmp} to {path}")
+
+
 def _lineage(spark: SparkSession, workdir: str, stage: str, rows: int, wall_ms: int, sha_ok: bool):
-    spark.createDataFrame(
-        [(stage, rows, wall_ms, sha_ok, time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))],
-        "stage string, rows long, wall_ms long, content_sha_ok boolean, at string",
-    ).write.mode("append").parquet(os.path.join(workdir, "_lineage"))
+    row = pa.table(
+        [[stage], [rows], [wall_ms], [sha_ok], [time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())]],
+        schema=LINEAGE_SCHEMA,
+    )
+    buf = io.BytesIO()
+    pq.write_table(row, buf)
+    _write_atomic(
+        spark,
+        os.path.join(workdir, "_lineage", f"part-{stage}-{uuid.uuid4().hex}.parquet"),
+        buf.getvalue(),
+    )
 
 
 class Pipeline:
@@ -113,36 +180,58 @@ class Pipeline:
             return df
         if self.fmt == "iceberg":
             table = f"{self.iceberg_namespace}.{self._run_slug}{name}"
-            if not self.spark.catalog.tableExists(table):
-                t0 = time.time()
-                df = compute()
-                w = df.writeTo(table).using("iceberg")
-                if partition_cols:
-                    w = w.partitionedBy(*[F.col(c) for c in partition_cols])
-                w.createOrReplace()
-                out = self.spark.table(table)
-                sha_ok = True
-                if "content_sha256" in out.columns:
-                    bad = out.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
-                    sha_ok = bad == 0
-                _lineage(self.spark, self.workdir, name, out.count(),
-                         int((time.time() - t0) * 1000), sha_ok)
-            return self.spark.table(table)
-        path = os.path.join(self.workdir, name)
-        if not _exists(self.spark, path):
-            t0 = time.time()
-            df = compute()
-            w = df.write.mode("overwrite")
+            done = self.spark.catalog.tableExists(table)
+            read = lambda: self.spark.table(table)  # noqa: E731
+        else:
+            path = os.path.join(self.workdir, name)
+            done = _exists(self.spark, path)
+            read = lambda: self.spark.read.parquet(path)  # noqa: E731
+        if done:
+            return read()
+        t0 = time.time()
+        if self.fmt == "iceberg":
+            w = compute().writeTo(table).using("iceberg")
+            if partition_cols:
+                w = w.partitionedBy(*[F.col(c) for c in partition_cols])
+            w.createOrReplace()
+            out = read()
+            # counted from the table: a replace-table-as-select runs its query
+            # in a nested execution, and an Observation has not been seen to
+            # fire on that path (obs.get would then block forever)
+            rows = out.count()
+        else:
+            obs = Observation()
+            w = compute().observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
             if partition_cols:
                 w = w.partitionBy(*partition_cols)
             w.parquet(path)
-            out = self.spark.read.parquet(path)
-            sha_ok = True
-            if "content_sha256" in out.columns:
-                bad = out.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
-                sha_ok = bad == 0
-            _lineage(self.spark, self.workdir, name, out.count(), int((time.time() - t0) * 1000), sha_ok)
-        return self.spark.read.parquet(path)
+            out = read()
+            rows = obs.get["rows"]
+        # checked on the written files, not observed during the write: the
+        # plan derives content_sha256 from content, so it cannot disagree
+        sha_ok = "content_sha256" not in out.columns or out.filter(
+            F.sha2(F.col("content"), 256) != F.col("content_sha256")
+        ).count() == 0
+        _lineage(self.spark, self.workdir, name, rows, int((time.time() - t0) * 1000), sha_ok)
+        return out
+
+    def _independent(self, *stages: tuple) -> list[DataFrame]:
+        """``_stage(*args)`` for each of ``stages``, results in the given
+        order. With a workdir the stages run concurrently; the first failure
+        (in that order) propagates once every stage has finished. Safe because
+        no two of the stages share a module-level cache: each has its own
+        one-slot persist (redirects._LAST_REDIRECT_EDGES,
+        linker._LAST_SF_SRC / _LAST_SF)."""
+        if self.workdir is None:
+            return [self._stage(*s) for s in stages]
+        with ThreadPoolExecutor(len(stages)) as ex:
+            # the caller's job group, description and tags apply in the pool
+            # threads; wrapped once per stage, so each thread gets its own copy
+            # of the local properties (Spark sets the SQL execution id in them)
+            futures = [
+                ex.submit(inheritable_thread_target(self.spark)(self._stage), *s) for s in stages
+            ]
+        return [f.result() for f in futures]
 
     def run(
         self,
@@ -179,19 +268,20 @@ class Pipeline:
             .unionByName(table_mapping_quads(parsed)),
             ("dataset",),
         )
-        transitive = self._stage(
-            "transitive_redirects", lambda: transitive_redirect_quads(quads), materialize=False
-        )
-        consistency = self._stage("type_consistency", lambda: type_consistency(quads), materialize=False)
-        links = self._stage("entity_links", lambda: entity_link_quads(parsed, quads), materialize=False)
-        all_quads = quads.unionByName(transitive).unionByName(consistency).unionByName(links)
+        stages = [
+            ("transitive_redirects", lambda: transitive_redirect_quads(quads), (), False),
+            ("type_consistency", lambda: type_consistency(quads), (), False),
+            ("entity_links", lambda: entity_link_quads(parsed, quads), (), False),
+        ]
         if wikidata_corpus is not None:
             from .wikidata import wikidata_all_quads
 
-            wd = self._stage(
-                "wikidata_quads", lambda: wikidata_all_quads(wikidata_corpus), ("dataset",)
+            stages.append(
+                ("wikidata_quads", lambda: wikidata_all_quads(wikidata_corpus), ("dataset",))
             )
-            all_quads = all_quads.unionByName(wd)
+        all_quads = quads
+        for df in self._independent(*stages):
+            all_quads = all_quads.unionByName(df)
         # DeduplicatingDestination analog: exact-duplicate quads dropped
         # (dropDuplicates does a partial aggregate before the shuffle)
         deduped = self._stage(

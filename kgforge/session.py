@@ -8,8 +8,43 @@ assumes. On a real cluster the same builder is used via spark-submit
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+_GIB = 1 << 30
+# free /dev/shm space below which local-mode shuffles go to disk instead.
+# Peak spark.local.dir use measured on a 4-core host: 2.6 MB for
+# jobs/extract.py over 1,000 synthetic pages, 34 MB for the whole test
+# suite; 1 GiB leaves room for far larger inputs.
+SHM_NEED = _GIB
+
+
+def host_fit(phys: int, shm_free: int) -> tuple[str, str]:
+    """Default ``(spark.driver.memory, spark.local.dir)`` for a host with
+    ``phys`` bytes of RAM and ``shm_free`` bytes free in /dev/shm. The heap
+    takes half the RAM, 1-16 GiB: in local mode the Python workers and the
+    OS page cache need the rest. Shuffles go to /dev/shm unless it is
+    missing or has less than ``SHM_NEED`` free; then to disk under the
+    system temp dir."""
+    heap = max(1, min(16, phys // 2 // _GIB))
+    local_dir = (
+        "/dev/shm/spark-local"
+        if shm_free >= SHM_NEED
+        else os.path.join(tempfile.gettempdir(), "spark-local")
+    )
+    return f"{heap}g", local_dir
+
+
+def _host_memory() -> tuple[int, int]:
+    """(physical RAM, free /dev/shm) in bytes."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        st = os.statvfs("/dev/shm")
+        shm_free = st.f_bavail * st.f_frsize
+    except OSError:
+        shm_free = 0
+    return phys, shm_free
 
 
 def build_session(
@@ -19,6 +54,7 @@ def build_session(
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = os.cpu_count() or 8
+    driver_mem, local_dir = host_fit(*_host_memory())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', cores)}]")
     b = (
         SparkSession.builder.master(master)
@@ -46,11 +82,12 @@ def build_session(
         # is losing user-code line numbers in error messages — acceptable
         # for a production engine; flip it back on when debugging.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # local-mode shuffles go through spark.local.dir; tmpfs keeps the
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", driver_mem))
+        # local-mode shuffles go through spark.local.dir (the SPARK_LOCAL_DIRS
+        # environment variable overrides it); tmpfs keeps the
         # shuffle-heavy stages (dedup, consistency join) CPU-bound instead of
         # disk-bound (a real cluster shuffles over NVMe/network per executor)
-        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
+        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", local_dir))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

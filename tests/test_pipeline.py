@@ -11,24 +11,124 @@ from kgforge.emit import read_ntriples, write_ntriples
 from kgforge.pipeline import run_pipeline
 
 
+STAGES = ("parsed", "quads", "transitive_redirects", "type_consistency", "entity_links", "graph")
+
+
 def test_resume_and_lineage(spark):
     wd = tempfile.mkdtemp(prefix="kgforge_pipe_")
     corpus = C.generate_corpus_df(spark, 100, partitions=2)
     g1 = run_pipeline(spark, corpus, workdir=wd)
     n1 = g1.count()
     lineage = spark.read.parquet(wd + "/_lineage")
-    stages = {r.stage for r in lineage.collect()}
-    assert {"parsed", "quads", "transitive_redirects", "type_consistency", "entity_links", "graph"} <= stages
-    assert lineage.filter(~F.col("content_sha_ok")).count() == 0
-    # resume: same workdir → all stages skipped, identical output
+    assert lineage.columns == ["stage", "rows", "wall_ms", "content_sha_ok", "at"]
+    rows = lineage.collect()
+    # one row per computed stage, its observed row count equal to what the
+    # stage's parquet reads back
+    assert sorted(r.stage for r in rows) == sorted(STAGES)
+    for r in rows:
+        assert r.rows == spark.read.parquet(f"{wd}/{r.stage}").count(), r.stage
+        assert r.content_sha_ok, r.stage
+    # a temp file a crashed lineage write left behind is hidden from readers
+    with open(f"{wd}/_lineage/.part-graph-crashed.parquet.tmp", "wb") as f:
+        f.write(b"PAR1 torn write")
+    # resume: same workdir → all stages skipped, identical output, no rows
     g2 = run_pipeline(spark, corpus, workdir=wd)
     assert g2.count() == n1
-    # partial resume: drop the final stage, rerun → recomputed identically
+    assert spark.read.parquet(wd + "/_lineage").count() == len(STAGES)
+    # partial resume: drop the final stage, rerun → recomputed identically,
+    # exactly one more lineage row (the graph's)
     import shutil
 
     shutil.rmtree(wd + "/graph")
     g3 = run_pipeline(spark, corpus, workdir=wd)
     assert g3.count() == n1
+    added = spark.read.parquet(wd + "/_lineage").groupBy("stage").count()
+    assert {r.stage: r["count"] for r in added.collect()} == {
+        st: 2 if st == "graph" else 1 for st in STAGES
+    }
+
+
+def test_lineage_rows_from_spark_and_driver_read_together(spark, tmp_path):
+    """A workdir whose _lineage holds rows Spark appended (older runs) and
+    rows the driver wrote reads as one table with the same schema."""
+    from kgforge.pipeline import _lineage
+
+    wd = str(tmp_path)
+    spark.createDataFrame(
+        [("parsed", 10, 5, True, "2026-01-01T00:00:00Z")],
+        "stage string, rows long, wall_ms long, content_sha_ok boolean, at string",
+    ).write.mode("append").parquet(wd + "/_lineage")
+    _lineage(spark, wd, "quads", 20, 7, True)
+    lineage = spark.read.parquet(wd + "/_lineage")
+    assert lineage.schema.simpleString() == (
+        "struct<stage:string,rows:bigint,wall_ms:bigint,content_sha_ok:boolean,at:string>"
+    )
+    assert sorted((r.stage, r.rows, r.wall_ms) for r in lineage.collect()) == [
+        ("parsed", 10, 5), ("quads", 20, 7)
+    ]
+
+
+def test_lineage_sha_check_reads_back_the_parquet(spark, monkeypatch):
+    """content_sha_ok is checked against the written stage: a corrupted
+    content_sha256 column is caught."""
+    import kgforge.pipeline as P
+
+    prepare = P.prepare
+    monkeypatch.setattr(
+        P, "prepare",
+        lambda c: prepare(c).withColumn("content_sha256", F.sha2(F.concat("content", F.lit("x")), 256)),
+    )
+    wd = tempfile.mkdtemp(prefix="kgforge_sha_")
+    run_pipeline(spark, C.generate_corpus_df(spark, 20, partitions=2), workdir=wd)
+    ok = {r.stage: r.content_sha_ok for r in spark.read.parquet(wd + "/_lineage").collect()}
+    assert ok.pop("parsed") is False
+    assert all(ok.values()), ok
+
+
+def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch):
+    """A derived stage that fails mid-write fails the run, commits nothing,
+    and does not stop the stages running beside it; the rerun computes the
+    failed stage and the graph only. Pool threads run under the caller's job
+    group."""
+    import pytest
+
+    import kgforge.pipeline as P
+    from pyspark.sql.functions import udf
+
+    corpus = C.generate_corpus_df(spark, 40, partitions=2)
+    clean = run_pipeline(spark, corpus, workdir=tempfile.mkdtemp(prefix="kgforge_ok_")).count()
+
+    @udf("string")
+    def boom(s):
+        raise ValueError("planted stage failure")
+
+    type_consistency = P.type_consistency
+    monkeypatch.setattr(
+        P, "type_consistency", lambda q: type_consistency(q).withColumn("subject", boom("subject"))
+    )
+    wd = tempfile.mkdtemp(prefix="kgforge_fail_")
+    with pytest.raises(Exception, match="planted stage failure"):
+        run_pipeline(spark, corpus, workdir=wd)
+    assert not os.path.exists(wd + "/type_consistency/_SUCCESS")
+    assert not os.path.exists(wd + "/graph")
+    for st in ("parsed", "quads", "transitive_redirects", "entity_links"):
+        assert os.path.exists(f"{wd}/{st}/_SUCCESS"), st
+    monkeypatch.undo()
+
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("kgforge-rerun", "rerun after a failed stage")
+    try:
+        assert run_pipeline(spark, corpus, workdir=wd).count() == clean
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("kgforge-rerun")
+    # no job of the rerun ran outside the group (older jobs may age out)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    stages = [r.stage for r in spark.read.parquet(wd + "/_lineage").collect()]
+    assert sorted(stages) == sorted(STAGES)
 
 
 def test_ntriples_round_trip(spark):

@@ -37,3 +37,15 @@ def test_no_pushdown_guard_survives_optimizer(spark):
     plan = prepare(spark.read.parquet(FIXTURE))._jdf.queryExecution().optimizedPlan().toString()
     filters = [ln for ln in plan.splitlines() if "Filter " in ln]
     assert filters and all("OR (monotonically_increasing_id() < -1)" in ln for ln in filters), plan
+
+
+@pytest.mark.plan_shape
+def test_explain_audit_probes(spark):
+    """tools/explain_audit.py's plan probes, in the suite's session: main()
+    returns 0 only when every probe holds."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("explain_audit", "tools/explain_audit.py")
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    assert audit.main() == 0
