@@ -9,6 +9,12 @@ the REAL wikitext parse → extract engine on a corpus deterministically
 derived from documents.parquet (kgforge/driver_corpus.py), with oracles that
 reconstruct the planted facts in pure SQL — so the parse/extract path itself
 is oracle-checked, not just the relational tail.
+
+The KG those queries read (``_engine_quads``) is ``kgforge.pipeline.Pipeline``
+run in memory — the same stage graph ``jobs/extract.py`` ships — plus the
+three per-page datasets only this contract serves (``nif_*``,
+``long_abstracts``, ``cited_facts``). The parse stage, with its shared
+``_ib`` infobox column, is cached under ``<sf_dir>::parsed``.
 """
 
 from __future__ import annotations
@@ -68,18 +74,12 @@ from kgforge.driver_corpus import (
     wikidata_lexeme_corpus_from_nations,
     wikidata_property_corpus_from_suppliers,
 )
-from kgforge.extractors import fused_quads
 from kgforge.extractors.structural import extract_long_abstracts
-from kgforge.linker import entity_link_quads
-from kgforge.mapping_engine import cited_facts_quads, mapping_quads, table_mapping_quads
+from kgforge.mapping_engine import cited_facts_quads
 from kgforge.nif import nif_quads
 from kgforge.parse import prepare
-from kgforge.redirects import (
-    dispatch_relevant_targets,
-    template_redirect_map,
-    transitive_closure,
-    transitive_redirect_quads,
-)
+from kgforge.pipeline import Pipeline
+from kgforge.redirects import transitive_closure
 from kgforge.sources import read_table
 
 # ---------------------------------------------------------------------------
@@ -90,84 +90,30 @@ _QUADS_CACHE: dict[str, DataFrame] = {}
 
 
 def _engine_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse+extract the derived corpus once per sf_dir (parse-once sharing —
-    the CompositeParseExtractor analog across driver queries)."""
+    """The KG of the derived corpus, built once per sf_dir: ``Pipeline.run``
+    in memory (the parse-once sharing of the CompositeParseExtractor analog
+    across driver queries) plus the three per-page datasets only the driver
+    contract serves. The parse stage (with ``_ib``) is kept under
+    ``<sf_dir>::parsed`` for the queries that read it."""
     if sf_dir not in _QUADS_CACHE:
-        corpus = corpus_from_documents(spark, sf_dir)
-        # r6: the template-redirect map only needs TEMPLATE-namespace pages,
-        # and prepare()'s namespace gate runs BEFORE the Python parse — so a
-        # template-only mini-parse resolves tred without materializing the
-        # full corpus first. The r5 flow persisted the whole parse output,
-        # probed it for tred, then re-persisted a second full copy with the
-        # `_ib` column (double cache + one extra full-cache scan); now the
-        # build caches ONE table with `_ib` computed in the same pass
-        # (guide §5: cache once, §2.4: remove a full materialization).
-        from kgforge.namespaces import TEMPLATE
-
-        tred = template_redirect_map(
-            prepare(corpus, namespaces=(TEMPLATE,)),
-            relevant_targets=dispatch_relevant_targets(),
-        )
-        # the infobox Arrow pass is the single most expensive per-page step;
-        # FOUR consumers need its output (fused, cited-facts, hybrid via the
-        # ::parsed cache, raw infobox). Compute it ONCE into a shared `_ib`
-        # column on the parse cache — every consumer detects and reuses it
-        # (extractors/fused.py), so the build pays one Python pass, not 2-4.
-        from kgforge.extractors.fused import make_infobox_props_udf
-
-        # localCheckpoint, not persist (r6): building the columnar cache
-        # for the fat nested parse rows cost ~3.9 s at sf1.0 vs ~0.4 s for
-        # the row-block checkpoint, with equal warm scan times (measured on
-        # the fused read) — same trade the quad cache below already makes.
-        parsed = prepare(corpus).withColumn(
-            "_ib", make_infobox_props_udf(tred)(F.col("lang"), F.col("templates"))
-        ).localCheckpoint()
-        _QUADS_CACHE[sf_dir + "::parsed"] = parsed
-        quads = fused_quads(parsed, tred).unionByName(
-            mapping_quads(parsed, template_redirects=tred)
-        ).unionByName(table_mapping_quads(parsed)).unionByName(
+        p = Pipeline(spark)
+        graph = p.run(corpus_from_documents(spark, sf_dir))
+        parsed = _QUADS_CACHE[sf_dir + "::parsed"] = p.parsed
+        # nif_* and long_abstracts rows are unique by construction (one per
+        # page per predicate) and carry the full plain text; cited_facts rows
+        # are unique including their context (one per citation), which the
+        # dedup key ignores. No stage reads them, so they join after the
+        # dedup, keeping the heaviest strings out of its shuffle. The branch
+        # is tiny (5 rows/page): repartition so the cached union does not
+        # inherit the parse stage's partition count per query scan.
+        per_page = (
             nif_quads(parsed)
-        ).unionByName(extract_long_abstracts(parsed)).unionByName(
-            cited_facts_quads(parsed, template_redirects=tred)
+            .unionByName(extract_long_abstracts(parsed))
+            .unionByName(cited_facts_quads(parsed, template_redirects=p.tred))
         )
-        # the 5-branch union over the parse cache multiplies its partition
-        # count x5 (160 cache partitions at local[32]); coalescing back to
-        # the core count keeps every downstream scan (the surface-form build
-        # alone reads this cache 3x) at ONE task wave instead of five.
-        # coalesce is a narrowing, not a shuffle — the 100 TB plan shape is
-        # unchanged, only the tiny-task scheduling overhead goes away.
-        # localCheckpoint (not persist): the closure probe, the linker's
-        # dict SELF-joins and the dedup all re-ANALYZE this union's full
-        # parse+extract logical plan otherwise — measured 4-6 s of pure
-        # driver-side Catalyst time per derived query at sf0.1. Truncating
-        # to a leaf makes every downstream analysis O(leaf); the 7 narrow
-        # string columns lose nothing to the row-block storage format.
-        # (Cluster caveat as in kgforge/caching.truncate_lineage: local
-        # checkpoint blocks die with an executor — the resumable path for
-        # real runs is Pipeline's parquet staging, not this driver cache.)
-        quads = quads.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint()
-        allq = (
-            quads.unionByName(transitive_redirect_quads(quads))
-            .unionByName(entity_link_quads(parsed, quads))
-        )
-        # DeduplicatingDestination semantics (same as Pipeline.run).
-        # nif_context / long_abstracts rows are unique BY CONSTRUCTION (one
-        # per page per predicate) and carry the full plain text — exempting
-        # them keeps the heaviest strings out of the dedup shuffle entirely.
-        # cited_facts rows are unique INCLUDING context (one row per
-        # citation); the context-blind dedup key would drop a second
-        # citation of the same fact
-        no_dedup = F.col("dataset").isin("nif_context", "long_abstracts", "cited_facts")
-        # localCheckpoint for the same analysis-cost reason as above: every
-        # kg_* driver query derives from this table, so its plan must be a
-        # leaf, not the whole engine DAG
-        _QUADS_CACHE[sf_dir] = allq.filter(~no_dedup).dropDuplicates(
-            ["dataset", "subject", "predicate", "value", "datatype", "language"]
-        ).unionByName(
-            # tiny branch (5 rows/page): repartition so the cached union does
-            # not inherit the parse stage's partition count per query scan
-            allq.filter(no_dedup).repartition(8)
-        ).localCheckpoint()
+        # localCheckpoint: every kg_* driver query derives from this table,
+        # so its plan must be a leaf, not the whole engine DAG
+        _QUADS_CACHE[sf_dir] = graph.unionByName(per_page.repartition(8)).localCheckpoint()
     return _QUADS_CACHE[sf_dir]
 
 
@@ -483,6 +429,7 @@ def _kg_person_page(spark, sf_dir):
     nation-derived person corpus: Persondata, Pnd, Gender (pronoun argmax),
     Geo (root {{coord}}), Citation, InterLanguageLinks + the Infobox person
     mapping (typing + foaf:name)."""
+    from kgforge.extractors import fused_quads
     from kgforge.mapping_engine import mapping_quads
 
     key = sf_dir + "::person"

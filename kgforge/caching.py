@@ -1,4 +1,5 @@
-"""Bounded persist lifecycle shared by repeat-call cache sites.
+"""Bounded persist lifecycle shared by repeat-call cache sites, and the
+bounded size gate (``fits``) shared by the driver-or-distributed decisions.
 
 ``one_slot_persist`` persists a DataFrame and releases the PREVIOUS call's
 table for the same slot — the idiom that fixed the round-2 linker leak
@@ -37,6 +38,14 @@ def no_pushdown(cond: Column) -> Column:
     ``parse.prepare`` does with its ``path contains ':'`` prefilter).
     tests/test_plan_shape.py pins that the guard survives the optimizer."""
     return cond | (F.monotonically_increasing_id() < F.lit(-1))
+
+
+def fits(df: DataFrame, cap: int) -> bool:
+    """True when ``df`` has at most ``cap`` rows. The probe stops counting at
+    ``cap + 1`` rows, so its cost is bounded by the cap, not by ``df``. A
+    ``cap`` of 0 or less never fits and runs no job: tests pass 0 to force
+    the distributed (or shuffle) path on small fixtures."""
+    return cap > 0 and df.limit(cap + 1).count() <= cap
 
 
 def one_slot_persist(slot: list, df: DataFrame) -> DataFrame:

@@ -235,10 +235,10 @@ def link_mentions(
     # persist the pruned dict so the size probe and the join share ONE
     # computation, but keep the storage bounded: each call releases the
     # previous call's dict (kgforge/caching.py — the round-2 leak fix)
-    from .caching import one_slot_persist
+    from .caching import fits, one_slot_persist
 
     sf = one_slot_persist(_LAST_SF, sf)
-    small = sf.limit(broadcast_max_rows + 1).count() <= broadcast_max_rows if broadcast_max_rows > 0 else False
+    small = fits(sf, broadcast_max_rows)
 
     cands = _candidate_mentions(parsed)
     if small:

@@ -6,15 +6,34 @@ destinations/MarkerDestination.scala).
 
 Stage DAG::
 
-    parsed → quads ┬→ transitive_redirects ─┐
-                   ├→ type_consistency ─────┤
-                   └→ entity_links ─────────┼→ graph
-    wikidata_quads (optional second corpus) ┘
+    tred probe → parsed (+_ib) → quads ┬→ transitive_redirects ─┐
+                                       ├→ type_consistency ─────┤
+                                       └→ entity_links ─────────┼→ graph
+                        wikidata_quads (optional second corpus) ┘
 
-The stages in the middle column (and ``wikidata_quads``) need nothing but
+The template-redirect map (``tred``) comes first, from a Template-namespace
+mini-parse of the corpus (no stage of its own: a small driver-side dict). The
+``parsed`` stage is the full parse plus the shared ``_ib`` column, the
+infobox cascade computed once with ``tred``; every infobox consumer reuses
+it, so each page crosses into Python for the infobox once. After ``run`` the
+instance holds ``parsed`` and ``tred`` for callers that build more on them.
+
+The three stages after ``quads`` (and ``wikidata_quads``) need nothing but
 ``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
 fill the cluster alone, so with a workdir they run concurrently on a thread
 pool; ``graph`` starts once all of them have committed.
+
+This is the one definition of the graph. ``jobs/extract.py`` runs it with a
+workdir; the driver contract (``__spark_entry__._engine_quads``) runs it in
+memory and appends three per-page datasets that only it serves
+(``nif_*``, ``long_abstracts``, ``cited_facts``). Those are unique by
+construction (``cited_facts`` including its citation context, which the dedup
+key ignores) and no stage reads them, so they are appended after the dedup.
+
+In memory (``workdir=None``) a stage is a ``localCheckpoint`` coalesced to the
+default parallelism, except the single-consumer ones (the three stages
+after ``quads``, and ``graph``), which stay lazy so the final action runs
+them in one job.
 
 Checkpoint contract: every stage writes parquet under
 ``<workdir>/<stage>/`` plus one row in ``<workdir>/_lineage`` recording
@@ -48,8 +67,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from .extractors import fused_quads
+from .extractors.fused import make_infobox_props_udf
 from .linker import entity_link_quads
 from .mapping_engine import mapping_quads, table_mapping_quads, type_consistency
+from .namespaces import TEMPLATE
 from .parse import prepare
 from .redirects import (
     dispatch_relevant_targets,
@@ -125,7 +146,8 @@ def _lineage(spark: SparkSession, workdir: str, stage: str, rows: int, wall_ms: 
 
 class Pipeline:
     """Stage-wise runner. With ``workdir=None`` everything stays in memory
-    (tests); with a workdir every stage checkpoints and the run is resumable.
+    (tests, the driver contract); with a workdir every stage checkpoints and
+    the run is resumable.
 
     ``fmt='iceberg'`` (SURVEY.md §1.3 target) writes each stage as an Iceberg
     table ``<iceberg_namespace>.<stage>`` via the writeTo V2 API
@@ -173,11 +195,22 @@ class Pipeline:
                 # single-consumer stage: stay lazy so the final action runs
                 # all of them in ONE job (independent subtrees in parallel)
                 return compute()
-            df = compute().persist()
-            # materialize BEFORE fan-out: multiple consumers scanning an
-            # unmaterialized cache race to compute the same partitions
-            df.count()
-            return df
+            # materialized BEFORE fan-out: several consumers scanning an
+            # unmaterialized plan race to compute the same partitions.
+            # localCheckpoint, not persist: building the columnar cache of
+            # the fat nested parse rows cost ~3.9 s at sf1.0 against ~0.4 s
+            # for the row-block checkpoint, with equal warm scan times. The
+            # checkpoint also truncates the lineage: the closure probe, the
+            # linker's dict self-joins and the dedup would otherwise each
+            # re-analyze the whole parse+extract plan (measured 4-6 s of
+            # driver-side Catalyst time per derived query at sf0.1); a leaf
+            # makes every downstream analysis O(leaf). The coalesce undoes the
+            # partition count that a union multiplies (the quads stage's
+            # three-branch union over the parse leaf), so every downstream
+            # scan is ONE task wave; it is a narrowing, not a shuffle.
+            # Checkpoint blocks die with their executor: the resumable path
+            # for cluster runs is a workdir (parquet or Iceberg stages).
+            return compute().coalesce(self.spark.sparkContext.defaultParallelism).localCheckpoint()
         if self.fmt == "iceberg":
             table = f"{self.iceberg_namespace}.{self._run_slug}{name}"
             done = self.spark.catalog.tableExists(table)
@@ -250,13 +283,30 @@ class Pipeline:
         column carries Wikidata entity JSON (items/properties/lexemes) —
         routed through the full wikidata extractor group as its own
         checkpointed stage, the reference's separate wikidata-dump run
-        folded into one resumable job."""
-        parsed = self._stage("parsed", lambda: prepare(corpus))
-        # template-redirect map (Redirects.load analog): tiny driver-side
-        # dict shipped inside the UDF closures, so infobox/mapping
-        # dispatch sees through Template-ns redirects (resolveMap)
-        tred = template_redirect_map(
-            parsed, relevant_targets=dispatch_relevant_targets()
+        folded into one resumable job.
+
+        Sets ``self.tred`` (the template-redirect map) and ``self.parsed``
+        (the parse stage with ``_ib``)."""
+        # template-redirect map (Redirects.load analog): a tiny driver-side
+        # dict shipped inside the UDF closures, so infobox/mapping dispatch
+        # sees through Template-ns redirects (resolveMap). It needs only
+        # Template-namespace pages, and prepare()'s namespace gate runs
+        # BEFORE the Python parse, so a template-only mini-parse resolves it
+        # ahead of the full parse, which can then carry ``_ib``
+        self.tred = tred = template_redirect_map(
+            prepare(corpus, namespaces=(TEMPLATE,)),
+            relevant_targets=dispatch_relevant_targets(),
+        )
+        # the infobox Arrow pass is the most expensive per-page step and
+        # several consumers read its output (the fused infobox segment,
+        # cited facts, the hybrid split, the mapping statistics): computed
+        # ONCE into the shared ``_ib`` column of the parse stage, which every
+        # consumer detects and reuses
+        self.parsed = parsed = self._stage(
+            "parsed",
+            lambda: prepare(corpus).withColumn(
+                "_ib", make_infobox_props_udf(tred)(F.col("lang"), F.col("templates"))
+            ),
         )
         # the extractor suite in one pass + the mapping engine (instance
         # types, mapping-based statements)

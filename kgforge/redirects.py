@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import vocab as V
+from .caching import fits
 
 MAX_DOUBLING_ROUNDS = 5  # resolves chains up to 2^5 = 32 hops
 # below this many edges the closure is computed driver-side (the reference's
@@ -81,8 +82,7 @@ def transitive_closure(
     # hybrid: small edge sets resolve on the driver (one job + broadcast),
     # matching the reference's in-memory map; large sets use log-round joins
     cutoff = DRIVER_CLOSURE_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    n_edges = edges.limit(cutoff + 1).count() if cutoff > 0 else 1
-    if n_edges <= cutoff:
+    if fits(edges, cutoff):
         pairs = [(r["src"], r["dst"]) for r in edges.select("src", "dst").collect()]
         resolved = _closure_in_driver(pairs)
         spark = edges.sparkSession
@@ -185,8 +185,7 @@ def template_redirect_map(
         (F.col("namespace") == TEMPLATE) & F.col("redirect_target").isNotNull()
     ).select("title", "redirect_target")
 
-    n = tmpl_redirs.limit(max_driver_rows + 1).count() if max_driver_rows > 0 else 1
-    if n <= max_driver_rows:
+    if fits(tmpl_redirs, max_driver_rows):
         edges: dict[str, str] = {}
         for r in tmpl_redirs.collect():
             src = normalize_title(r["title"] or "").lower()

@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.window import Window
 
 from . import vocab as V
-from .caching import no_pushdown, truncate_lineage
+from .caching import fits, no_pushdown, truncate_lineage
 from .namespaces import (
     FOAF,
     RDF_LANGSTRING,
@@ -1687,8 +1687,7 @@ def wikidata_subclass_mappings(
     from .redirects import DRIVER_CLOSURE_MAX_EDGES
 
     cutoff = DRIVER_CLOSURE_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    n_edges = edges.limit(cutoff + 1).count() if cutoff > 0 else 1
-    if n_edges <= cutoff:
+    if fits(edges, cutoff):
         pairs = [(r["sub"], r["sup"]) for r in edges.collect()]
         edges.unpersist()
         out = _subclass_in_driver(pairs, seed_rows)
@@ -1758,7 +1757,7 @@ def wikidata_subclass_mappings(
     )
     e2_cap = 3 * n_edges_exact
     e2 = e2_raw.persist()
-    use_doubling = e2.limit(e2_cap + 1).count() <= e2_cap
+    use_doubling = fits(e2, e2_cap)
     if use_doubling:
         step_src = e1.unionByName(e2.withColumn("w", F.lit(2)))
         # a third doubling level (w=4 via e2∘e2) was A/B-measured and

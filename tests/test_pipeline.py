@@ -74,9 +74,13 @@ def test_lineage_sha_check_reads_back_the_parquet(spark, monkeypatch):
     import kgforge.pipeline as P
 
     prepare = P.prepare
+    # the template-redirect probe calls prepare too (namespaces=...); the
+    # planted mismatch must still reach the parsed stage only
     monkeypatch.setattr(
         P, "prepare",
-        lambda c: prepare(c).withColumn("content_sha256", F.sha2(F.concat("content", F.lit("x")), 256)),
+        lambda c, **kw: prepare(c, **kw).withColumn(
+            "content_sha256", F.sha2(F.concat("content", F.lit("x")), 256)
+        ),
     )
     wd = tempfile.mkdtemp(prefix="kgforge_sha_")
     run_pipeline(spark, C.generate_corpus_df(spark, 20, partitions=2), workdir=wd)
@@ -129,6 +133,102 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch):
     assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
     stages = [r.stage for r in spark.read.parquet(wd + "/_lineage").collect()]
     assert sorted(stages) == sorted(STAGES)
+
+
+def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
+    """The driver contract's in-memory graph is the resumable job's graph:
+    without the three per-page datasets only the driver serves,
+    ``_engine_quads`` equals ``run_pipeline``'s parquet stages (``_ib``
+    round-tripped through parquet) as a distinct quad set."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from kgforge.driver_corpus import corpus_from_documents
+    from kgforge.pipeline import Pipeline
+    from kgforge.schema import QUAD_KEY
+
+    key = ["dataset", *QUAD_KEY]
+    rng = random.Random(5)
+    words = "alpha beta data join key scan sort spark table value".split()
+    texts = [" ".join(rng.choice(words) for _ in range(rng.randint(10, 40))) for _ in range(60)]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(60), pa.int64()),
+        "text": texts,
+        "lang": [rng.choice(("en", "de", "fr", "es")) for _ in texts],
+        "source": [f"src{rng.randrange(5)}" for _ in texts],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), str(tmp_path / "documents.parquet"))
+    sf_dir = str(tmp_path)
+
+    try:
+        engine = E._engine_quads(spark, sf_dir)
+        assert "_ib" in E._QUADS_CACHE[sf_dir + "::parsed"].columns
+        driver_only = F.col("dataset").startswith("nif_") | F.col("dataset").isin(
+            "long_abstracts", "cited_facts"
+        )
+        assert engine.filter(driver_only).count() > 0
+        cached = engine.filter(~driver_only).select(*key).distinct()
+
+        p = Pipeline(spark, str(tmp_path / "wd"))
+        job = p.run(corpus_from_documents(spark, sf_dir)).select(*key).distinct()
+        assert "_ib" in p.parsed.columns
+        assert job.count() == cached.count() > 0
+        assert job.exceptAll(cached).count() == 0
+    finally:
+        for k in (sf_dir, sf_dir + "::parsed"):
+            E._QUADS_CACHE.pop(k, None)
+
+
+_BOX = "{{Infobox person\n|name=Ann Example\n|birth_date={{%s|1950|1|2}}\n|occupation=Writer\n}}\n"
+
+
+def _tred_corpus(spark):
+    rows = [
+        ("r", "t/Template:Bd.wiki", "c", "en", "#REDIRECT [[Template:Birth date]]\n"),
+        ("r", "t/Alice.wiki", "c", "en", _BOX % "Birth date"),
+        ("r", "t/Bob.wiki", "c", "en", _BOX % "Bd"),
+    ]
+    return spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+
+
+def test_run_resolves_template_redirects_before_the_parse(spark):
+    """The template-only probe runs ahead of the parse, so the ``_ib``
+    column of the parsed stage already sees through Template-namespace
+    redirects: a date written through the ``{{Bd}}`` redirect parses like
+    ``{{Birth date}}``, and would not without the map."""
+    from kgforge.extractors.fused import make_infobox_props_udf
+    from kgforge.pipeline import Pipeline
+
+    p = Pipeline(spark)
+    p.run(_tred_corpus(spark))
+    assert p.tred == {"bd": "birth date"}
+    ib = {r.title: r._ib for r in p.parsed.select("title", "_ib").collect()}
+    assert ib["Bob"] == ib["Alice"]
+    assert any(e.prop_label == "birth date" for e in ib["Bob"])
+    bare = p.parsed.select(
+        "title", make_infobox_props_udf({})(F.col("lang"), F.col("templates")).alias("ib")
+    ).filter(F.col("title") == "Bob").first().ib
+    assert bare != ib["Bob"]
+
+
+def test_in_memory_stages_are_checkpointed_leaves(spark):
+    """Without a workdir a materialized stage is a local checkpoint coalesced
+    to the default parallelism (a leaf plan for every downstream analysis);
+    the single-consumer ``graph`` stage stays lazy."""
+    from kgforge.pipeline import Pipeline
+
+    p = Pipeline(spark)
+    graph = p.run(_tred_corpus(spark).repartition(12))
+    plan = p.parsed._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LogicalRDD" and plan.children().size() == 0
+    assert p.parsed.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert graph._jdf.queryExecution().analyzed().nodeName() == "Deduplicate"
+    assert graph.filter(F.col("dataset") == "labels").count() == 2
 
 
 def test_ntriples_round_trip(spark):

@@ -471,6 +471,26 @@ def test_subclass_phase_priority_top_level_beats_deep(spark, cutoff):
     assert got == {"Q7": "Agent", "Q8": "Agent"}
 
 
+@pytest.mark.parametrize("cutoff", [None, 0])
+def test_subclass_without_p279_edges_maps_nothing(spark, cutoff):
+    """No subclass edge at all: on the distributed path the 2-hop table's
+    size cap is 0, so the doubling step is skipped; both paths return an
+    empty mapping."""
+    from kgforge.wikidata import wikidata_subclass_mappings
+
+    quads = _p279(spark, [], extra_rows=[
+        ("http://wikidata.dbpedia.org/resource/Q4", "http://www.wikidata.org/entity/P31",
+         "http://wikidata.dbpedia.org/resource/Q1"),
+    ])
+    got = wikidata_subclass_mappings(
+        quads,
+        seed_map={1: OWL_THING_IRI, 2: "Agent"},
+        top_level_classes={"Agent"},
+        driver_max_edges=cutoff,
+    ).collect()
+    assert got == []
+
+
 def test_subclass_hop_then_name_tiebreak(spark):
     from kgforge.wikidata import wikidata_subclass_mappings
 
