@@ -429,15 +429,14 @@ def _kg_person_page(spark, sf_dir):
     nation-derived person corpus: Persondata, Pnd, Gender (pronoun argmax),
     Geo (root {{coord}}), Citation, InterLanguageLinks + the Infobox person
     mapping (typing + foaf:name)."""
-    from kgforge.extractors import fused_quads
-    from kgforge.mapping_engine import mapping_quads
+    from kgforge.extractors.fused import explode_quads, page_quads
 
     key = sf_dir + "::person"
     if key not in _QUADS_CACHE:
         parsed = prepare(person_corpus_from_nations(spark, sf_dir)).persist()
         parsed.count()
         _QUADS_CACHE[key] = (
-            fused_quads(parsed).unionByName(mapping_quads(parsed))
+            explode_quads(page_quads(parsed))
             .coalesce(spark.sparkContext.defaultParallelism)
             .dropDuplicates(["dataset", "subject", "predicate", "value", "datatype", "language"])
             .persist()

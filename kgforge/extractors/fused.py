@@ -9,15 +9,18 @@ parse, every ``Extractor[N].extract(page)`` over it) as one narrow pass:
 
     parsed (32 partitions) → select(quads_array) → explode → quad rows
 
+``page_quads`` adds the mapping cascades (``mapping_engine``) to the same
+select: the one per-page extraction every caller builds on.
+
 No shuffle at all until the downstream dedup — per-page choices (first
 homepage URL, first root coordinate) are array expressions or parse-time
 columns, never a groupBy. At 100 TB this is the difference between 1 pass +
 1 shuffle and one pass per extractor plus their aggregations.
 
-The only Python is one vectorized pandas UDF for the infobox typing cascade
-(array-in / array-out, so it adds no explode-multiplied rows to the Arrow
-channel); it is attached only when a selected segment reads its ``_ib``
-column. Golden P/R = 1.0 is pinned by tests/test_end_to_end.py.
+The segments' only Python is one vectorized pandas UDF for the infobox
+typing cascade (array-in / array-out, so it adds no explode-multiplied rows
+to the Arrow channel); it is attached only when a selected segment reads its
+``_ib`` column. Golden P/R = 1.0 is pinned by tests/test_end_to_end.py.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .. import vocab as V
 from ..dataparsers import _BR_SPLIT_RE, property_iri, property_label, type_value
+from ..mapping_engine import mapping_quad_array, table_mapping_quad_array
 from ..namespaces import (
     CATEGORY,
     DBO,
@@ -822,7 +826,7 @@ ALL_EXTRACTORS = tuple(SEGMENTS)
 
 
 def _quads_per_page(
-    parsed: DataFrame, names, template_redirects: dict[str, str] | None
+    parsed: DataFrame, names, template_redirects: dict[str, str] | None, cascades=()
 ) -> DataFrame:
     page = _Page(parsed.columns)
     # building the segment expression trees costs ~7,800 serial py4j round
@@ -842,12 +846,13 @@ def _quads_per_page(
         "page_id",
         F.col("lang").alias("language"),
         F.filter(
-            F.concat(*built), lambda q: q["subject"].isNotNull() & q["value"].isNotNull()
+            F.concat(*built, *cascades), lambda q: q["subject"].isNotNull() & q["value"].isNotNull()
         ).alias("quads"),
     )
 
 
-def _explode(per_page: DataFrame) -> DataFrame:
+def explode_quads(per_page: DataFrame) -> DataFrame:
+    """(language, quads array) rows → one flat quad row per element."""
     return per_page.select("language", F.explode("quads").alias("q")).select(
         "language",
         *(F.col("q." + c).alias(c)
@@ -855,25 +860,31 @@ def _explode(per_page: DataFrame) -> DataFrame:
     )
 
 
-def fused_quads_per_page(
-    parsed: DataFrame, template_redirects: dict[str, str] | None = None
+def page_quads(
+    parsed: DataFrame,
+    template_redirects: dict[str, str] | None = None,
+    mappings=None,
+    ontology=None,
 ) -> DataFrame:
-    """(page_id, language, quads array<quad struct>) — the whole suite with
-    the final explode withheld. This is the DBpedia-Live per-page cache
-    shape (live/.../publisher/DiffData.java:11-26 diffs the quad SET of one
-    page; the reference keeps that set in a JSON cache): kgforge/live.py
-    diffs two of these frames array-side per page, so an incremental
-    re-extraction never shuffles at quad granularity."""
-    return _quads_per_page(parsed, ALL_EXTRACTORS, template_redirects)
+    """(page_id, language, quads array<quad struct>): every segment plus the
+    mapping and table-mapping cascades (``mappings``, ``ontology`` as
+    ``Pipeline.run`` takes them) in ONE select. The batch job's ``quads``
+    stage explodes it; the DBpedia-Live store keeps it per page, as the
+    reference re-extracts a changed page with the dump run's extraction and
+    diffs its quad SET (live/.../publisher/DiffData.java:11-26)."""
+    cascades = (mapping_quad_array(mappings, ontology, template_redirects),
+                table_mapping_quad_array(ontology=ontology))
+    return _quads_per_page(parsed, ALL_EXTRACTORS, template_redirects, cascades)
 
 
 def fused_quads(parsed: DataFrame, template_redirects: dict[str, str] | None = None) -> DataFrame:
-    """Every extractor over the parsed pages: one quad row per emitted quad."""
-    return _explode(fused_quads_per_page(parsed, template_redirects))
+    """Every extractor segment over the parsed pages (no mapping cascades):
+    one quad row per emitted quad."""
+    return explode_quads(_quads_per_page(parsed, ALL_EXTRACTORS, template_redirects))
 
 
 def run_extractors(parsed: DataFrame, names: list[str] | None = None) -> DataFrame:
     """The named extractors only (all when ``names`` is None), in the same
     single explode. Callers persist/checkpoint ``parsed`` so the parse stage
     runs once."""
-    return _explode(_quads_per_page(parsed, names or ALL_EXTRACTORS, None))
+    return explode_quads(_quads_per_page(parsed, names or ALL_EXTRACTORS, None))

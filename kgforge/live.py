@@ -12,10 +12,12 @@ added/removed triples by diffing against a per-page cache:
 
 Spark-first re-expression: the cache is a DataFrame/table keyed on
 ``page_id`` whose value is the page's quads as ONE array column
-(``fused_quads_per_page``). Diffing a batch of changed pages is then an
-``array_except`` in both directions inside a single equi-join on page_id —
-work proportional to the changed batch, never to the graph, and no shuffle
-at quad granularity (the quad sets never leave their page row). At
+(``extractors.fused.page_quads``, the batch job's own per-page extraction:
+every extractor segment plus the mapping cascades). Diffing a batch of
+changed pages is then an ``array_except`` in both directions inside a single
+equi-join on page_id — work proportional to the changed batch, never to the
+graph, and no shuffle at quad granularity (the quad sets never leave their
+page row). At
 web scale the store is a page_id-bucketed table, so the batch join is a
 bucket-local hash join against a broadcast-sized batch.
 
@@ -25,13 +27,20 @@ A's copy of a triple could orphan page B's. Here the per-page store is the
 source of truth and the graph is a VIEW (``store_quads`` = explode +
 dedup-on-read), so re-insert bookkeeping is unnecessary by construction;
 the published added/removed channels match the reference's files.
+
+Second divergence: the store holds only per-page output. The batch job's
+graph-level datasets — ``transitive_redirects`` (redirect chains across
+pages), the type-consistency split of ``mappingbased_objects`` (it reads
+the object's types from the object's own page) and ``entity_links`` (a
+surface-form dictionary built from the whole graph) — depend on other
+pages, so they are not in the store and no live diff publishes them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .extractors.fused import fused_quads_per_page
+from .extractors.fused import explode_quads, page_quads
 
 QUAD_COLS = ["dataset", "subject", "predicate", "value", "context", "datatype"]
 
@@ -40,16 +49,14 @@ def page_store(parsed: DataFrame, template_redirects: dict[str, str] | None = No
     """Parsed corpus → the live cache: (page_id, language, quads array).
     Persist it partitioned/bucketed by page_id for O(batch) incremental
     updates; ``store_quads`` recovers the flat graph."""
-    return fused_quads_per_page(parsed, template_redirects)
+    return page_quads(parsed, template_redirects)
 
 
 def store_quads(store: DataFrame) -> DataFrame:
-    """The graph view of the store (same rows as ``fused_quads`` over the
-    same corpus). Dedup is the reader's concern, exactly like the
-    pipeline's DeduplicatingDestination stage."""
-    return store.select("language", F.explode("quads").alias("q")).select(
-        "language", *[F.col(f"q.{c}").alias(c) for c in QUAD_COLS]
-    )
+    """The graph view of the store (same rows as the batch job's ``quads``
+    stage over the same corpus). Dedup is the reader's concern, exactly like
+    the pipeline's DeduplicatingDestination stage."""
+    return explode_quads(store)
 
 
 def live_diff(store: DataFrame, batch_store: DataFrame) -> DataFrame:
@@ -155,9 +162,9 @@ def start_live_stream(
     files instead, which duplicates on redelivery — divergence in our
     favor, documented here."""
     from .parse import prepare
-    from .schema import CORPUS_SCHEMA
+    from .streaming import stream_corpus
 
-    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
+    stream = stream_corpus(spark, input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bstore = page_store(prepare(batch_df), template_redirects).persist()

@@ -29,7 +29,7 @@ import re
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import vocab as V
 from .dataparsers import (
@@ -315,7 +315,7 @@ _MAP_RESULT = T.ArrayType(
             # provenance for the Hybrid raw/mapped split: the template +
             # param key a fired rule consumed. Regular quads carry nulls;
             # '_consumed_pair' sentinel rows (value=None, so the normal
-            # mapping_quads path drops them) carry the pair
+            # quad path drops them) carry the pair
             T.StructField("src_template", T.StringType()),
             T.StructField("src_key", T.StringType()),
         ]
@@ -802,7 +802,7 @@ def make_mapping_udf(
                                       "predicate": ru.ontology_property,
                                       "value": value, "datatype": dt})
             for tpl_name, key in sorted(consumed):
-                # value=None ⇒ dropped by mapping_quads' isNotNull filter;
+                # value=None ⇒ dropped by _page_quad_array's value filter;
                 # read explicitly by hybrid_infobox_quads
                 quads.append({"dataset": CONSUMED_PAIR, "subject": None,
                               "predicate": None, "value": None, "datatype": None,
@@ -816,38 +816,55 @@ def make_mapping_udf(
     return mapping_udf
 
 
+def _page_quad_array(udf, gate, *inputs) -> Column:
+    """A cascade's per-page output as the fused suite's quad structs. Its
+    inputs are null where ``gate`` fails (no quads), so no row filter splits
+    the page's one select. Subject defaults to the page's; valueless rows
+    (the ``_consumed_pair`` sentinels) are dropped."""
+    out = udf(*(F.when(gate, c) for c in inputs))
+    return F.transform(
+        F.filter(out, lambda q: q["value"].isNotNull()),
+        lambda q: F.struct(
+            q["dataset"].alias("dataset"),
+            F.coalesce(q["subject"], F.col("subject")).alias("subject"),
+            q["predicate"].alias("predicate"),
+            q["value"].alias("value"),
+            F.lit(None).cast("string").alias("context"),
+            q["datatype"].alias("datatype"),
+        ),
+    )
+
+
+def mapping_quad_array(
+    mappings: dict[str, TemplateMapping] | None = None,
+    ontology: Ontology | None = None,
+    template_redirects: dict[str, str] | None = None,
+) -> Column:
+    """The mapping cascade as a per-page ``array<quad>`` column over the
+    parsed pages (Main namespace only). The page's Main-ns links ride along as a PRUNED (sf, title, iri) array so
+    the ObjectParser same-page surface-form fallback never shuffles — the
+    Arrow transfer carries only lowered anchor/title strings + IRIs."""
+    udf = make_mapping_udf(mappings, ontology, template_redirects)
+    return _page_quad_array(
+        udf, F.col("namespace") == MAIN,
+        F.col("lang"), F.col("subject"), F.col("templates"), _sf_links_col(),
+    )
+
+
+def _explode_array(parsed: DataFrame, quads: Column) -> DataFrame:
+    from .extractors.fused import explode_quads
+
+    return explode_quads(parsed.select(F.col("lang").alias("language"), quads.alias("quads")))
+
+
 def mapping_quads(
     parsed: DataFrame,
     mappings: dict[str, TemplateMapping] | None = None,
     ontology: Ontology | None = None,
     template_redirects: dict[str, str] | None = None,
 ) -> DataFrame:
-    """parsed pages → mapping-based quads (Main namespace only).
-
-    The page's Main-ns links ride along as a PRUNED (sf, title, iri) array so
-    the ObjectParser same-page surface-form fallback never shuffles — the
-    Arrow transfer carries only lowered anchor/title strings + IRIs."""
-    udf = make_mapping_udf(mappings, ontology, template_redirects)
-    sf_links = _sf_links_col()
-    rows = (
-        parsed.filter(F.col("namespace") == MAIN)
-        .select(
-            "lang",
-            "subject",
-            F.explode(
-                udf(F.col("lang"), F.col("subject"), F.col("templates"), sf_links)
-            ).alias("q"),
-        )
-    )
-    return rows.select(
-        F.col("lang").alias("language"),
-        F.col("q.dataset").alias("dataset"),
-        F.coalesce(F.col("q.subject"), F.col("subject")).alias("subject"),
-        F.col("q.predicate").alias("predicate"),
-        F.col("q.value").alias("value"),
-        F.lit(None).cast("string").alias("context"),
-        F.col("q.datatype").alias("datatype"),
-    ).filter(F.col("value").isNotNull())
+    """parsed pages → mapping-based quads (the array column, exploded)."""
+    return _explode_array(parsed, mapping_quad_array(mappings, ontology, template_redirects))
 
 
 def hybrid_infobox_quads(
@@ -1073,42 +1090,36 @@ def make_table_mapping_udf(rules: list[TableRule], ontology: Ontology | None = N
     return table_udf
 
 
-def table_mapping_quads(
-    parsed: DataFrame,
+def table_mapping_quad_array(
     rules: list[TableRule] | None = None,
     ontology: Ontology | None = None,
-) -> DataFrame:
-    """parsed pages → table-mapping quads (Main namespace only)."""
+) -> Column:
+    """The table-mapping cascade as a per-page ``array<quad>`` column over
+    the parsed pages (Main namespace only)."""
     if rules is None:
         from .mappings_loader import cached_table_mappings
 
         rules = cached_table_mappings("en")
     if not rules:
-        from .schema import QUAD_SCHEMA
+        from .extractors.fused import _QUAD_DDL
 
-        return parsed.sparkSession.createDataFrame([], QUAD_SCHEMA)
-    udf = make_table_mapping_udf(rules, ontology)
-    # JVM-side prefilter: pages without tables never pay the Python stage
-    # (the vast majority — an unconditional pass costs a full Arrow
-    # round-trip of the parsed cache per extra Python stage)
-    rows = parsed.filter(
-        (F.col("namespace") == MAIN) & (F.size("tables") > 0)
-    ).select(
-        "lang",
-        "subject",
-        F.explode(
-            udf(F.col("lang"), F.col("subject"), F.col("tables"), _sf_links_col())
-        ).alias("q"),
+        return F.expr(f"cast(array() as {_QUAD_DDL})")
+    # pages without tables send nulls: most pages have none, and their
+    # nested columns never cross into Python
+    return _page_quad_array(
+        make_table_mapping_udf(rules, ontology),
+        (F.col("namespace") == MAIN) & (F.size("tables") > 0),
+        F.col("lang"), F.col("subject"), F.col("tables"), _sf_links_col(),
     )
-    return rows.select(
-        F.col("lang").alias("language"),
-        F.col("q.dataset").alias("dataset"),
-        F.coalesce(F.col("q.subject"), F.col("subject")).alias("subject"),
-        F.col("q.predicate").alias("predicate"),
-        F.col("q.value").alias("value"),
-        F.lit(None).cast("string").alias("context"),
-        F.col("q.datatype").alias("datatype"),
-    ).filter(F.col("value").isNotNull())
+
+
+def table_mapping_quads(
+    parsed: DataFrame,
+    rules: list[TableRule] | None = None,
+    ontology: Ontology | None = None,
+) -> DataFrame:
+    """parsed pages → table-mapping quads (the array column, exploded)."""
+    return _explode_array(parsed, table_mapping_quad_array(rules, ontology))
 
 
 # ---------------------------------------------------------------------------

@@ -11,12 +11,16 @@ Stage DAG::
                                        └→ entity_links ─────────┼→ graph
                         wikidata_quads (optional second corpus) ┘
 
+``quads`` is ``extractors.fused.page_quads`` exploded: the per-page
+extraction the live store and single-page debug use too.
+
 The template-redirect map (``tred``) comes first, from a Template-namespace
 mini-parse of the corpus (no stage of its own: a small driver-side dict). The
 ``parsed`` stage is the full parse plus the shared ``_ib`` column, the
 infobox cascade computed once with ``tred``; every infobox consumer reuses
 it, so each page crosses into Python for the infobox once. After ``run`` the
-instance holds ``parsed`` and ``tred`` for callers that build more on them.
+instance holds ``tred``, ``parsed`` and ``quads`` for callers that build more
+on them.
 
 The three stages after ``quads`` (and ``wikidata_quads``) need nothing but
 ``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
@@ -66,10 +70,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
-from .extractors import fused_quads
-from .extractors.fused import make_infobox_props_udf
+from .extractors.fused import explode_quads, make_infobox_props_udf, page_quads
 from .linker import entity_link_quads
-from .mapping_engine import mapping_quads, table_mapping_quads, type_consistency
+from .mapping_engine import type_consistency
 from .namespaces import TEMPLATE
 from .parse import prepare
 from .redirects import (
@@ -205,9 +208,9 @@ class Pipeline:
             # re-analyze the whole parse+extract plan (measured 4-6 s of
             # driver-side Catalyst time per derived query at sf0.1); a leaf
             # makes every downstream analysis O(leaf). The coalesce undoes the
-            # partition count that a union multiplies (the quads stage's
-            # three-branch union over the parse leaf), so every downstream
-            # scan is ONE task wave; it is a narrowing, not a shuffle.
+            # input's partition count (the parse runs as many tasks as the
+            # corpus has splits), so every downstream scan is ONE task wave;
+            # it is a narrowing, not a shuffle.
             # Checkpoint blocks die with their executor: the resumable path
             # for cluster runs is a workdir (parquet or Iceberg stages).
             return compute().coalesce(self.spark.sparkContext.defaultParallelism).localCheckpoint()
@@ -285,8 +288,9 @@ class Pipeline:
         checkpointed stage, the reference's separate wikidata-dump run
         folded into one resumable job.
 
-        Sets ``self.tred`` (the template-redirect map) and ``self.parsed``
-        (the parse stage with ``_ib``)."""
+        Sets ``self.tred`` (the template-redirect map), ``self.parsed``
+        (the parse stage with ``_ib``) and ``self.quads`` (the quads
+        stage)."""
         # template-redirect map (Redirects.load analog): a tiny driver-side
         # dict shipped inside the UDF closures, so infobox/mapping dispatch
         # sees through Template-ns redirects (resolveMap). It needs only
@@ -308,14 +312,11 @@ class Pipeline:
                 "_ib", make_infobox_props_udf(tred)(F.col("lang"), F.col("templates"))
             ),
         )
-        # the extractor suite in one pass + the mapping engine (instance
-        # types, mapping-based statements)
-        quads = self._stage(
+        # the extractor suite and the mapping engine (instance types,
+        # mapping-based statements) in one pass
+        self.quads = quads = self._stage(
             "quads",
-            lambda: fused_quads(parsed, tred)
-            .unionByName(mapping_quads(parsed, template_redirects=tred,
-                                       mappings=mappings, ontology=ontology))
-            .unionByName(table_mapping_quads(parsed)),
+            lambda: explode_quads(page_quads(parsed, tred, mappings, ontology)),
             ("dataset",),
         )
         stages = [

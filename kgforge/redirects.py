@@ -170,13 +170,13 @@ def template_redirect_map(
 
     The resulting dict ships to executors inside the mapping/infobox UDF
     closures (SparkExtractionJob.scala:50-57 broadcast analog). The reference
-    holds the same map in memory per language; here a bounded
-    ``limit(N+1).count()`` probe guards the driver: under the cap the rows
-    are collected and resolved driver-side; above it the closure runs
-    DISTRIBUTED (pointer doubling) and only resolved pairs are collected —
-    pass ``relevant_targets`` (lowercased names the dispatch actually uses:
-    mapped templates + date templates) to bound the collect by *usage*
-    instead of corpus size."""
+    holds the same map in memory per language; here one bounded read of
+    ``N+1`` rows guards the driver: under the cap those rows are resolved
+    driver-side (one job); above it, or at a cap ≤ 0 (no read), the closure
+    runs DISTRIBUTED (pointer doubling) and only resolved pairs are
+    collected — pass ``relevant_targets`` (lowercased names the dispatch
+    actually uses: mapped templates + date templates) to bound the collect
+    by *usage* instead of corpus size."""
     from pyspark.sql import functions as F  # local: keep module import light
 
     from .namespaces import TEMPLATE, normalize_title, split_namespace
@@ -185,9 +185,12 @@ def template_redirect_map(
         (F.col("namespace") == TEMPLATE) & F.col("redirect_target").isNotNull()
     ).select("title", "redirect_target")
 
-    if fits(tmpl_redirs, max_driver_rows):
+    # toArrow, not collect(): collect() runs a limit as incremental takes
+    # (one job per wave of partitions), the Arrow path as ONE job
+    rows = tmpl_redirs.limit(max_driver_rows + 1).toArrow().to_pylist() if max_driver_rows > 0 else None
+    if rows is not None and len(rows) <= max_driver_rows:
         edges: dict[str, str] = {}
-        for r in tmpl_redirs.collect():
+        for r in rows:
             src = normalize_title(r["title"] or "").lower()
             ns, rest = split_namespace((r["redirect_target"] or "").strip())
             if ns != TEMPLATE:

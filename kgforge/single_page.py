@@ -22,7 +22,7 @@ from collections import defaultdict
 
 from pyspark.sql import SparkSession
 
-from .extractors import fused_quads
+from .extractors.fused import explode_quads, page_quads
 from .extractors.structural import extract_long_abstracts
 from .media import (
     commons_kml_quads,
@@ -51,7 +51,8 @@ def extract_page(
     include: tuple[str, ...] = ("fused", "nif", "long_abstracts", "media", "image_meta"),
 ) -> dict[str, list[dict]]:
     """Run every extractor group over one in-memory page and return its quads
-    grouped by dataset.
+    grouped by dataset. The ``"fused"`` group is the batch job's per-page
+    extraction (``page_quads``, default mapping rules and ontology).
 
     ``extra_pages`` are additional (title, content) pages parsed alongside —
     e.g. a ``File:…`` page so the non-free gate has something to harvest, or
@@ -67,7 +68,7 @@ def extract_page(
     try:
         parts = []
         if "fused" in include:
-            parts.append(fused_quads(parsed))
+            parts.append(explode_quads(page_quads(parsed)))
         if "nif" in include:
             parts.append(nif_quads(parsed))
         if "long_abstracts" in include:

@@ -1,12 +1,13 @@
-"""Structured Streaming ingestion (the reference's `live` module analog).
+"""Structured Streaming ingestion: the feeder stage of the reference's
+``live`` module.
 
 The reference's live extraction consumes Wikimedia EventStreams SSE with a
 priority queue (live/.../feeder/EventStreamsHelper.scala:22-40,
-queue/LiveQueuePriority.java:7-24) and re-extracts changed pages. The
-Spark-first counterpart: a streaming source of corpus rows → the SAME
-parse + fused-extract transformations (they are stateless, so they lift to
-Structured Streaming unchanged) → append sink partitioned by dataset, with
-exactly-once bookkeeping via the stream checkpoint.
+queue/LiveQueuePriority.java:7-24) and re-extracts changed pages. This
+module is the feeder half: a streaming source of corpus rows
+(``stream_corpus``), the SSE adapter, the newest-revision gate and ingest
+dedup. The re-extraction, diff and publish are ``live.start_live_stream``,
+which reads its input through ``stream_corpus``.
 
 ``stream_event_counts`` is the watermark/windowed-aggregation hook for late
 data (events table shape).
@@ -15,10 +16,7 @@ data (events table shape).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .extractors import fused_quads
-from .parse import prepare
 from .schema import CORPUS_SCHEMA
 
 
@@ -26,39 +24,6 @@ def stream_corpus(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-based streaming source of corpus rows (new parquet files under
     ``input_dir`` are picked up incrementally)."""
     return spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
-
-
-def stream_quads(corpus_stream: DataFrame) -> DataFrame:
-    """The batch pipeline's parse+extract, applied to a stream — both stages
-    are stateless row transforms, so the SAME code runs in either mode
-    (parse-once + fused generation)."""
-    return fused_quads(prepare(corpus_stream))
-
-
-def start_graph_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """corpus parquet stream → quad parquet partitioned by dataset.
-
-    Dedup note: exact-duplicate suppression across micro-batches would need
-    dropDuplicates with a watermark key; quads carry no event time, so the
-    batch dedup stage remains a compaction job over the sink (the reference
-    live module rewrites whole pages per change, same compaction model)."""
-    quads = stream_quads(stream_corpus(spark, input_dir))
-    writer = (
-        quads.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("dataset")
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_latest_revisions(

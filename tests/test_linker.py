@@ -4,21 +4,20 @@ a shuffle-join fallback that must produce identical links."""
 from pyspark.sql import functions as F
 
 from kgforge import corpus as C
-from kgforge.extractors import fused_quads
+from kgforge.extractors.fused import explode_quads, page_quads
 from kgforge.linker import (
     build_surface_forms,
     entity_link_quads,
     link_mentions,
     prune_surface_forms,
 )
-from kgforge.mapping_engine import mapping_quads
 from kgforge.parse import prepare
 
 
 def _parsed_quads(spark, n=150):
     parsed = prepare(C.generate_corpus_df(spark, n, partitions=4)).persist()
     parsed.count()
-    quads = fused_quads(parsed).unionByName(mapping_quads(parsed)).persist()
+    quads = explode_quads(page_quads(parsed)).persist()
     quads.count()
     return parsed, quads
 

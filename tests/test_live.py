@@ -2,16 +2,16 @@
 
 The hard property pinned here is the incremental-equals-full contract:
 applying a changed-pages batch to the page store must yield exactly the
-graph a full re-extraction of the new corpus snapshot produces — quad for
-quad. That is the invariant the reference's live cache + DiffData flow
-exists to maintain (live/.../publisher/DiffData.java, PageProcessor.java).
+batch job's ``quads`` stage over the new corpus snapshot — quad for quad,
+mapping output included. That is the invariant the reference's live cache +
+DiffData flow exists to maintain (live/.../publisher/DiffData.java,
+PageProcessor.java).
 """
 
 import pyspark.sql.functions as F
 import pytest
 
 from kgforge import corpus as C
-from kgforge.extractors import fused_quads
 from kgforge.live import (
     apply_batch,
     deletion_diff,
@@ -22,8 +22,10 @@ from kgforge.live import (
     write_diff,
 )
 from kgforge.parse import prepare
+from kgforge.pipeline import Pipeline
 
 N = 120
+MINIDUMP = "tests/fixtures/minidump/corpus.parquet"
 
 
 def _changed():
@@ -52,6 +54,19 @@ def _corpus_v2(spark):
     )
 
 
+def _job_quads(spark, corpus):
+    """The batch job's ``quads`` stage over ``corpus`` (run in memory) and
+    the template-redirect map the run resolved."""
+    p = Pipeline(spark)
+    p.run(corpus)
+    return p.quads, p.tred
+
+
+@pytest.fixture(scope="module")
+def job_quads_v2(spark):
+    return _job_quads(spark, _corpus_v2(spark))[0]
+
+
 @pytest.fixture(scope="module")
 def store1(spark):
     s = page_store(prepare(_corpus_v1(spark))).persist()
@@ -65,15 +80,22 @@ def _sym_diff_empty(a, b):
     assert b.exceptAll(a).count() == 0
 
 
-def test_store_view_equals_fused_quads(spark, store1):
-    _sym_diff_empty(store_quads(store1), fused_quads(prepare(_corpus_v1(spark))))
+@pytest.mark.parametrize("corpus", ["golden", "minidump"])
+def test_store_view_equals_job_quads_stage(spark, corpus):
+    """The live store and the batch job share one per-page extraction: the
+    store's graph view is the job's ``quads`` stage as a multiset, with the
+    mapping engine's output in both."""
+    df = _corpus_v1(spark) if corpus == "golden" else spark.read.parquet(MINIDUMP)
+    quads, tred = _job_quads(spark, df)
+    _sym_diff_empty(store_quads(page_store(prepare(df), tred)), quads)
+    assert quads.filter(F.col("dataset").startswith("mappingbased_")).count() > 0
 
 
-def test_incremental_equals_full_reextraction(spark, store1):
+def test_incremental_equals_full_reextraction(spark, store1, job_quads_v2):
     batch = _corpus_v2(spark).filter(_changed())
     assert 0 < batch.count() < N
     store2 = apply_batch(store1, page_store(prepare(batch)))
-    _sym_diff_empty(store_quads(store2), fused_quads(prepare(_corpus_v2(spark))))
+    _sym_diff_empty(store_quads(store2), job_quads_v2)
 
 
 def test_diff_channels(spark, store1):
@@ -149,11 +171,11 @@ def test_write_diff_publishes_ntriples(spark, store1, tmp_path):
     assert bad.count() == 0
 
 
-def test_live_stream_full_cycle(spark, tmp_path):
+def test_live_stream_full_cycle(spark, tmp_path, job_quads_v2):
     """Feeder → re-extract → diff → publish → store update, as one
     streaming job: after batch 1 (snapshot v1) and batch 2 (the changed
-    pages of snapshot v2), the latest store snapshot must equal a full
-    re-extraction of v2, and the publish dirs must carry both channels."""
+    pages of snapshot v2), the latest store snapshot must equal the job's
+    ``quads`` stage over v2, and the publish dirs must carry both channels."""
     import os
 
     from kgforge.live import _latest_version, start_live_stream
@@ -175,7 +197,7 @@ def test_live_stream_full_cycle(spark, tmp_path):
     ver = _latest_version(store_dir)
     assert ver is not None and ver >= 1
     final = spark.read.parquet(f"{store_dir}/v={ver}")
-    _sym_diff_empty(store_quads(final), fused_quads(prepare(_corpus_v2(spark))))
+    _sym_diff_empty(store_quads(final), job_quads_v2)
     # batch 2 published both channels (changed pages ⇒ adds AND removes)
     b2 = sorted(
         (d for d in os.listdir(pub_dir) if d.startswith("batch=")),

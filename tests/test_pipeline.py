@@ -231,6 +231,28 @@ def test_in_memory_stages_are_checkpointed_leaves(spark):
     assert graph.filter(F.col("dataset") == "labels").count() == 2
 
 
+def test_run_gives_its_ontology_to_the_table_cascade(spark):
+    """Both mapping cascades type with the run's ontology: a table row the
+    default rules map to dbo:Work gets the custom ontology's superclass of
+    Work as a transitive type."""
+    from kgforge.ontology import DBO, Ontology
+    from kgforge.pipeline import Pipeline
+
+    table = ("'''Stats''' by year.\n\n{| class=\"wikitable\"\n|-\n! Year !! Value\n"
+             "|-\n| 2001 || 100\n|}\n")
+    corpus = spark.createDataFrame(
+        [("r", "a/Stats.wiki", "c", "en", table)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    onto = Ontology(classes={DBO + "Work": DBO + "Opus", DBO + "Opus": None})
+    graph = Pipeline(spark).run(corpus, ontology=onto)
+    got = {r.value for r in graph.filter(
+        (F.col("dataset") == "instance_types_transitive")
+        & F.col("subject").endswith("/Stats__2001__1")
+    ).collect()}
+    assert DBO + "Opus" in got
+
+
 def test_ntriples_round_trip(spark):
     wd = tempfile.mkdtemp(prefix="kgforge_nt_")
     graph = run_pipeline(spark, C.generate_corpus_df(spark, 100, partitions=2)).cache()

@@ -1,6 +1,6 @@
 """Physical-plan shape of the extractor suite and the parse gate, over the
-small real-page fixture: the whole suite is one narrow pass (no shuffle, one
-explode), a subset that skips the infobox segment carries no Python UDF, and
+small real-page fixture: the whole suite, and the job's quads stage with the
+mapping cascades, is one narrow pass (no shuffle, one explode), a subset that skips the infobox segment carries no Python UDF, and
 the parse's namespace gate keeps its no_pushdown guard through the
 optimizer."""
 
@@ -28,6 +28,30 @@ def test_extractor_suite_plan_shape(spark):
     labels = _physical(run_extractors(parsed, ["labels"]))
     assert "ArrowEvalPython" not in labels, labels
     assert len(re.findall(r"\bGenerate\b", labels)) == 1, labels
+
+
+@pytest.mark.plan_shape
+def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
+    """The job's ``quads`` stage, as ``Pipeline.run`` builds it over the
+    checkpointed parse: the segments and both mapping cascades in one select,
+    so no Union, no Exchange and a single explode."""
+    from kgforge.pipeline import Pipeline
+
+    plans = {}
+    stage = Pipeline._stage
+
+    def capture(self, name, compute, *args, **kw):
+        if name == "quads":
+            plans[name] = _physical(compute())
+        return stage(self, name, compute, *args, **kw)
+
+    monkeypatch.setattr(Pipeline, "_stage", capture)
+    Pipeline(spark).run(spark.read.parquet(FIXTURE))
+    plan = plans["quads"]
+    assert not re.findall(r"\bUnion\b", plan), plan
+    assert not re.findall(r"\bExchange\b", plan), plan
+    assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+    assert "ArrowEvalPython" in plan  # the mapping cascades
 
 
 def test_no_pushdown_guard_survives_optimizer(spark):

@@ -135,3 +135,42 @@ def test_dispatch_relevant_targets_usage_bounds_collect(spark):
     mp = default_mappings()
     assert (resolve_mapping_names(mp, bounded).keys()
             == resolve_mapping_names(mp, full).keys())
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_template_redirect_probe_is_one_job(spark, monkeypatch):
+    """Under the cap the bounded read is the collect itself: one job, however
+    many partitions the input has. A cap of 0 goes distributed without a
+    probe job (the closure is stubbed to an empty frame, which collects
+    without a job, so any job counted would be a probe's)."""
+    from kgforge import redirects
+
+    parsed = _tmpl_parsed(spark).repartition(6).localCheckpoint()
+    got, jobs = _jobs_in_group(
+        spark, "kgforge-tred-probe", lambda: redirects.template_redirect_map(parsed))
+    assert got == {"a": "final target", "b": "final target", "c": "final target"}
+    assert jobs == 1
+
+    seen = []
+
+    def closure(edges, driver_max_edges):
+        seen.append(driver_max_edges)
+        return edges.limit(0)
+
+    monkeypatch.setattr(redirects, "transitive_closure", closure)
+    got, jobs = _jobs_in_group(
+        spark, "kgforge-tred-zero",
+        lambda: redirects.template_redirect_map(parsed, max_driver_rows=0))
+    assert seen == [0] and got == {} and jobs == 0

@@ -49,6 +49,16 @@ def test_extract_page_all_groups(spark):
     ]
 
 
+def test_extract_page_runs_the_mapping_engine(spark):
+    """The "fused" group is the batch job's per-page extraction, so a mapped
+    infobox (Infobox settlement, in the default rules) yields the mapping
+    engine's typing and mapping-based quads."""
+    out = extract_page(spark, PAGE, title="Testville", include=("fused",))
+    lits = {q["predicate"]: q["value"] for q in out["mappingbased_literals"]}
+    assert lits["http://dbpedia.org/ontology/populationTotal"] == "12345"
+    assert [q["value"] for q in out["instance_types"]] == ["http://dbpedia.org/ontology/Settlement"]
+
+
 def test_extract_page_with_side_pages(spark):
     # the non-free File page suppresses the image in image_meta
     out = extract_page(
