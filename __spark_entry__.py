@@ -14,7 +14,9 @@ The KG those queries read (``_engine_quads``) is ``kgforge.pipeline.Pipeline``
 run in memory — the same stage graph ``jobs/extract.py`` ships — plus the
 three per-page datasets only this contract serves (``nif_*``,
 ``long_abstracts``, ``cited_facts``). The parse stage, with its shared
-``_ib`` infobox column, is cached under ``<sf_dir>::parsed``.
+``_ib`` infobox column, is cached under ``<sf_dir>::parsed``. The
+``kg_wikidata_*`` queries read ``_wd_quads``: ``wikidata_all_quads``, the
+graph ``Pipeline.run(wikidata_corpus=)`` builds, over one mixed entity corpus.
 """
 
 from __future__ import annotations
@@ -122,81 +124,21 @@ def _ds(spark: SparkSession, sf_dir: str, dataset: str) -> DataFrame:
 
 
 def _wd_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wikidata-JSON path (labels/claims + R2R) over the customer-derived
-    entity corpus, parsed once per sf_dir."""
-    from kgforge.wikidata import (
-        parse_entities,
-        parse_lexemes,
-        wikidata_lexeme_quads,
-        wikidata_namespace_same_as,
-        wikidata_property_quads,
-        wikidata_quads,
-        wikidata_r2r_quads,
-        wikidata_reference_quads,
-        wikidata_reified_quads,
-    )
+    """The Wikidata graph of the entity corpora derived from sf_dir, built
+    once per sf_dir: the customer items, supplier properties and nation
+    lexemes as ONE mixed corpus, the wikidata-dump page population, through
+    ``wikidata_all_quads`` (the graph ``Pipeline.run(wikidata_corpus=)``
+    builds too)."""
+    from kgforge.wikidata import wikidata_all_quads
 
     key = sf_dir + "::wikidata"
     if key not in _QUADS_CACHE:
-        corpus = wikidata_corpus_from_customers(spark, sf_dir).unionByName(
-            wikidata_property_corpus_from_suppliers(spark, sf_dir)
+        corpus = (
+            wikidata_corpus_from_customers(spark, sf_dir)
+            .unionByName(wikidata_property_corpus_from_suppliers(spark, sf_dir))
+            .unionByName(wikidata_lexeme_corpus_from_nations(spark, sf_dir))
         )
-        # parse the JSON ONCE; every quad branch scans the columnar cache
-        # (item extractors gate on Q-ids, the property extractor on P-ids,
-        # the reference extractor spans both — the reference's namespace
-        # routing, resolved as filters over ONE shared parse)
-        # narrow the shared parse cache to the core count BEFORE the
-        # extractor fan-out: every branch internally unions 4-9 sub-scans
-        # of this cache, so its partition count multiplies into every
-        # branch's task count (64-partition cache × 9 r2r branches = 576
-        # near-empty tasks; 32 × 9 halves the scheduling overhead).
-        # localCheckpoint, not persist (r6): building the COLUMNAR cache
-        # for the deeply nested entity structs cost 6.4 s at sf1.0 vs
-        # 0.4 s for the row-block checkpoint, and every branch scan was
-        # measured FASTER off the row blocks (no columnar decode of
-        # nested maps/arrays) — guide §5 cache-format note; same
-        # executor-loss caveat as the engine build's driver cache.
-        cores = spark.sparkContext.defaultParallelism
-        ent = parse_entities(corpus).coalesce(cores).localCheckpoint()
-        lexemes = parse_lexemes(
-            wikidata_lexeme_corpus_from_nations(spark, sf_dir)
-        )
-        # each branch is lineage-truncated BEFORE the union: chaining seven
-        # unionByName calls re-analyzes the accumulated left side per call
-        # (quadratic in branch count over very large expression trees —
-        # measured 97 s vs 38 s for the same work at sf0.1 when the r5
-        # branches joined one lazy union). Eager localCheckpoint turns each
-        # branch into a leaf, so the union is seven leaf scans; the
-        # narrowing coalesce keeps every downstream query at one task wave.
-        # builders, not built DataFrames: CONSTRUCTING the seven branch
-        # expression trees is itself ~3-4 s of serial py4j round-trips on
-        # the driver (the r2r rule table and the lexeme skeleton alone are
-        # ~1 s each) — building inside the pool overlaps those round trips
-        # with each other and with the first checkpoint jobs (r6)
-        builders = [
-            lambda: wikidata_quads(corpus, entities=ent),
-            lambda: wikidata_r2r_quads(corpus, entities=ent),
-            lambda: wikidata_reified_quads(corpus, entities=ent),
-            lambda: wikidata_property_quads(corpus, entities=ent),
-            lambda: wikidata_reference_quads(corpus, entities=ent),
-            lambda: wikidata_namespace_same_as(corpus, entities=ent),
-            lambda: wikidata_lexeme_quads(corpus, lexemes=lexemes),
-        ]
-        # the seven branch checkpoints are independent Spark jobs, each too
-        # small to fill the cluster alone (stage waves of near-empty tasks)
-        # — submit them CONCURRENTLY so their stages interleave; ex.map
-        # preserves branch order, so the union layout stays deterministic.
-        # Measured at sf0.1: 7.8 s sequential → 3.7 s threaded (cold).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(builders)) as ex:
-            leaves = list(
-                ex.map(lambda b: b().coalesce(cores).localCheckpoint(), builders)
-            )
-        allq = leaves[0]
-        for b in leaves[1:]:
-            allq = allq.unionByName(b)
-        _QUADS_CACHE[key] = allq.coalesce(cores).localCheckpoint()
+        _QUADS_CACHE[key] = wikidata_all_quads(corpus).localCheckpoint()
     return _QUADS_CACHE[key]
 
 

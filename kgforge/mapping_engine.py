@@ -1146,6 +1146,9 @@ def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> Data
         .dropDuplicates(["r"])
     )
 
+    # the literals are cast to string element types: an ontology without
+    # object properties or disjoint classes gives empty ones, whose void
+    # element type cannot be indexed by a string column
     def class_map(get_target):
         pairs = []
         for piri, p in onto.properties.items():
@@ -1153,10 +1156,10 @@ def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> Data
                 tgt = get_target(p)
                 if tgt:
                     pairs.append((piri, tgt))
-        return pairs
+        return F.create_map(*[F.lit(x) for pair in pairs for x in pair]).cast("map<string,string>")
 
-    range_map = F.create_map(*[F.lit(x) for pair in class_map(lambda p: p.range) for x in pair])
-    domain_map = F.create_map(*[F.lit(x) for pair in class_map(lambda p: p.domain) for x in pair])
+    range_map = class_map(lambda p: p.range)
+    domain_map = class_map(lambda p: p.domain)
     # disjointness as a broadcast literal set of "classA|classB" keys
     dis_keys = set()
     for a in onto.classes:
@@ -1166,8 +1169,8 @@ def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> Data
     # subtype: "sub|super" keys
     sub_keys = {f"{c}|{s}" for c in onto.classes for s in onto.closure(c)}
 
-    dis_arr = F.array(*[F.lit(k) for k in sorted(dis_keys)]) if dis_keys else F.array(F.lit(""))
-    sub_arr = F.array(*[F.lit(k) for k in sorted(sub_keys)])
+    dis_arr = F.array(*[F.lit(k) for k in sorted(dis_keys)]).cast("array<string>")
+    sub_arr = F.array(*[F.lit(k) for k in sorted(sub_keys)]).cast("array<string>")
 
     j = (
         objects.join(types, objects["value"] == types["r"], "left")

@@ -12,7 +12,10 @@ Stage DAG::
                         wikidata_quads (optional second corpus) ┘
 
 ``quads`` is ``extractors.fused.page_quads`` exploded: the per-page
-extraction the live store and single-page debug use too.
+extraction the live store and single-page debug use too. ``wikidata_quads``
+is ``wikidata.wikidata_all_quads``, the graph the driver contract's
+``_wd_quads`` builds: a checkpointed entity-parse leaf, then seven
+extractor branches checkpointed concurrently, unioned as leaves.
 
 The template-redirect map (``tred``) comes first, from a Template-namespace
 mini-parse of the corpus (no stage of its own: a small driver-side dict). The
@@ -24,8 +27,9 @@ on them.
 
 The three stages after ``quads`` (and ``wikidata_quads``) need nothing but
 ``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
-fill the cluster alone, so with a workdir they run concurrently on a thread
-pool; ``graph`` starts once all of them have committed.
+fill the cluster alone, so with a workdir they run concurrently
+(``session.concurrently``, under the caller's job group); ``graph`` starts
+once all of them have committed.
 
 This is the one definition of the graph. ``jobs/extract.py`` runs it with a
 workdir; the driver contract (``__spark_entry__._engine_quads``) runs it in
@@ -63,12 +67,10 @@ import io
 import os
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.util import inheritable_thread_target
 
 from .extractors.fused import explode_quads, make_infobox_props_udf, page_quads
 from .linker import entity_link_quads
@@ -80,6 +82,7 @@ from .redirects import (
     template_redirect_map,
     transitive_redirect_quads,
 )
+from .session import concurrently
 
 LINEAGE_SCHEMA = pa.schema([
     ("stage", pa.string()),
@@ -253,21 +256,13 @@ class Pipeline:
 
     def _independent(self, *stages: tuple) -> list[DataFrame]:
         """``_stage(*args)`` for each of ``stages``, results in the given
-        order. With a workdir the stages run concurrently; the first failure
-        (in that order) propagates once every stage has finished. Safe because
-        no two of the stages share a module-level cache: each has its own
-        one-slot persist (redirects._LAST_REDIRECT_EDGES,
-        linker._LAST_SF_SRC / _LAST_SF)."""
+        order. With a workdir the stages run concurrently under the caller's
+        job group (``session.concurrently``). Safe because no two of the
+        stages share a module-level cache: each has its own one-slot persist
+        (redirects._LAST_REDIRECT_EDGES, linker._LAST_SF_SRC / _LAST_SF)."""
         if self.workdir is None:
             return [self._stage(*s) for s in stages]
-        with ThreadPoolExecutor(len(stages)) as ex:
-            # the caller's job group, description and tags apply in the pool
-            # threads; wrapped once per stage, so each thread gets its own copy
-            # of the local properties (Spark sets the SQL execution id in them)
-            futures = [
-                ex.submit(inheritable_thread_target(self.spark)(self._stage), *s) for s in stages
-            ]
-        return [f.result() for f in futures]
+        return concurrently(self.spark, [lambda s=s: self._stage(*s) for s in stages])
 
     def run(
         self,
@@ -321,7 +316,7 @@ class Pipeline:
         )
         stages = [
             ("transitive_redirects", lambda: transitive_redirect_quads(quads), (), False),
-            ("type_consistency", lambda: type_consistency(quads), (), False),
+            ("type_consistency", lambda: type_consistency(quads, ontology), (), False),
             ("entity_links", lambda: entity_link_quads(parsed, quads), (), False),
         ]
         if wikidata_corpus is not None:

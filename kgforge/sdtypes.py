@@ -54,6 +54,7 @@ from typing import Iterable, Mapping
 from pyspark.sql import DataFrame, functions as F
 
 from .ontology import OWL_THING, Ontology
+from .session import concurrently
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 DBO_PREFIX = "http://dbpedia.org/ontology/"
@@ -228,8 +229,6 @@ def sd_type_scores(
     # oracle's always has — absorbed by the round-6 output contract). This
     # collapses a 4-deep join/agg chain + a pandas-UDF stage + three
     # broadcast-build jobs into two literal broadcast tables.
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = tf.sparkSession
     # resourceCount counts every resource BEFORE property exceptions are
     # removed (exceptions are dropped from predStatistics only,
@@ -238,15 +237,14 @@ def sd_type_scores(
     # BroadcastNestedLoopJoin (measured).  r6: submitted CONCURRENTLY with
     # the three stats collects (it was a serial job before them); the
     # cache's per-partition locks make the first materialization race-safe.
-    with ThreadPoolExecutor(4) as ex:
-        f_n = ex.submit(tf_raw.select("resource").distinct().count)
-        f_counts = ex.submit(counts.collect)
-        f_tsizes = ex.submit(type_sizes.collect)
-        f_ptot = ex.submit(pred_tot.collect)
-        n_resources = f_n.result()
-        counts_rows = f_counts.result()
-        t_size = {r["type"]: r["t_size"] for r in f_tsizes.result()}
-        p_total = {(r["predicate"], r["dir"]): r["pred_total"] for r in f_ptot.result()}
+    n_resources, counts_rows, tsizes_rows, ptot_rows = concurrently(spark, [
+        tf_raw.select("resource").distinct().count,
+        counts.collect,
+        type_sizes.collect,
+        pred_tot.collect,
+    ])
+    t_size = {r["type"]: r["t_size"] for r in tsizes_rows}
+    p_total = {(r["predicate"], r["dir"]): r["pred_total"] for r in ptot_rows}
     if n_resources <= 0:
         raise ValueError("no resources found!")  # SdTypeCreation.scala:242
 

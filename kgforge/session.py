@@ -9,8 +9,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 _GIB = 1 << 30
 # free /dev/shm space below which local-mode shuffles go to disk instead.
@@ -34,6 +40,20 @@ def host_fit(phys: int, shm_free: int) -> tuple[str, str]:
         else os.path.join(tempfile.gettempdir(), "spark-local")
     )
     return f"{heap}g", local_dir
+
+
+def concurrently(spark: SparkSession, fns: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each zero-argument function in ``fns`` on its own thread; return
+    their results in the given order. Each thread runs under the caller's
+    job group, description and tags, so the Spark jobs it starts are
+    grouped, described and cancelled with the caller's (a plain pool thread
+    carries none of them). Each function is wrapped separately, so each
+    thread gets its own copy of the local properties (Spark writes the SQL
+    execution id into them). The first failure, in the given order, is
+    re-raised once every function has finished."""
+    with ThreadPoolExecutor(len(fns)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    return [f.result() for f in futures]
 
 
 def _host_memory() -> tuple[int, int]:

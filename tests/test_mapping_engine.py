@@ -61,6 +61,23 @@ def test_type_consistency_routing(spark):
     assert ("o1", "mappingbased_objects") in out  # the successor quad
 
 
+def test_type_consistency_with_an_empty_ontology(spark):
+    """An ontology with no classes or object properties declares no range,
+    domain or disjointness, so the split keeps every object quad."""
+    from kgforge.ontology import Ontology
+
+    quads = spark.createDataFrame(
+        [
+            ("en", "instance_types", "o1", "t", DBO + "Settlement", None, None),
+            ("en", "mappingbased_objects_uncleaned", "s1", DBO + "leader", "o1", None, None),
+        ],
+        "language string, dataset string, subject string, predicate string, "
+        "value string, context string, datatype string",
+    )
+    got = [r.dataset for r in type_consistency(quads, Ontology()).collect()]
+    assert got == ["mappingbased_objects"]
+
+
 def test_template_redirect_dispatch(spark):
     """resolveMap: an infobox reached through a Template-namespace redirect
     still dispatches to the mapped rules, and a date template reached through

@@ -104,12 +104,8 @@ L536_GOLDEN = [
 
 @pytest.fixture(scope="module")
 def wd_quads(spark):
-    df = spark.read.parquet(FIXTURE)
-    ent = W.parse_entities(df).persist()
-    ent.count()
-    allq = W.wikidata_all_quads(df, entities=ent).persist()
+    allq = W.wikidata_all_quads(spark.read.parquet(FIXTURE)).persist()
     allq.count()
-    ent.unpersist()
     yield allq
     allq.unpersist()
 

@@ -3,6 +3,7 @@
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgforge import corpus as C
@@ -89,13 +90,11 @@ def test_lineage_sha_check_reads_back_the_parquet(spark, monkeypatch):
     assert all(ok.values()), ok
 
 
-def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch):
+def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch, job_group):
     """A derived stage that fails mid-write fails the run, commits nothing,
     and does not stop the stages running beside it; the rerun computes the
     failed stage and the graph only. Pool threads run under the caller's job
     group."""
-    import pytest
-
     import kgforge.pipeline as P
     from pyspark.sql.functions import udf
 
@@ -108,7 +107,9 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch):
 
     type_consistency = P.type_consistency
     monkeypatch.setattr(
-        P, "type_consistency", lambda q: type_consistency(q).withColumn("subject", boom("subject"))
+        P,
+        "type_consistency",
+        lambda *a: type_consistency(*a).withColumn("subject", boom("subject")),
     )
     wd = tempfile.mkdtemp(prefix="kgforge_fail_")
     with pytest.raises(Exception, match="planted stage failure"):
@@ -119,18 +120,9 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch):
         assert os.path.exists(f"{wd}/{st}/_SUCCESS"), st
     monkeypatch.undo()
 
-    sc = spark.sparkContext
-    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
-    sc.setJobGroup("kgforge-rerun", "rerun after a failed stage")
-    try:
+    with job_group("kgforge-rerun") as jobs:
         assert run_pipeline(spark, corpus, workdir=wd).count() == clean
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getJobIdsForGroup("kgforge-rerun")
-    # no job of the rerun ran outside the group (older jobs may age out)
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    assert jobs.grouped and not jobs.outside
     stages = [r.stage for r in spark.read.parquet(wd + "/_lineage").collect()]
     assert sorted(stages) == sorted(STAGES)
 
@@ -253,6 +245,103 @@ def test_run_gives_its_ontology_to_the_table_cascade(spark):
     assert DBO + "Opus" in got
 
 
+def test_run_gives_its_ontology_to_the_type_consistency_split(spark):
+    """The type-consistency split reads the run's ontology: a settlement's
+    leader typed Person fits the default range of dbo:leader (Person), but
+    a custom ontology that narrows the range to Place (disjoint with Agent)
+    moves the quad to ``mappingbased_objects_disjoint_range``."""
+    import dataclasses
+
+    from kgforge.ontology import DBO, default_ontology
+    from kgforge.pipeline import Pipeline
+
+    corpus = spark.createDataFrame(
+        [
+            ("r", "a/Springfield.wiki", "c", "en",
+             "{{Infobox settlement\n|name=Springfield\n|leader_name=[[Alice]]\n}}\n"),
+            ("r", "a/Alice.wiki", "c", "en", "{{Infobox person\n|name=Alice\n}}\n"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    base = default_ontology()
+    leader = base.properties[DBO + "leader"]
+    onto = dataclasses.replace(base, properties={
+        **base.properties, leader.iri: dataclasses.replace(leader, range=DBO + "Place"),
+    })
+    graph = Pipeline(spark).run(corpus, ontology=onto)
+    got = {r.dataset for r in graph.filter(F.col("predicate") == leader.iri).collect()}
+    assert "mappingbased_objects_disjoint_range" in got
+    assert "mappingbased_objects" not in got
+
+
+@pytest.fixture(scope="module")
+def wikidata_job(spark, job_group, tmp_path_factory):
+    """A workdir run with a ``wikidata_corpus``, under a job group. The
+    Wikidata corpus is the driver contract's: item, property and lexeme
+    pages derived from tiny customer, supplier and nation tables. Returns
+    (the tables' directory, the workdir, the run's jobs)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kgforge.driver_corpus import (
+        wikidata_corpus_from_customers,
+        wikidata_lexeme_corpus_from_nations,
+        wikidata_property_corpus_from_suppliers,
+    )
+    from kgforge.pipeline import Pipeline
+
+    root = tmp_path_factory.mktemp("wikidata_tables")
+    pq.write_table(pa.table({
+        "c_custkey": pa.array(range(1, 31), pa.int64()),
+        "c_name": [f"Customer#{i:09d}" for i in range(1, 31)],
+        "c_mktsegment": [("BUILDING", "MACHINERY", "HOUSEHOLD")[i % 3] for i in range(1, 31)],
+    }), str(root / "customer.parquet"))
+    pq.write_table(pa.table({
+        "s_suppkey": pa.array(range(1, 6), pa.int64()),
+        "s_name": [f"Supplier#{i:09d}" for i in range(1, 6)],
+    }), str(root / "supplier.parquet"))
+    pq.write_table(pa.table({"n_nationkey": pa.array(range(6), pa.int32())}),
+                   str(root / "nation.parquet"))
+    sf_dir, workdir = str(root), str(root / "job")
+    wikidata = (
+        wikidata_corpus_from_customers(spark, sf_dir)
+        .unionByName(wikidata_property_corpus_from_suppliers(spark, sf_dir))
+        .unionByName(wikidata_lexeme_corpus_from_nations(spark, sf_dir))
+    )
+    with job_group("kgforge-wikidata-run") as jobs:
+        Pipeline(spark, workdir).run(
+            C.generate_corpus_df(spark, 20, partitions=2), wikidata_corpus=wikidata
+        )
+    return sf_dir, workdir, jobs
+
+
+def test_wikidata_run_runs_no_job_outside_the_callers_job_group(wikidata_job):
+    """The concurrent stages, and the wikidata stage's concurrent branch
+    checkpoints inside them, run under the caller's job group."""
+    jobs = wikidata_job[2]
+    assert jobs.grouped and not jobs.outside
+
+
+def test_job_and_driver_cache_build_one_wikidata_graph(spark, wikidata_job):
+    """The job's ``wikidata_quads`` stage equals the driver contract's
+    ``_wd_quads`` over the same tables as a multiset, with items,
+    properties and lexemes in it."""
+    import __spark_entry__ as E
+    from kgforge.schema import QUAD_KEY
+
+    sf_dir, workdir, _ = wikidata_job
+    cols = ["dataset", *QUAD_KEY, "context"]
+    job = spark.read.parquet(workdir + "/wikidata_quads").select(*cols)
+    try:
+        drv = E._wd_quads(spark, sf_dir).select(*cols)
+        datasets = {r.dataset for r in drv.select("dataset").distinct().collect()}
+        assert {"wikidata_labels", "wikidata_property", "wikidata_lexeme"} <= datasets
+        assert job.count() == drv.count()
+        assert job.exceptAll(drv).count() == 0 and drv.exceptAll(job).count() == 0
+    finally:
+        E._QUADS_CACHE.pop(sf_dir + "::wikidata", None)
+
+
 def test_ntriples_round_trip(spark):
     wd = tempfile.mkdtemp(prefix="kgforge_nt_")
     graph = run_pipeline(spark, C.generate_corpus_df(spark, 100, partitions=2)).cache()
@@ -287,8 +376,6 @@ def test_pipeline_iceberg_flag_falls_back_without_jar(spark, tmp_path):
     here when absent)."""
     import warnings
 
-    import pytest
-
     from kgforge import corpus as C
     from kgforge.pipeline import Pipeline, iceberg_available, run_pipeline
 
@@ -307,8 +394,6 @@ def test_pipeline_iceberg_flag_falls_back_without_jar(spark, tmp_path):
 def test_pipeline_iceberg_real(spark, tmp_path):
     """Real Iceberg write path (runs only when the runtime jar + catalog are
     configured)."""
-    import pytest
-
     from kgforge.pipeline import iceberg_available
 
     if not iceberg_available(spark):

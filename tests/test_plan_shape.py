@@ -54,6 +54,23 @@ def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
     assert "ArrowEvalPython" in plan  # the mapping cascades
 
 
+@pytest.mark.plan_shape
+def test_wikidata_graph_is_a_union_of_checkpointed_leaves(spark):
+    """``wikidata_all_quads`` checkpoints the entity parse and each of its
+    seven branches: its plan is a coalesced union of seven leaves, with no
+    JSON parse above them."""
+    from kgforge.wikidata import wikidata_all_quads
+
+    quads = wikidata_all_quads(spark.read.parquet("tests/fixtures/minidump/wikidata_corpus.parquet"))
+    plan = quads._jdf.queryExecution().analyzed()
+    text = plan.toString()
+    assert "from_json" not in text and "JsonToStructs" not in text, text
+    assert plan.nodeName() == "Repartition", text
+    leaves = plan.collectLeaves()
+    assert leaves.size() == 7, text
+    assert all(leaves.apply(i).nodeName() == "LogicalRDD" for i in range(7)), text
+
+
 def test_no_pushdown_guard_survives_optimizer(spark):
     """caching.no_pushdown ORs an always-false non-deterministic arm onto the
     namespace gate; if a Spark upgrade folds it away, the gate is pushed

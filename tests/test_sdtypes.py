@@ -215,6 +215,17 @@ def test_spark_matches_python_mirror(spark):
         assert got[r][2] == want[r][2]
 
 
+def test_sd_type_scores_runs_no_job_outside_the_callers_job_group(spark, job_group):
+    """The four statistics actions run concurrently, each under the
+    caller's job group, like the jobs of the calling thread."""
+    t, o, l = _dfs(spark, *_synthetic_corpus())
+    with job_group("kgforge-sdtypes") as jobs:
+        sd_type_scores(
+            t, o, l, ontology=default_ontology(), threshold=0.001, owl_thing_penalty=P
+        ).collect()
+    assert jobs.grouped and not jobs.outside
+
+
 def test_untyped_person_and_org_inference(spark):
     types, objects, literals = _synthetic_corpus()
     t, o, l = _dfs(spark, types, objects, literals)

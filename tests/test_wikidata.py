@@ -619,6 +619,21 @@ def test_property_extractor_getvalue_dispatch(spark):
     assert got["P5"] == ("7.5", xsd + "float")
 
 
+def test_parse_lexemes_keeps_every_l_page_of_a_mixed_corpus(spark):
+    """The content prefilter ahead of the lexeme JSON parse keeps a lexeme
+    whose id is written with a JSON escape; item pages still parse to
+    nothing."""
+    from kgforge.wikidata import parse_lexemes
+
+    docs = [
+        '{"type":"lexeme","id":"L7","lemmas":{}}',
+        '{"type":"lexeme","id":"\\u004c8","lemmas":{}}',
+        '{"type":"item","id":"Q1","labels":{"en":{"language":"en","value":"Lima"}}}',
+    ]
+    df = spark.createDataFrame([(d,) for d in docs], "content string")
+    assert sorted(r.id for r in parse_lexemes(df).collect()) == ["L7", "L8"]
+
+
 def test_lexeme_unmapped_category_falls_back_to_entity_iri(spark):
     """WikidataLexemeExtractor.scala:175-186: a lexicalCategory Q-id outside
     the harvested map renders as the canonical wd-entity IRI."""
