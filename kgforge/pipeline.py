@@ -15,7 +15,10 @@ Stage DAG::
 extraction the live store and single-page debug use too. ``wikidata_quads``
 is ``wikidata.wikidata_all_quads``, the graph the driver contract's
 ``_wd_quads`` builds: a checkpointed entity-parse leaf, then seven
-extractor branches checkpointed concurrently, unioned as leaves.
+extractor branches checkpointed concurrently, unioned as leaves. Those
+leaves are ``localCheckpoint`` blocks even with a workdir: losing an
+executor while the stage runs fails the stage instead of recomputing it
+(it is not committed, so a rerun recomputes it).
 
 The template-redirect map (``tred``) comes first, from a Template-namespace
 mini-parse of the corpus (no stage of its own: a small driver-side dict). The

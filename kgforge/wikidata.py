@@ -224,15 +224,17 @@ def _quad(ds, lang: Column, s: Column, p, v: Column, dt=None) -> list[Column]:
 
 
 def parse_entities(df: DataFrame) -> DataFrame:
-    """content → one row per parsed entity (subject + pruned entity struct).
-    Parse ONCE and pass the (persisted) result to wikidata_quads /
-    wikidata_r2r_quads / wikidata_snak_stats via ``entities=`` — otherwise
-    every union branch re-runs from_json over the corpus."""
+    """content → one row per parsed item or property (subject + pruned
+    entity struct). Parse ONCE and pass the (persisted) result to
+    wikidata_quads / wikidata_r2r_quads / wikidata_snak_stats via
+    ``entities=`` — otherwise every union branch re-runs from_json over the
+    corpus. Lexeme pages (``parse_lexemes``) and unparseable rows are
+    dropped: every consumer gates on ``^Q``, ``^P`` or ``^[QP]``."""
     # no_pushdown: without it the id filter is pushed below the fan-out
     # exchange as a second (schema-pruned) from_json over the raw content —
     # every JSON document tokenized twice, the first pass single-task on the
     # unsplittable scan side (measured 44 s → 22 s for the 10x entity parse)
-    gate = F.col("e.id").isNotNull()
+    gate = F.col("e.id").rlike("^[QP][0-9]+$")
     e = df.select(F.from_json(F.col("content"), ENTITY_SCHEMA).alias("e")).filter(
         gate if df.isStreaming else no_pushdown(gate)
     )
@@ -863,7 +865,7 @@ def parse_lexemes(df: DataFrame) -> DataFrame:
     return e.select("e.*")
 
 
-def wikidata_lexeme_quads(df: DataFrame, lexemes: DataFrame | None = None) -> DataFrame:
+def wikidata_lexeme_quads(df: DataFrame) -> DataFrame:
     """WikidataLexemeExtractor.scala:103-297 re-expressed as ONE array-side
     quad construction + a single explode (no shuffle):
 
@@ -885,7 +887,7 @@ def wikidata_lexeme_quads(df: DataFrame, lexemes: DataFrame | None = None) -> Da
 
     The quad ``language`` column is the constant 'wikidata' (the reference
     passes context.language throughout)."""
-    lex = lexemes if lexemes is not None else parse_lexemes(df)
+    lex = parse_lexemes(df)
     maps = load_lexeme_maps()
 
     # ONE literal string per map via str_to_map — not create_map over
@@ -1054,7 +1056,11 @@ def wikidata_all_quads(df: DataFrame) -> DataFrame:
     same corpus.
 
     Runs Spark jobs: the entity parse and each branch are checkpointed here,
-    and the result is the union of the branch leaves."""
+    and the result is the union of the branch leaves: ``localCheckpoint``
+    blocks in executor storage, so losing an executor (or dynamic allocation
+    removing one) before the union is consumed fails that job instead of
+    recomputing; the workdir job's uncommitted ``wikidata_quads`` stage is
+    then recomputed by a rerun."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     # parse the JSON ONCE into a leaf every branch scans. Narrowed to the
@@ -1063,8 +1069,7 @@ def wikidata_all_quads(df: DataFrame) -> DataFrame:
     # localCheckpoint, not persist: building the COLUMNAR cache of the
     # deeply nested entity structs cost 6.4 s at sf1.0 against 0.4 s for
     # the row blocks, and every branch scan was faster off the row blocks
-    # (no columnar decode of nested maps and arrays). Checkpoint blocks die
-    # with their executor.
+    # (no columnar decode of nested maps and arrays).
     ent = parse_entities(df).coalesce(cores).localCheckpoint()
     # builders, not built DataFrames: constructing the seven expression
     # trees is itself ~3-4 s of serial py4j round trips on the driver (the

@@ -815,21 +815,25 @@ def test_map_wikidata_to_language_uri(spark):
 
 
 def test_parse_entities_single_parse_above_fanout(spark):
-    """The null-id gate must not be pushed below the fan-out exchange as a
+    """The id gate must not be pushed below the fan-out exchange as a
     second schema-pruned from_json (kgforge.caching.no_pushdown): results
     must equal the plain filter, and no Filter node may parse JSON."""
     rows = [
         ("r", f"wd/Q{i}.json", "c", "wikidata",
          '{"id":"Q%d","labels":{"en":{"language":"en","value":"x"}}}' % i)
         for i in range(1, 9)
-    ] + [("r", "wd/bad.json", "c", "wikidata", "not json")]
+    ] + [
+        ("r", "wd/bad.json", "c", "wikidata", "not json"),
+        ("r", "wd/L1.json", "c", "wikidata", '{"id":"L1","lemmas":{}}'),
+    ]
     schema = "repo string, path string, commit string, lang string, content string"
     from kgforge.wikidata import parse_entities
 
     df = spark.createDataFrame(rows, schema).repartition(4)
     ent = parse_entities(df)
     got = sorted(r.id for r in ent.collect())
-    assert got == [f"Q{i}" for i in range(1, 9)]  # bad row filtered, guard is a no-op
+    # bad row and lexeme page filtered, guard is a no-op
+    assert got == [f"Q{i}" for i in range(1, 9)]
     plan = ent._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     # the plan prints top-down, so everything after the Exchange line is the
