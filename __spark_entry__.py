@@ -13,10 +13,10 @@ is oracle-checked, not just the relational tail.
 The KG those queries read (``_engine_quads``) is ``kgforge.pipeline.Pipeline``
 run in memory — the same stage graph ``jobs/extract.py`` ships — plus the
 three per-page datasets only this contract serves (``nif_*``,
-``long_abstracts``, ``cited_facts``). The parse stage, with its shared
-``_ib`` infobox column, is cached under ``<sf_dir>::parsed``. The
-``kg_wikidata_*`` queries read ``_wd_quads``: ``wikidata_all_quads``, the
-graph ``Pipeline.run(wikidata_corpus=)`` builds, over one mixed entity corpus.
+``long_abstracts``, ``cited_facts``). The parse stage is cached under
+``<sf_dir>::parsed``. The ``kg_wikidata_*`` queries read ``_wd_quads``:
+``wikidata_all_quads``, the graph ``Pipeline.run(wikidata_corpus=)`` builds,
+over one mixed entity corpus.
 """
 
 from __future__ import annotations
@@ -95,7 +95,8 @@ def _engine_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KG of the derived corpus, built once per sf_dir: ``Pipeline.run``
     in memory (the parse-once sharing of the CompositeParseExtractor analog
     across driver queries) plus the three per-page datasets only the driver
-    contract serves. The parse stage (with ``_ib``) is kept under
+    contract serves; ``cited_facts`` joins the quads stage's infobox facts,
+    so the infobox cascade runs once. The parse stage is kept under
     ``<sf_dir>::parsed`` for the queries that read it."""
     if sf_dir not in _QUADS_CACHE:
         p = Pipeline(spark)
@@ -111,7 +112,7 @@ def _engine_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_page = (
             nif_quads(parsed)
             .unionByName(extract_long_abstracts(parsed))
-            .unionByName(cited_facts_quads(parsed, template_redirects=p.tred))
+            .unionByName(cited_facts_quads(parsed, p.quads))
         )
         # localCheckpoint: every kg_* driver query derives from this table,
         # so its plan must be a leaf, not the whole engine DAG

@@ -34,8 +34,8 @@ def no_pushdown(cond: Column) -> Column:
     Rule: wrap only predicates over DERIVED, non-scan columns. The guard
     disables pruning — a wrapped predicate over a scan column never reaches
     the scan, so partition pruning and pushed row-group filters are lost.
-    Keep cheap scan-column predicates separate and unwrapped (as
-    ``parse.prepare`` does with its ``path contains ':'`` prefilter).
+    Keep cheap scan-column predicates in a separate, unwrapped ``filter`` so
+    they still reach the scan.
     tests/test_plan_shape.py pins that the guard survives the optimizer."""
     return cond | (F.monotonically_increasing_id() < F.lit(-1))
 

@@ -209,10 +209,6 @@ def make_infobox_props_udf(template_redirects: dict[str, str] | None = None):
     return infobox_props_udf
 
 
-# default instance (no template redirects)
-infobox_props_udf = make_infobox_props_udf()
-
-
 # --- the segments -------------------------------------------------------------
 
 
@@ -834,13 +830,8 @@ def _quads_per_page(
     # (construction only; the plan is identical and order-preserving)
     with ThreadPoolExecutor(8) as ex:
         built = list(ex.map(lambda n: SEGMENTS[n](page), names))
-    # a precomputed ``_ib`` column wins over template_redirects (engine-build
-    # parse-once sharing: the Arrow infobox pass is the single most expensive
-    # per-page step, and the shared column spares it to every other
-    # consumer — cited-facts, hybrid, raw-infobox); callers keep the two
-    # consistent
-    if "_ib" not in parsed.columns and "infobox" in names:  # the only `_ib` reader
-        ib_udf = make_infobox_props_udf(template_redirects) if template_redirects else infobox_props_udf
+    if "infobox" in names:  # the only `_ib` reader
+        ib_udf = make_infobox_props_udf(template_redirects)
         parsed = parsed.withColumn("_ib", ib_udf(F.col("lang"), F.col("templates")))
     return parsed.select(
         "page_id",
@@ -853,7 +844,10 @@ def _quads_per_page(
 
 def explode_quads(per_page: DataFrame) -> DataFrame:
     """(language, quads array) rows → one flat quad row per element."""
-    return per_page.select("language", F.explode("quads").alias("q")).select(
+    # explode_outer: explode's inferred `size(quads) > 0` filter re-runs every segment and UDF
+    return per_page.select("language", F.explode_outer("quads").alias("q")).filter(
+        F.col("q").isNotNull()
+    ).select(
         "language",
         *(F.col("q." + c).alias(c)
           for c in ("dataset", "subject", "predicate", "value", "context", "datatype")),

@@ -887,15 +887,7 @@ def hybrid_infobox_quads(
     from .extractors.fused import make_infobox_props_udf
 
     udf = make_mapping_udf(mappings, ontology, template_redirects)
-    # reuse a shared precomputed infobox column when present (see
-    # cited_facts_quads) — the raw harvest side then costs no Python
-    ib_col = (
-        F.col("_ib")
-        if "_ib" in parsed.columns
-        else make_infobox_props_udf(template_redirects)(
-            F.col("lang"), F.col("templates")
-        )
-    )
+    ib_col = make_infobox_props_udf(template_redirects)(F.col("lang"), F.col("templates"))
     sf_links = _sf_links_col()
     pages = parsed.filter(F.col("namespace") == MAIN)
     pairs = (
@@ -1260,7 +1252,7 @@ def _first_cite_iri_udf(raw: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def cited_facts_quads(parsed: DataFrame, template_redirects: dict[str, str] | None = None) -> DataFrame:
+def cited_facts_quads(parsed: DataFrame, quads: DataFrame) -> DataFrame:
     """Infobox facts carrying a citation on their source line → the fact
     re-emitted with the citation IRI as provenance context
     (CitedFactsExtractor.scala:72-84: dataset ``cited_facts``).
@@ -1272,43 +1264,24 @@ def cited_facts_quads(parsed: DataFrame, template_redirects: dict[str, str] | No
     parse time), so the join key is (subject, property IRI): a hash join on
     already-available columns instead of string surgery on contexts.
 
+    The facts are the ``infobox_properties`` rows of ``quads`` (the
+    extraction of the same ``parsed`` pages, e.g. ``Pipeline.run``'s quads
+    stage), so the infobox cascade does not run a second time here.
+
     Scale shape: the ref side is filtered to cite-bearing refs BEFORE the
     Python IRI minting (tiny subset); the join is a key-partitioned equi-join
     with AQE handling skew."""
-    from .extractors.fused import infobox_props_udf, make_infobox_props_udf
-
-    # only cite-bearing pages pay the infobox-typing Arrow pass — the UDF
-    # side is gated on the SAME predicate the ref side filters by, so pages
-    # without a cited ref never enter Python here. When the caller shares a
-    # precomputed ``_ib`` column (engine-build parse-once sharing), no
-    # Python runs here at all.
-    has_cite = F.exists(
-        F.col("ref_texts"),
-        lambda r: r["prop_iri"].isNotNull() & r["raw"].rlike(_CITE_IN_REF_RE),
-    )
-    main = parsed.filter((F.col("namespace") == MAIN) & has_cite)
-    if "_ib" in parsed.columns:
-        ib_col = F.col("_ib")
-    else:
-        ib_udf = (
-            make_infobox_props_udf(template_redirects)
-            if template_redirects
-            else infobox_props_udf
-        )
-        ib_col = ib_udf(F.col("lang"), F.col("templates"))
     cites = (
-        main.select("lang", "subject", F.explode("ref_texts").alias("r"))
+        parsed.filter(F.col("namespace") == MAIN)
+        .select("lang", "subject", F.explode("ref_texts").alias("r"))
         .filter(F.col("r.prop_iri").isNotNull() & F.col("r.raw").rlike(_CITE_IN_REF_RE))
         .select("lang", "subject", F.col("r.prop_iri").alias("predicate"),
                 _first_cite_iri_udf(F.col("r.raw")).alias("context"))
         .filter(F.col("context").isNotNull())
         .distinct()
     )
-    props = main.select(
-        "lang", "subject", F.explode(ib_col).alias("p")
-    ).select(
-        "lang", "subject", F.col("p.prop_iri").alias("predicate"),
-        F.col("p.value").alias("value"), F.col("p.datatype").alias("datatype"),
+    props = quads.filter(F.col("dataset") == V.INFOBOX_PROPERTIES).select(
+        F.col("language").alias("lang"), "subject", "predicate", "value", "datatype"
     )
     return props.join(cites, ["lang", "subject", "predicate"]).select(
         F.col("lang").alias("language"),

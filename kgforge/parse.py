@@ -200,31 +200,20 @@ def parse_corpus_pandas(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_parse_batches, schema=out_schema)
 
 
-def prepare(corpus: DataFrame, namespaces: tuple[int, ...] = (MAIN, TEMPLATE, CATEGORY, FILE)) -> DataFrame:
+def prepare(corpus: DataFrame) -> DataFrame:
     """Full input pipeline: derive page columns → namespace gate → parse.
     The namespace filter runs BEFORE the parse stage so pruned pages never
     pay the Python cost (pushdown analog of XMLSource.scala:32-53)."""
-    if namespaces and MAIN not in namespaces:
-        # non-MAIN namespaces require a "prefix:" in the page title, and the
-        # title is the path's file stem with colon-preserving rewrites — so
-        # `path contains ':'` is a necessary condition. Unlike the namespace
-        # regex chain this predicate is CHEAP and pushable all the way to the
-        # scan, so a Template-/Category-only pass (e.g. the template-redirect
-        # mini-parse) skips the title derivation for the ~all pages without a
-        # colon instead of regex-scanning every page (measured: the engine
-        # build's tred probe at 10x, 4.8 s → scan-bound).
-        corpus = corpus.filter(F.col("path").contains(":"))
     df = derive_page_columns(corpus)
-    if namespaces:
-        # no_pushdown: the namespace gate must stay ABOVE the fan-out
-        # exchange — pushed below, it re-derives the title/namespace regex
-        # chain on the unsplittable single-row-group scan side (one task
-        # regex-scanning every page, then a second derivation post-exchange).
-        # The gate still runs BEFORE the Python parse stage (audit probe
-        # ns_gate_before_python), just post-exchange on all cores. Streaming
-        # inputs skip the guard (monotonically_increasing_id is rejected in
-        # streaming plans; micro-batch scans have no fan-out exchange to
-        # protect anyway).
-        gate = F.col("namespace").isin(list(namespaces))
-        df = df.filter(gate if df.isStreaming else no_pushdown(gate))
+    # no_pushdown: the namespace gate must stay ABOVE the fan-out
+    # exchange — pushed below, it re-derives the title/namespace regex
+    # chain on the unsplittable single-row-group scan side (one task
+    # regex-scanning every page, then a second derivation post-exchange).
+    # The gate still runs BEFORE the Python parse stage (audit probe
+    # ns_gate_before_python), just post-exchange on all cores. Streaming
+    # inputs skip the guard (monotonically_increasing_id is rejected in
+    # streaming plans; micro-batch scans have no fan-out exchange to
+    # protect anyway).
+    gate = F.col("namespace").isin([MAIN, TEMPLATE, CATEGORY, FILE])
+    df = df.filter(gate if df.isStreaming else no_pushdown(gate))
     return parse_corpus(df)

@@ -6,10 +6,10 @@ destinations/MarkerDestination.scala).
 
 Stage DAG::
 
-    tred probe → parsed (+_ib) → quads ┬→ transitive_redirects ─┐
-                                       ├→ type_consistency ─────┤
-                                       └→ entity_links ─────────┼→ graph
-                        wikidata_quads (optional second corpus) ┘
+    parsed → tred → quads ┬→ transitive_redirects ─┐
+                          ├→ type_consistency ─────┤
+                          └→ entity_links ─────────┼→ graph
+           wikidata_quads (optional second corpus) ┘
 
 ``quads`` is ``extractors.fused.page_quads`` exploded: the per-page
 extraction the live store and single-page debug use too. ``wikidata_quads``
@@ -20,13 +20,13 @@ leaves are ``localCheckpoint`` blocks even with a workdir: losing an
 executor while the stage runs fails the stage instead of recomputing it
 (it is not committed, so a rerun recomputes it).
 
-The template-redirect map (``tred``) comes first, from a Template-namespace
-mini-parse of the corpus (no stage of its own: a small driver-side dict). The
-``parsed`` stage is the full parse plus the shared ``_ib`` column, the
-infobox cascade computed once with ``tred``; every infobox consumer reuses
-it, so each page crosses into Python for the infobox once. After ``run`` the
-instance holds ``tred``, ``parsed`` and ``quads`` for callers that build more
-on them.
+The corpus is parsed once, into the ``parsed`` stage. The template-redirect
+map (``tred``, no stage of its own: a small driver-side dict) is read from
+that stage, so a resumed job reads it from the committed parquet. The
+``quads`` stage is one select over ``parsed`` that runs the infobox, mapping
+and table-mapping cascades with ``tred``: after the parse, each page crosses
+into Python once more. After ``run`` the instance holds ``tred``, ``parsed``
+and ``quads`` for callers that build more on them.
 
 The three stages after ``quads`` (and ``wikidata_quads``) need nothing but
 ``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
@@ -75,10 +75,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .extractors.fused import explode_quads, make_infobox_props_udf, page_quads
+from .extractors.fused import explode_quads, page_quads
 from .linker import entity_link_quads
 from .mapping_engine import type_consistency
-from .namespaces import TEMPLATE
 from .parse import prepare
 from .redirects import (
     dispatch_relevant_targets,
@@ -286,32 +285,19 @@ class Pipeline:
         checkpointed stage, the reference's separate wikidata-dump run
         folded into one resumable job.
 
-        Sets ``self.tred`` (the template-redirect map), ``self.parsed``
-        (the parse stage with ``_ib``) and ``self.quads`` (the quads
+        Sets ``self.parsed`` (the parse stage), ``self.tred`` (the
+        template-redirect map read from it) and ``self.quads`` (the quads
         stage)."""
-        # template-redirect map (Redirects.load analog): a tiny driver-side
-        # dict shipped inside the UDF closures, so infobox/mapping dispatch
-        # sees through Template-ns redirects (resolveMap). It needs only
-        # Template-namespace pages, and prepare()'s namespace gate runs
-        # BEFORE the Python parse, so a template-only mini-parse resolves it
-        # ahead of the full parse, which can then carry ``_ib``
+        self.parsed = parsed = self._stage("parsed", lambda: prepare(corpus))
+        # template-redirect map (Redirects.load analog, read from the same
+        # parse): a tiny driver-side dict shipped inside the UDF closures, so
+        # infobox/mapping dispatch sees through Template-ns redirects
+        # (resolveMap)
         self.tred = tred = template_redirect_map(
-            prepare(corpus, namespaces=(TEMPLATE,)),
-            relevant_targets=dispatch_relevant_targets(),
+            parsed, relevant_targets=dispatch_relevant_targets()
         )
-        # the infobox Arrow pass is the most expensive per-page step and
-        # several consumers read its output (the fused infobox segment,
-        # cited facts, the hybrid split, the mapping statistics): computed
-        # ONCE into the shared ``_ib`` column of the parse stage, which every
-        # consumer detects and reuses
-        self.parsed = parsed = self._stage(
-            "parsed",
-            lambda: prepare(corpus).withColumn(
-                "_ib", make_infobox_props_udf(tred)(F.col("lang"), F.col("templates"))
-            ),
-        )
-        # the extractor suite and the mapping engine (instance types,
-        # mapping-based statements) in one pass
+        # the extractor suite, the infobox cascade and the mapping engine
+        # (instance types, mapping-based statements) in one pass
         self.quads = quads = self._stage(
             "quads",
             lambda: explode_quads(page_quads(parsed, tred, mappings, ontology)),

@@ -19,7 +19,7 @@ change deliberately — update them WITH the change, like golden files.
 import pytest
 from pyspark.sql import functions as F
 
-from kgforge.extractors import fused_quads
+from kgforge.extractors import fused_quads, run_extractors
 from kgforge.parse import prepare
 
 FIXTURE = "tests/fixtures/minidump/corpus.parquet"
@@ -195,7 +195,7 @@ def test_standalone_groups_over_real_pages(parsed):
     assert media_quads(parsed).count() == 2052
     assert commons_resource_quads(parsed).count() == 20
 
-    cf = cited_facts_quads(parsed).persist()
+    cf = cited_facts_quads(parsed, run_extractors(parsed, ["infobox"])).persist()
     assert cf.count() == 120
     merkel = cf.filter(
         (F.col("subject") == "http://dbpedia.org/resource/Angela_Merkel")

@@ -75,11 +75,10 @@ def test_lineage_sha_check_reads_back_the_parquet(spark, monkeypatch):
     import kgforge.pipeline as P
 
     prepare = P.prepare
-    # the template-redirect probe calls prepare too (namespaces=...); the
-    # planted mismatch must still reach the parsed stage only
+    # plant the mismatch in the parse, which only the parsed stage stores
     monkeypatch.setattr(
         P, "prepare",
-        lambda c, **kw: prepare(c, **kw).withColumn(
+        lambda c: prepare(c).withColumn(
             "content_sha256", F.sha2(F.concat("content", F.lit("x")), 256)
         ),
     )
@@ -130,8 +129,8 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch, job_gro
 def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
     """The driver contract's in-memory graph is the resumable job's graph:
     without the three per-page datasets only the driver serves,
-    ``_engine_quads`` equals ``run_pipeline``'s parquet stages (``_ib``
-    round-tripped through parquet) as a distinct quad set."""
+    ``_engine_quads`` equals ``run_pipeline``'s parquet stages as a
+    distinct quad set."""
     import random
 
     import pyarrow as pa
@@ -157,7 +156,6 @@ def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
 
     try:
         engine = E._engine_quads(spark, sf_dir)
-        assert "_ib" in E._QUADS_CACHE[sf_dir + "::parsed"].columns
         driver_only = F.col("dataset").startswith("nif_") | F.col("dataset").isin(
             "long_abstracts", "cited_facts"
         )
@@ -166,7 +164,6 @@ def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
 
         p = Pipeline(spark, str(tmp_path / "wd"))
         job = p.run(corpus_from_documents(spark, sf_dir)).select(*key).distinct()
-        assert "_ib" in p.parsed.columns
         assert job.count() == cached.count() > 0
         assert job.exceptAll(cached).count() == 0
     finally:
@@ -188,24 +185,41 @@ def _tred_corpus(spark):
     )
 
 
-def test_run_resolves_template_redirects_before_the_parse(spark):
-    """The template-only probe runs ahead of the parse, so the ``_ib``
-    column of the parsed stage already sees through Template-namespace
-    redirects: a date written through the ``{{Bd}}`` redirect parses like
-    ``{{Birth date}}``, and would not without the map."""
-    from kgforge.extractors.fused import make_infobox_props_udf
+def test_run_resolves_template_redirects_from_the_parse(spark):
+    """The template-redirect map is read from the parse stage and the quads
+    stage's infobox cascade uses it: a date written through the ``{{Bd}}``
+    redirect parses like ``{{Birth date}}``, and would not without the
+    map."""
+    from kgforge.extractors import run_extractors
     from kgforge.pipeline import Pipeline
+
+    def infobox(quads):
+        rows = quads.filter(F.col("dataset") == "infobox_properties").collect()
+        by_page = {"Alice": set(), "Bob": set()}
+        for r in rows:
+            by_page[r.subject.rsplit("/", 1)[1]].add((r.predicate, r.value, r.datatype))
+        return by_page
 
     p = Pipeline(spark)
     p.run(_tred_corpus(spark))
     assert p.tred == {"bd": "birth date"}
-    ib = {r.title: r._ib for r in p.parsed.select("title", "_ib").collect()}
+    ib = infobox(p.quads)
     assert ib["Bob"] == ib["Alice"]
-    assert any(e.prop_label == "birth date" for e in ib["Bob"])
-    bare = p.parsed.select(
-        "title", make_infobox_props_udf({})(F.col("lang"), F.col("templates")).alias("ib")
-    ).filter(F.col("title") == "Bob").first().ib
-    assert bare != ib["Bob"]
+    assert any(pred.endswith("/birthDate") for pred, _, _ in ib["Bob"])
+    bare = infobox(run_extractors(p.parsed, ["infobox"]))
+    assert bare["Bob"] != ib["Bob"]
+
+
+def test_run_parses_the_corpus_once(spark, monkeypatch):
+    """``Pipeline.run`` calls ``prepare`` once: the template-redirect map is
+    read from the parse stage, not from a second parse of the corpus."""
+    import kgforge.pipeline as P
+
+    calls = []
+    prepare = P.prepare
+    monkeypatch.setattr(P, "prepare", lambda *a, **kw: calls.append(a) or prepare(*a, **kw))
+    P.Pipeline(spark).run(_tred_corpus(spark))
+    assert len(calls) == 1
 
 
 def test_in_memory_stages_are_checkpointed_leaves(spark):

@@ -34,7 +34,9 @@ def test_extractor_suite_plan_shape(spark):
 def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
     """The job's ``quads`` stage, as ``Pipeline.run`` builds it over the
     checkpointed parse: the segments and both mapping cascades in one select,
-    so no Union, no Exchange and a single explode."""
+    so no Union, no Exchange, a single explode and one Python pass that
+    runs the infobox, mapping and table cascades (the explode's inferred
+    non-empty filter would evaluate them a second time)."""
     from kgforge.pipeline import Pipeline
 
     plans = {}
@@ -51,7 +53,10 @@ def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
     assert not re.findall(r"\bUnion\b", plan), plan
     assert not re.findall(r"\bExchange\b", plan), plan
     assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
-    assert "ArrowEvalPython" in plan  # the mapping cascades
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(evals) == 1, plan
+    for udf in ("infobox_props_udf", "mapping_udf", "table_udf"):
+        assert udf in evals[0], evals[0]
 
 
 @pytest.mark.plan_shape
