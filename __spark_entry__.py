@@ -11,10 +11,11 @@ reconstruct the planted facts in pure SQL — so the parse/extract path itself
 is oracle-checked, not just the relational tail.
 
 The KG those queries read (``_engine_quads``) is ``kgforge.pipeline.Pipeline``
-run in memory — the same stage graph ``jobs/extract.py`` ships — plus the
-three per-page datasets only this contract serves (``nif_*``,
-``long_abstracts``, ``cited_facts``). The parse stage is cached under
-``<sf_dir>::parsed``. The ``kg_wikidata_*`` queries read ``_wd_quads``:
+run in memory — the same stage graph ``jobs/extract.py`` ships — as its
+``graph`` plus its ``per_page`` stage (``nif_*``, ``long_abstracts``,
+``cited_facts``, ``french_population``). The parse stage and the run's
+template-redirect map are cached under ``<sf_dir>::parsed`` and
+``<sf_dir>::tred``. The ``kg_wikidata_*`` queries read ``_wd_quads``:
 ``wikidata_all_quads``, the graph ``Pipeline.run(wikidata_corpus=)`` builds,
 over one mixed entity corpus.
 """
@@ -76,9 +77,6 @@ from kgforge.driver_corpus import (
     wikidata_lexeme_corpus_from_nations,
     wikidata_property_corpus_from_suppliers,
 )
-from kgforge.extractors.structural import extract_long_abstracts
-from kgforge.mapping_engine import cited_facts_quads
-from kgforge.nif import nif_quads
 from kgforge.parse import prepare
 from kgforge.pipeline import Pipeline
 from kgforge.redirects import transitive_closure
@@ -88,35 +86,23 @@ from kgforge.sources import read_table
 # engine-side helpers
 # ---------------------------------------------------------------------------
 
-_QUADS_CACHE: dict[str, DataFrame] = {}
+_QUADS_CACHE: dict[str, DataFrame | dict[str, str]] = {}
 
 
 def _engine_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KG of the derived corpus, built once per sf_dir: ``Pipeline.run``
     in memory (the parse-once sharing of the CompositeParseExtractor analog
-    across driver queries) plus the three per-page datasets only the driver
-    contract serves; ``cited_facts`` joins the quads stage's infobox facts,
-    so the infobox cascade runs once. The parse stage is kept under
-    ``<sf_dir>::parsed`` for the queries that read it."""
+    across driver queries), its ``graph`` and ``per_page`` stages. The parse
+    stage and the template-redirect map are kept under ``<sf_dir>::parsed``
+    and ``<sf_dir>::tred`` for the queries that read them."""
     if sf_dir not in _QUADS_CACHE:
         p = Pipeline(spark)
         graph = p.run(corpus_from_documents(spark, sf_dir))
-        parsed = _QUADS_CACHE[sf_dir + "::parsed"] = p.parsed
-        # nif_* and long_abstracts rows are unique by construction (one per
-        # page per predicate) and carry the full plain text; cited_facts rows
-        # are unique including their context (one per citation), which the
-        # dedup key ignores. No stage reads them, so they join after the
-        # dedup, keeping the heaviest strings out of its shuffle. The branch
-        # is tiny (5 rows/page): repartition so the cached union does not
-        # inherit the parse stage's partition count per query scan.
-        per_page = (
-            nif_quads(parsed)
-            .unionByName(extract_long_abstracts(parsed))
-            .unionByName(cited_facts_quads(parsed, p.quads))
-        )
+        _QUADS_CACHE[sf_dir + "::parsed"] = p.parsed
+        _QUADS_CACHE[sf_dir + "::tred"] = p.tred
         # localCheckpoint: every kg_* driver query derives from this table,
         # so its plan must be a leaf, not the whole engine DAG
-        _QUADS_CACHE[sf_dir] = graph.unionByName(per_page.repartition(8)).localCheckpoint()
+        _QUADS_CACHE[sf_dir] = graph.unionByName(p.per_page).localCheckpoint()
     return _QUADS_CACHE[sf_dir]
 
 
@@ -447,7 +433,8 @@ def _kg_hybrid_infobox(spark, sf_dir):
     if key not in _QUADS_CACHE:
         _engine_quads(spark, sf_dir)  # ensures the parsed cache exists
         parsed = _QUADS_CACHE[sf_dir + "::parsed"]
-        _QUADS_CACHE[key] = hybrid_infobox_quads(parsed).persist()
+        tred = _QUADS_CACHE[sf_dir + "::tred"]
+        _QUADS_CACHE[key] = hybrid_infobox_quads(parsed, template_redirects=tred).persist()
         _QUADS_CACHE[key].count()
     return _QUADS_CACHE[key].select("dataset", "subject", "predicate", "value", "datatype")
 

@@ -9,7 +9,9 @@ Cluster usage (the north rule's deployment shape):
         [--synthetic N]
 
 The job is resumable: rerunning with the same --workdir skips completed
-stages (per-stage parquet checkpoints + _lineage rows). With --synthetic N
+stages (per-stage parquet checkpoints + _lineage rows). The N-Triples dump
+holds the ``graph`` stage and the ``per_page`` stage (nif_*,
+long_abstracts, cited_facts, french_population). With --synthetic N
 the deterministic corpus generator supplies the input (bench/CI mode).
 """
 
@@ -41,7 +43,7 @@ def main() -> None:
 
     from kgforge import corpus as C
     from kgforge.emit import write_ntriples
-    from kgforge.pipeline import run_pipeline
+    from kgforge.pipeline import Pipeline
     from kgforge.session import build_session
 
     spark = build_session(app="kgforge-extract", master=args.master)
@@ -54,11 +56,11 @@ def main() -> None:
 
     wd_corpus = spark.read.parquet(args.wikidata_input) if args.wikidata_input else None
     t0 = time.time()
-    graph = run_pipeline(spark, corpus, workdir=args.workdir, fmt=args.fmt,
-                         wikidata_corpus=wd_corpus)
+    p = Pipeline(spark, args.workdir, fmt=args.fmt)
+    graph = p.run(corpus, wikidata_corpus=wd_corpus)
     n = graph.count()
     if args.ntriples:
-        write_ntriples(graph, args.ntriples)
+        write_ntriples(graph.unionByName(p.per_page), args.ntriples)
     print(json.dumps({"quads": n, "wall_sec": round(time.time() - t0, 2), "workdir": args.workdir}))
 
 

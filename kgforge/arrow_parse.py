@@ -51,7 +51,7 @@ _SECTION_FIELDS = [
     ("end", pa.int64()),     # section never rendered into plain text)
 ]
 _CELL_FIELDS = [("row", pa.int32()), ("col", pa.int32()), ("text", pa.string()), ("header", pa.bool_())]
-_REF_FIELDS = [("key", pa.string()), ("prop_iri", pa.string()), ("text", pa.string()), ("raw", pa.string())]
+_REF_FIELDS = [("key", pa.string()), ("prop_iri", pa.string()), ("text", pa.string()), ("cite_iri", pa.string())]
 _GALLERY_FIELDS = [("file", pa.string()), ("enc", pa.string()), ("caption", pa.string())]
 
 
@@ -122,7 +122,7 @@ def parse_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     rf_key: list[str | None] = []
     rf_iri: list[str | None] = []
     rf_text: list[str] = []
-    rf_raw: list[str] = []
+    rf_cite: list[str | None] = []
     # galleries
     g_off = [0]
     g_file: list[str] = []
@@ -192,7 +192,7 @@ def parse_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
             rf_key.append(key)
             rf_iri.append(property_iri(lg, key) if key else None)
             rf_text.append(text)
-            rf_raw.append(raw)
+            rf_cite.append(wikitext.first_cite_iri(raw) if key else None)
         rf_off.append(len(rf_key))
         for gfile, gcap in r.galleries:
             g_file.append(gfile)
@@ -243,7 +243,7 @@ def parse_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     sections_arr = _list_of_structs(
         s_off, [s_name, s_level, s_line, s_begin, s_end], _SECTION_FIELDS
     )
-    refs_arr = _list_of_structs(rf_off, [rf_key, rf_iri, rf_text, rf_raw], _REF_FIELDS)
+    refs_arr = _list_of_structs(rf_off, [rf_key, rf_iri, rf_text, rf_cite], _REF_FIELDS)
     galleries_arr = _list_of_structs(g_off, [g_file, g_enc, g_caption], _GALLERY_FIELDS)
 
     new_cols = [

@@ -63,7 +63,6 @@ from .structural import (
     _OFFICIAL_TEMPLATE,
     _URL_IN_VALUE,
     FILE_TYPE_MAP,
-    PP_DISAMBIG,
     acronym_matches,
 )
 
@@ -213,11 +212,10 @@ def make_infobox_props_udf(template_redirects: dict[str, str] | None = None):
 
 
 class _Page:
-    """The parsed-page columns the segments read, plus the derived
-    expressions several of them share (built once per plan)."""
+    """The derived expressions several segments share (built once per
+    plan)."""
 
-    def __init__(self, columns: list[str]):
-        self.columns = frozenset(columns)
+    def __init__(self):
         self.subj = F.col("subject")
         self.pb = _prop_base()
         self.is_main = F.col("namespace") == MAIN
@@ -432,13 +430,10 @@ def _disambiguations(p: _Page) -> Column:
     spells it out as an acronym (:68-83). The title is cleaned of the page
     language's suffix, then of the en one (DisambiguationExtractorConfig
     :8-41; en-titled pages occur in every edition). A page is a
-    disambiguation page if it carries a disambiguation template or, when
-    the frame has the ``PP_DISAMBIG`` column (structural.
-    with_page_props_disambig — the reference's primary source,
-    Disambiguations.scala:60-113), its page_props flag is set."""
+    disambiguation page if it carries a disambiguation template (the
+    reference's fallback, Disambiguations.scala:70-77; its primary source,
+    the page_props dump, is not a job input)."""
     is_disambig = F.exists(F.col("templates"), lambda t: F.lower(t["name"]).isin(*_DISAMBIG_TEMPLATES))
-    if PP_DISAMBIG in p.columns:
-        is_disambig = is_disambig | F.col(PP_DISAMBIG)
     lang_stripped = F.regexp_replace(F.col("title"), _by_lang(_DISAMBIG_SUFFIX), F.lit(""))
     clean_title = F.upper(F.regexp_replace(lang_stripped, _DISAMBIG_SUFFIX["en"], ""))
     # a lambda body re-evaluates outer expressions per element: the
@@ -824,7 +819,7 @@ ALL_EXTRACTORS = tuple(SEGMENTS)
 def _quads_per_page(
     parsed: DataFrame, names, template_redirects: dict[str, str] | None, cascades=()
 ) -> DataFrame:
-    page = _Page(parsed.columns)
+    page = _Page()
     # building the segment expression trees costs ~7,800 serial py4j round
     # trips for the full suite: a small thread pool overlaps them
     # (construction only; the plan is identical and order-preserving)

@@ -4,8 +4,8 @@ standalone extractors that run outside it.
 The suite itself — one segment per ``ALL_EXTRACTORS`` name — lives in
 ``fused.py``; the per-language tables it reads (homepage property names,
 disambiguation suffixes, gender pronouns, ...) are kept here, next to the
-extractors that are separate passes (long abstracts, IRI/URI sameAs, fr
-population) and the page_props disambiguation source.
+extractors that are separate passes (long abstracts, fr population; both
+run in the pipeline's ``per_page`` stage, ``pipeline.per_page_quads``).
 
 Reference parity notes cite file:line under the reference's
 core/src/main/scala/org/dbpedia/extraction/. All quads carry ``context = null`` (Quad
@@ -60,20 +60,6 @@ def extract_long_abstracts(parsed: DataFrame) -> DataFrame:
                   F.col("plain_text"), langstring=True)
 
 
-def extract_uri_same_as_iri(parsed: DataFrame) -> DataFrame:
-    """UriSameAsIriExtractor (mappings/UriSameAsIriExtractor.scala:30-60):
-    every page whose subject IRI differs from its ASCII-URI form → one
-    (iri, owl:sameAs, uri) quad. Per-page twin of the
-    CreateIriSameAsUriLinks script (kgforge/canonicalize.py
-    iri_same_as_uri_quads) using the SAME transcoder UDF."""
-    from ..canonicalize import iri_to_uri_udf
-
-    pages = parsed.select("lang", "subject").withColumn(
-        "uri", iri_to_uri_udf(F.col("subject"))
-    ).filter(F.col("uri") != F.col("subject"))
-    return _quads(pages, "uri_same_as_iri", F.col("subject"), V.OWL_SAME_AS, F.col("uri"))
-
-
 def extract_fr_population(parsed: DataFrame) -> DataFrame:
     """fr.PopulationExtractor (mappings/fr/PopulationExtractor.scala:27-55):
     French Template-ns pages titled '…/<City>/…évolution population…'
@@ -110,7 +96,7 @@ def extract_fr_population(parsed: DataFrame) -> DataFrame:
     )
 
 
-# --- disambiguation: page_props source and the isAcronym rule --------------
+# --- disambiguation: the isAcronym rule -----------------------------------
 
 _DISAMBIG_TEMPLATES = ("disambiguation", "disambig", "dab", "begriffsklärung", "homonymie")
 
@@ -147,41 +133,6 @@ def acronym_matches(clean_title: Column, target: Column) -> Column:
         ).otherwise(acc),
     )
     return final == n
-
-
-def load_page_props_disambig(lines: DataFrame, column: str = "value") -> DataFrame:
-    """MySQL ``page_props.sql`` dump lines → DataFrame(page_id) of pages
-    whose 'disambiguation' page prop is set — the reference's primary
-    disambiguation source (Disambiguations.scala:86-113, regex
-    ``\\((\\d+),'disambiguation',''\\)`` over INSERT statements). Pure
-    Catalyst: regexp_extract_all + explode."""
-    ids = F.explode(
-        F.regexp_extract_all(F.col(column), F.lit(r"\((\d+),'disambiguation',''\)"), 1)
-    )
-    return lines.select(ids.alias("page_id")).select(
-        F.col("page_id").cast("long").alias("page_id")
-    ).distinct()
-
-
-# optional parsed-frame column the disambiguations segment reads
-PP_DISAMBIG = "_pp_disambig"
-
-
-def with_page_props_disambig(parsed: DataFrame, page_props_ids: DataFrame) -> DataFrame:
-    """``parsed`` plus the boolean ``PP_DISAMBIG`` column: the page's id is
-    in the page_props disambiguation set (load_page_props_disambig) — the
-    reference's primary disambiguation source, Disambiguations.scala:60-113;
-    the template heuristic stays the fallback (:70-77). The id set is
-    bounded by the number of disambiguation pages (~0.3% of enwiki), so the
-    join broadcasts even at dump scale."""
-    ids = F.broadcast(
-        page_props_ids.select(F.col("page_id").cast("long").alias("_pp_id")).distinct()
-    )
-    return (
-        parsed.join(ids, parsed["page_id"] == ids["_pp_id"], "left")
-        .withColumn(PP_DISAMBIG, F.col("_pp_id").isNotNull())
-        .drop("_pp_id")
-    )
 
 
 # --- per-language configuration tables of the fused segments --------------

@@ -28,19 +28,26 @@ source of truth and the graph is a VIEW (``store_quads`` = explode +
 dedup-on-read), so re-insert bookkeeping is unnecessary by construction;
 the published added/removed channels match the reference's files.
 
-Second divergence: the store holds only per-page output. The batch job's
-graph-level datasets — ``transitive_redirects`` (redirect chains across
-pages), the type-consistency split of ``mappingbased_objects`` (it reads
-the object's types from the object's own page) and ``entity_links`` (a
-surface-form dictionary built from the whole graph) — depend on other
-pages, so they are not in the store and no live diff publishes them.
+Second divergence: the store holds ``page_quads`` only, the batch job's
+``quads`` stage. The job's graph-level datasets — ``transitive_redirects``
+(redirect chains across pages), the type-consistency split of
+``mappingbased_objects`` (it reads the object's types from the object's own
+page) and ``entity_links`` (a surface-form dictionary built from the whole
+graph) — depend on other pages, so they are not in the store and no live
+diff publishes them. Nor are the job's ``per_page`` datasets (``nif_*``,
+``long_abstracts``, ``cited_facts``, ``french_population``,
+``pipeline.per_page_quads``): they are not published live.
+
+The feeder is ``stream_corpus``, a file-based Structured Streaming source of
+corpus rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extractors.fused import explode_quads, page_quads
+from .schema import CORPUS_SCHEMA
 
 QUAD_COLS = ["dataset", "subject", "predicate", "value", "context", "datatype"]
 
@@ -116,6 +123,12 @@ def publish_rows(diff: DataFrame) -> DataFrame:
     )
 
 
+def stream_corpus(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File-based streaming source of corpus rows (new parquet files under
+    ``input_dir`` are picked up incrementally)."""
+    return spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
+
+
 def _latest_version(path: str) -> int | None:
     """Highest COMMITTED store snapshot under ``path`` (``v=<batch_id>``
     dirs). Only directories carrying Spark's ``_SUCCESS`` marker count
@@ -162,7 +175,6 @@ def start_live_stream(
     files instead, which duplicates on redelivery — divergence in our
     favor, documented here."""
     from .parse import prepare
-    from .streaming import stream_corpus
 
     stream = stream_corpus(spark, input_dir)
 

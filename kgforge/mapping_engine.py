@@ -65,6 +65,7 @@ from .namespaces import (
 )
 from .ontology import DBO, OWL_THING, Ontology, default_ontology
 from .vocab import fmt_double
+from .wikitext import _CITE_NAME_RE
 
 # ---------------------------------------------------------------------------
 # mapping rules (the MappingsLoader fixture — FIXTURES.md §3.1)
@@ -419,10 +420,6 @@ def parse_date_interval(raw, lg, resolve=None):
     if low.startswith(since) or re.search(rf"(?:{onward})\s*$", low):
         return start[0], None
     return start[0], start[0]
-# explicit citation-template gate (CitationExtractorConfig: cite*/citation
-# plus the exact de names) — broad prefixes like 'bib.*' wrongly captured
-# 'Bibliography'/'Bible' AND shadowed their mapping rules (ADVICE r2)
-_CITE_RE = re.compile(r"^(cite.*|citation|literatur|internetquelle)$")
 _BARE_URL_RE = re.compile(r"^(?:https?|ftp)://\S+$")
 
 
@@ -553,7 +550,7 @@ def make_mapping_udf(
                     continue
                 # a mapping rule for the template wins over the citation
                 # branch — a mapped template must never be shadowed
-                if _CITE_RE.match(name_l) and name_l not in mp_l:
+                if _CITE_NAME_RE.match(name_l) and name_l not in mp_l:
                     # CitationExtractor (mappings/CitationExtractor.scala:38-62,159-182)
                     pbase = "http://dbpedia.org/property/" if lg == "en" else f"http://{lg}.dbpedia.org/property/"
                     cite = _cite_iri(tpl_params)
@@ -1211,47 +1208,6 @@ def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> Data
 # CitedFactsExtractor (mappings/CitedFactsExtractor.scala:33-97)
 # ---------------------------------------------------------------------------
 
-_CITE_IN_REF_RE = r"(?i)\{\{\s*(?:cite[\s_]|citation\s*[|}]|literatur\s*[|}]|internetquelle\s*[|}])"
-
-
-@F.pandas_udf(T.StringType())
-def _first_cite_iri_udf(raw: pd.Series) -> pd.Series:
-    """Citation-node IRI of the FIRST citation template in a raw <ref> body
-    (CitationExtractor.scala:330-365 id cascade via vocab.citation_iri).
-    Applied only to the cite-bearing ref subset — a tiny fraction of rows."""
-    from .vocab import citation_iri
-    from .wikitext import _find_matching, _split_top_level
-
-    cite_name = re.compile(r"^(cite.*|citation|literatur|internetquelle)$")
-    out = []
-    for s in raw:
-        iri = None
-        if s:
-            i = 0
-            while iri is None:
-                j = s.find("{{", i)
-                if j == -1:
-                    break
-                end = _find_matching(s, j + 2, "{{", "}}", 10)
-                if end == -1:
-                    break
-                parts = _split_top_level(s[j + 2 : end - 2])
-                name = (parts[0] or "").strip().lower().replace("_", " ")
-                if cite_name.match(name):
-                    params, pos_key = [], 0
-                    for p in parts[1:]:
-                        k, eq, v = p.partition("=")
-                        if eq:
-                            params.append((k.strip(), v.strip()))
-                        else:
-                            pos_key += 1
-                            params.append((str(pos_key), p.strip()))
-                    iri = citation_iri(params) or None
-                i = end
-        out.append(iri)
-    return pd.Series(out)
-
-
 def cited_facts_quads(parsed: DataFrame, quads: DataFrame) -> DataFrame:
     """Infobox facts carrying a citation on their source line → the fact
     re-emitted with the citation IRI as provenance context
@@ -1268,16 +1224,15 @@ def cited_facts_quads(parsed: DataFrame, quads: DataFrame) -> DataFrame:
     extraction of the same ``parsed`` pages, e.g. ``Pipeline.run``'s quads
     stage), so the infobox cascade does not run a second time here.
 
-    Scale shape: the ref side is filtered to cite-bearing refs BEFORE the
-    Python IRI minting (tiny subset); the join is a key-partitioned equi-join
-    with AQE handling skew."""
+    The citation IRI is minted by the parse (``cite_iri``, set on refs
+    attributed to a property; wikitext.first_cite_iri), so this is a JVM
+    equi-join with no Python pass; AQE handles skew."""
     cites = (
         parsed.filter(F.col("namespace") == MAIN)
         .select("lang", "subject", F.explode("ref_texts").alias("r"))
-        .filter(F.col("r.prop_iri").isNotNull() & F.col("r.raw").rlike(_CITE_IN_REF_RE))
+        .filter(F.col("r.cite_iri").isNotNull())
         .select("lang", "subject", F.col("r.prop_iri").alias("predicate"),
-                _first_cite_iri_udf(F.col("r.raw")).alias("context"))
-        .filter(F.col("context").isNotNull())
+                F.col("r.cite_iri").alias("context"))
         .distinct()
     )
     props = quads.filter(F.col("dataset") == V.INFOBOX_PROPERTIES).select(

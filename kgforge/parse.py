@@ -180,7 +180,8 @@ def parse_corpus_pandas(df: DataFrame) -> DataFrame:
             from .dataparsers import property_iri as _piri
 
             pdf["ref_texts"] = [
-                [{"key": k, "prop_iri": (_piri(lg, k) if k else None), "text": tx, "raw": rw}
+                [{"key": k, "prop_iri": (_piri(lg, k) if k else None), "text": tx,
+                  "cite_iri": (wikitext.first_cite_iri(rw) if k else None)}
                  for k, tx, rw in r.refs]
                 for r, lg in zip(rows, langs)
             ]

@@ -8,8 +8,9 @@ Stage DAG::
 
     parsed → tred → quads ┬→ transitive_redirects ─┐
                           ├→ type_consistency ─────┤
-                          └→ entity_links ─────────┼→ graph
-           wikidata_quads (optional second corpus) ┘
+                          ├→ entity_links ─────────┼→ graph
+                          │  wikidata_quads ───────┘ (optional second corpus)
+                          └→ per_page
 
 ``quads`` is ``extractors.fused.page_quads`` exploded: the per-page
 extraction the live store and single-page debug use too. ``wikidata_quads``
@@ -25,26 +26,32 @@ map (``tred``, no stage of its own: a small driver-side dict) is read from
 that stage, so a resumed job reads it from the committed parquet. The
 ``quads`` stage is one select over ``parsed`` that runs the infobox, mapping
 and table-mapping cascades with ``tred``: after the parse, each page crosses
-into Python once more. After ``run`` the instance holds ``tred``, ``parsed``
-and ``quads`` for callers that build more on them.
+into Python once more. After ``run`` the instance holds ``tred``, ``parsed``,
+``quads`` and ``per_page`` for callers that build more on them.
 
-The three stages after ``quads`` (and ``wikidata_quads``) need nothing but
-``parsed`` and ``quads``, and each is a small, driver-bound job that cannot
-fill the cluster alone, so with a workdir they run concurrently
+The four stages after ``quads`` (and ``wikidata_quads``) need nothing but
+``parsed`` and ``quads``; most are small, driver-bound jobs that cannot fill
+the cluster alone, so with a workdir they run concurrently
 (``session.concurrently``, under the caller's job group); ``graph`` starts
 once all of them have committed.
 
-This is the one definition of the graph. ``jobs/extract.py`` runs it with a
-workdir; the driver contract (``__spark_entry__._engine_quads``) runs it in
-memory and appends three per-page datasets that only it serves
-(``nif_*``, ``long_abstracts``, ``cited_facts``). Those are unique by
-construction (``cited_facts`` including its citation context, which the dedup
-key ignores) and no stage reads them, so they are appended after the dedup.
+``per_page`` (``per_page_quads``) holds the per-page datasets ``nif_*``,
+``long_abstracts``, ``cited_facts`` and ``french_population``: JVM selects
+and one join over ``parsed`` and ``quads``, with no Python pass (the
+citation IRIs are minted by the parse). No stage reads them and they are
+unique by construction (``cited_facts`` including its citation context,
+which the dedup key ignores), so they stay out of the dedup and out of
+``graph``, the golden-checked set.
+
+This is the one definition of the graph and of the per-page datasets.
+``jobs/extract.py`` runs it with a workdir and exports ``graph`` and
+``per_page``; the driver contract (``__spark_entry__._engine_quads``) runs
+it in memory and serves ``graph ∪ per_page``.
 
 In memory (``workdir=None``) a stage is a ``localCheckpoint`` coalesced to the
-default parallelism, except the single-consumer ones (the three stages
-after ``quads``, and ``graph``), which stay lazy so the final action runs
-them in one job.
+default parallelism, except the single-consumer ones (the stages after
+``quads``, and ``graph``), which stay lazy so the final action runs them in
+one job.
 
 Checkpoint contract: every stage writes parquet under
 ``<workdir>/<stage>/`` plus one row in ``<workdir>/_lineage`` recording
@@ -76,8 +83,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .extractors.fused import explode_quads, page_quads
+from .extractors.structural import extract_fr_population, extract_long_abstracts
 from .linker import entity_link_quads
-from .mapping_engine import type_consistency
+from .mapping_engine import cited_facts_quads, type_consistency
+from .nif import nif_quads
 from .parse import prepare
 from .redirects import (
     dispatch_relevant_targets,
@@ -149,6 +158,19 @@ def _lineage(spark: SparkSession, workdir: str, stage: str, rows: int, wall_ms: 
         spark,
         os.path.join(workdir, "_lineage", f"part-{stage}-{uuid.uuid4().hex}.parquet"),
         buf.getvalue(),
+    )
+
+
+def per_page_quads(parsed: DataFrame, quads: DataFrame) -> DataFrame:
+    """The per-page datasets kept out of ``graph``: ``nif_*``,
+    ``long_abstracts``, ``cited_facts`` (the infobox facts of ``quads``
+    with a citation on their line) and ``french_population``. All JVM
+    selects and one join over the parse columns; no Python pass."""
+    return (
+        nif_quads(parsed)
+        .unionByName(extract_long_abstracts(parsed))
+        .unionByName(cited_facts_quads(parsed, quads))
+        .unionByName(extract_fr_population(parsed))
     )
 
 
@@ -286,8 +308,9 @@ class Pipeline:
         folded into one resumable job.
 
         Sets ``self.parsed`` (the parse stage), ``self.tred`` (the
-        template-redirect map read from it) and ``self.quads`` (the quads
-        stage)."""
+        template-redirect map read from it), ``self.quads`` (the quads
+        stage) and ``self.per_page`` (the per-page datasets outside the
+        returned graph)."""
         self.parsed = parsed = self._stage("parsed", lambda: prepare(corpus))
         # template-redirect map (Redirects.load analog, read from the same
         # parse): a tiny driver-side dict shipped inside the UDF closures, so
@@ -314,8 +337,12 @@ class Pipeline:
             stages.append(
                 ("wikidata_quads", lambda: wikidata_all_quads(wikidata_corpus), ("dataset",))
             )
+        # outside the graph, which is checked against the golden set quad
+        # for quad, and outside its dedup: unique by construction
+        stages.append(("per_page", lambda: per_page_quads(parsed, quads), ("dataset",), False))
+        *derived, self.per_page = self._independent(*stages)
         all_quads = quads
-        for df in self._independent(*stages):
+        for df in derived:
             all_quads = all_quads.unionByName(df)
         # DeduplicatingDestination analog: exact-duplicate quads dropped
         # (dropDuplicates does a partial aggregate before the shuffle)

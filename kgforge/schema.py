@@ -91,7 +91,7 @@ REF_TYPE = T.StructType(
         T.StructField("key", T.StringType(), True),       # infobox param key or null
         T.StructField("prop_iri", T.StringType(), True),  # minted at parse time
         T.StructField("text", T.StringType(), True),      # plain ref content
-        T.StructField("raw", T.StringType(), True),       # raw body (cited facts)
+        T.StructField("cite_iri", T.StringType(), True),  # first citation in a keyed ref
     ]
 )
 

@@ -23,7 +23,6 @@ from collections import defaultdict
 from pyspark.sql import SparkSession
 
 from .extractors.fused import explode_quads, page_quads
-from .extractors.structural import extract_long_abstracts
 from .media import (
     commons_kml_quads,
     commons_resource_quads,
@@ -32,8 +31,8 @@ from .media import (
     image_meta_quads,
     media_quads,
 )
-from .nif import nif_quads
 from .parse import prepare
+from .pipeline import per_page_quads
 from .schema import CORPUS_SCHEMA
 
 
@@ -48,11 +47,13 @@ def extract_page(
     title: str = "Debug page",
     lang: str = "en",
     extra_pages: list[tuple[str, str]] | None = None,
-    include: tuple[str, ...] = ("fused", "nif", "long_abstracts", "media", "image_meta"),
+    include: tuple[str, ...] = ("fused", "per_page", "media", "image_meta"),
 ) -> dict[str, list[dict]]:
     """Run every extractor group over one in-memory page and return its quads
     grouped by dataset. The ``"fused"`` group is the batch job's per-page
-    extraction (``page_quads``, default mapping rules and ontology).
+    extraction (``page_quads``, default mapping rules and ontology), the
+    ``"per_page"`` group its ``per_page`` stage (``pipeline.per_page_quads``:
+    NIF, long abstracts, cited facts, fr population).
 
     ``extra_pages`` are additional (title, content) pages parsed alongside —
     e.g. a ``File:…`` page so the non-free gate has something to harvest, or
@@ -67,12 +68,12 @@ def extract_page(
     parsed.count()  # materialize BEFORE the fan-out (persist-race lesson)
     try:
         parts = []
+        if "fused" in include or "per_page" in include:
+            quads = explode_quads(page_quads(parsed))
         if "fused" in include:
-            parts.append(explode_quads(page_quads(parsed)))
-        if "nif" in include:
-            parts.append(nif_quads(parsed))
-        if "long_abstracts" in include:
-            parts.append(extract_long_abstracts(parsed))
+            parts.append(quads)
+        if "per_page" in include:
+            parts.append(per_page_quads(parsed, quads))
         if "media" in include:
             parts.append(media_quads(parsed))
             parts.append(commons_resource_quads(parsed))

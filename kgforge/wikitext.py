@@ -31,6 +31,7 @@ from bisect import bisect_right
 from dataclasses import dataclass, field
 
 from .namespaces import LANG_CODES, MAIN, split_namespace, normalize_title, wiki_encode
+from .vocab import citation_iri
 
 MAX_NESTING = 10
 MAX_ERRORS = 1000
@@ -110,6 +111,50 @@ def _extract_refs(content: str) -> list[tuple[str | None, str, str]]:
             # — CitedFactsExtractor needs the raw cite template
             out.append((key, text, body.strip()))
     return out
+
+
+# gate for a citation template in a <ref> body; ASCII-only whitespace and
+# case folding, as java.util.regex's \s and (?i) (the gate was a Spark rlike)
+_CITE_IN_REF_RE = re.compile(
+    r"\{\{[ \t\n\x0b\f\r]*(?:cite[ \t\n\x0b\f\r_]|citation[ \t\n\x0b\f\r]*[|}]"
+    r"|literatur[ \t\n\x0b\f\r]*[|}]|internetquelle[ \t\n\x0b\f\r]*[|}])",
+    re.IGNORECASE | re.ASCII,
+)
+# explicit citation-template names (CitationExtractorConfig: cite*/citation
+# plus the exact de names) — broad prefixes like 'bib.*' wrongly captured
+# 'Bibliography'/'Bible' AND shadowed their mapping rules (ADVICE r2)
+_CITE_NAME_RE = re.compile(r"^(cite.*|citation|literatur|internetquelle)$")
+
+
+def first_cite_iri(raw: str) -> str | None:
+    """Citation-node IRI of the FIRST citation template in a raw <ref> body
+    (CitationExtractor.scala:330-365 id cascade via vocab.citation_iri), or
+    None when the body carries no citation template."""
+    if not _CITE_IN_REF_RE.search(raw):
+        return None
+    i = 0
+    while True:
+        j = raw.find("{{", i)
+        if j == -1:
+            return None
+        end = _find_matching(raw, j + 2, "{{", "}}", 10)
+        if end == -1:
+            return None
+        parts = _split_top_level(raw[j + 2 : end - 2])
+        name = (parts[0] or "").strip().lower().replace("_", " ")
+        if _CITE_NAME_RE.match(name):
+            params, pos_key = [], 0
+            for p in parts[1:]:
+                k, eq, v = p.partition("=")
+                if eq:
+                    params.append((k.strip(), v.strip()))
+                else:
+                    pos_key += 1
+                    params.append((str(pos_key), p.strip()))
+            iri = citation_iri(params)
+            if iri:
+                return iri
+        i = end
 
 
 # <gallery> capture for GalleryExtractor (mappings/GalleryExtractor.scala:

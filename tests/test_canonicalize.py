@@ -277,24 +277,6 @@ def test_remove_remaining_tags(spark):
     assert got["s4"] == "scoped </div> out"  # dataset out of scope
 
 
-def test_uri_same_as_iri_extractor(spark):
-    """UriSameAsIriExtractor (per-page twin of the CreateIriSameAsUriLinks
-    script): non-ASCII subjects emit (iri, owl:sameAs, uri); pure-ASCII
-    subjects emit nothing."""
-    from kgforge.extractors.structural import extract_uri_same_as_iri
-    from kgforge.parse import prepare
-    from kgforge.schema import CORPUS_SCHEMA
-
-    rows = [("r", "p/ベルリン.wiki", "c", "ja", "Text\n"),
-            ("r", "p/Plain.wiki", "c", "en", "Text\n")]
-    df = prepare(spark.createDataFrame(rows, CORPUS_SCHEMA))
-    got = [(r.subject, r.value) for r in extract_uri_same_as_iri(df).collect()]
-    assert got == [(
-        "http://ja.dbpedia.org/resource/ベルリン",
-        "http://ja.dbpedia.org/resource/%E3%83%99%E3%83%AB%E3%83%AA%E3%83%B3",
-    )]
-
-
 def test_unescape_java():
     from kgforge.canonicalize import unescape_java
 

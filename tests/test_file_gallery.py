@@ -79,47 +79,6 @@ def test_file_types_quads(spark):
     assert not any("Noext" in s for s in by_subj)
 
 
-def test_page_props_disambiguations(spark):
-    """Disambiguations page_props path (Disambiguations.scala:86-113): a page
-    disambig by page_props but WITHOUT the template still disambiguates; the
-    template heuristic remains as fallback."""
-    from kgforge.extractors.structural import (
-        load_page_props_disambig,
-        with_page_props_disambig,
-    )
-
-    rows = [
-        ("r", "a/Mercury.wiki", "c", "en",
-         "'''Mercury''' may refer to:\n* [[Mercury Planet]]\n* [[Mercury Metal]]\n"),
-        ("r", "a/Venus.wiki", "c", "en",
-         "'''Venus''' may refer to:\n\n{{Disambiguation}}\n* [[Venus Planet]]\n"),
-        ("r", "a/Mars.wiki", "c", "en", "'''Mars''' is a planet near [[Mars Moon]].\n"),
-    ]
-    parsed = prepare(spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
-    )).persist()
-    mercury_id = parsed.filter("title = 'Mercury'").first().page_id
-    sql_dump = (
-        "INSERT INTO `page_props` VALUES "
-        f"({mercury_id},'disambiguation',''),({mercury_id},'defaultsort','M'),"
-        "(999999999,'disambiguation','');"
-    )
-    lines = spark.createDataFrame([(sql_dump,)], "value string")
-    ids = load_page_props_disambig(lines)
-    assert {r.page_id for r in ids.collect()} == {mercury_id, 999999999}
-    marked = with_page_props_disambig(parsed, ids)
-    got = {(r.subject, r.value) for r in run_extractors(marked, ["disambiguations"]).collect()}
-    merc = "http://dbpedia.org/resource/Mercury"
-    assert (merc, "http://dbpedia.org/resource/Mercury_Planet") in got
-    assert (merc, "http://dbpedia.org/resource/Mercury_Metal") in got
-    # template fallback still active; non-disambig page emits nothing
-    assert any(s.endswith("/Venus") for s, _ in got)
-    assert not any(s.endswith("/Mars") for s, _ in got)
-    # without page_props, Mercury (no template) emits nothing
-    tpl_only = {(r.subject, r.value) for r in run_extractors(parsed, ["disambiguations"]).collect()}
-    assert not any(s.endswith("/Mercury") for s, _ in tpl_only)
-
-
 def test_fr_population_extractor(spark):
     """fr.PopulationExtractor (mappings/fr/PopulationExtractor.scala:27-55):
     fr Template-ns population-evolution pages -> city populationTotal;

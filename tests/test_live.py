@@ -171,6 +171,38 @@ def test_write_diff_publishes_ntriples(spark, store1, tmp_path):
     assert bad.count() == 0
 
 
+def test_stream_corpus_reads_only_new_files(spark, tmp_path):
+    """``stream_corpus`` reads corpus rows (the ``CORPUS_SCHEMA`` columns
+    only) from parquet files under its directory; a restart on the same
+    checkpoint reads only the files added since."""
+    import os
+
+    import pandas as pd
+
+    from kgforge.live import stream_corpus
+
+    in_dir, out_dir, ckpt = f"{tmp_path}/in", f"{tmp_path}/out", f"{tmp_path}/ckpt"
+    os.makedirs(in_dir)
+    cols = ["repo", "path", "commit", "lang", "content", "revision_id"]
+
+    def run(name, rows):
+        pd.DataFrame(rows, columns=cols).to_parquet(f"{in_dir}/{name}.parquet")
+        q = (
+            stream_corpus(spark, in_dir).writeStream.format("parquet")
+            .option("path", out_dir).option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        out = spark.read.parquet(out_dir)
+        assert out.columns == ["repo", "path", "commit", "lang", "content"]
+        return sorted(tuple(r) for r in out.collect())
+
+    a = ("r", "a/A.wiki", "c1", "en", "A text")
+    b = ("r", "a/B.wiki", "c2", "en", "B text")
+    assert run("b1", [a + (1,)]) == [a]
+    assert run("b2", [b + (2,)]) == [a, b]
+
+
 def test_live_stream_full_cycle(spark, tmp_path, job_quads_v2):
     """Feeder → re-extract → diff → publish → store update, as one
     streaming job: after batch 1 (snapshot v1) and batch 2 (the changed

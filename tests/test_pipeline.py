@@ -12,7 +12,8 @@ from kgforge.emit import read_ntriples, write_ntriples
 from kgforge.pipeline import run_pipeline
 
 
-STAGES = ("parsed", "quads", "transitive_redirects", "type_consistency", "entity_links", "graph")
+STAGES = ("parsed", "quads", "transitive_redirects", "type_consistency", "entity_links",
+          "per_page", "graph")
 
 
 def test_resume_and_lineage(spark):
@@ -115,7 +116,7 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch, job_gro
         run_pipeline(spark, corpus, workdir=wd)
     assert not os.path.exists(wd + "/type_consistency/_SUCCESS")
     assert not os.path.exists(wd + "/graph")
-    for st in ("parsed", "quads", "transitive_redirects", "entity_links"):
+    for st in ("parsed", "quads", "transitive_redirects", "entity_links", "per_page"):
         assert os.path.exists(f"{wd}/{st}/_SUCCESS"), st
     monkeypatch.undo()
 
@@ -128,9 +129,9 @@ def test_failed_stage_propagates_and_rerun_completes(spark, monkeypatch, job_gro
 
 def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
     """The driver contract's in-memory graph is the resumable job's graph:
-    without the three per-page datasets only the driver serves,
-    ``_engine_quads`` equals ``run_pipeline``'s parquet stages as a
-    distinct quad set."""
+    ``_engine_quads`` equals the union of a workdir run's ``graph`` and
+    ``per_page`` parquet stages as a distinct quad set, per-page datasets
+    included."""
     import random
 
     import pyarrow as pa
@@ -155,19 +156,19 @@ def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
     sf_dir = str(tmp_path)
 
     try:
-        engine = E._engine_quads(spark, sf_dir)
-        driver_only = F.col("dataset").startswith("nif_") | F.col("dataset").isin(
+        cached = E._engine_quads(spark, sf_dir).select(*key).distinct()
+        per_page = F.col("dataset").startswith("nif_") | F.col("dataset").isin(
             "long_abstracts", "cited_facts"
         )
-        assert engine.filter(driver_only).count() > 0
-        cached = engine.filter(~driver_only).select(*key).distinct()
+        assert cached.filter(per_page).count() > 0
 
         p = Pipeline(spark, str(tmp_path / "wd"))
-        job = p.run(corpus_from_documents(spark, sf_dir)).select(*key).distinct()
+        graph = p.run(corpus_from_documents(spark, sf_dir))
+        job = graph.unionByName(p.per_page).select(*key).distinct()
         assert job.count() == cached.count() > 0
         assert job.exceptAll(cached).count() == 0
     finally:
-        for k in (sf_dir, sf_dir + "::parsed"):
+        for k in (sf_dir, sf_dir + "::parsed", sf_dir + "::tred"):
             E._QUADS_CACHE.pop(k, None)
 
 
@@ -208,6 +209,72 @@ def test_run_resolves_template_redirects_from_the_parse(spark):
     assert any(pred.endswith("/birthDate") for pred, _, _ in ib["Bob"])
     bare = infobox(run_extractors(p.parsed, ["infobox"]))
     assert bare["Bob"] != ib["Bob"]
+
+
+def test_driver_hybrid_infobox_sees_template_redirects(spark, monkeypatch):
+    """``kg_hybrid_infobox`` splits the raw infobox harvest with the run's
+    template-redirect map: a page whose date goes through the ``{{Bd}}``
+    redirect gets the same mapped/unmapped rows as one using
+    ``{{Birth date}}``."""
+    import __spark_entry__ as E
+
+    monkeypatch.setattr(E, "corpus_from_documents", lambda spark, sf_dir: _tred_corpus(spark))
+    key = "tred-corpus"
+    try:
+        by_page = {"Alice": set(), "Bob": set()}
+        for r in E._kg_hybrid_infobox(spark, key).collect():
+            by_page[r.subject.rsplit("/", 1)[1]].add((r.dataset, r.predicate, r.value, r.datatype))
+        assert any(pred.endswith("/birthDate") for _, pred, _, _ in by_page["Bob"])
+        assert by_page["Bob"] == by_page["Alice"]
+    finally:
+        for k in ("", "::parsed", "::tred", "::hybrid"):
+            E._QUADS_CACHE.pop(key + k, None)
+
+
+def test_parse_mints_cite_iri_for_attributed_refs(spark):
+    """The parse carries each ref's citation IRI: a ref attributed to an
+    infobox property gets the IRI of the first citation template in its
+    body; a ref without one, or outside the infobox, gets none."""
+    from kgforge.parse import prepare
+    from kgforge.vocab import citation_iri
+
+    body = (
+        "{{Infobox person\n"
+        "|name=Ann<ref>{{small|x}} {{cite web|url=http://a.example|title=T}}</ref>\n"
+        "|occupation=Writer<ref>Plain source</ref>\n"
+        "}}\n"
+        "Ann wrote books.<ref>{{cite book|isbn=123}}</ref>\n"
+    )
+    parsed = prepare(spark.createDataFrame(
+        [("r", "t/Ann.wiki", "c", "en", body)],
+        "repo string, path string, commit string, lang string, content string",
+    ))
+    refs = [(r.key, r.cite_iri) for r in parsed.first().ref_texts]
+    assert refs == [
+        ("name", citation_iri([("url", "http://a.example"), ("title", "T")])),
+        ("occupation", None),
+        (None, None),
+    ]
+
+
+def test_per_page_stage_holds_fr_population(spark):
+    """``french_population`` is a per-page dataset: the ``per_page`` stage
+    carries the city total of a fr population-evolution page and ``graph``
+    does not."""
+    from kgforge.pipeline import Pipeline
+
+    rows = [
+        ("r", "t/Modèle:Données%2FLyon%2Févolution population.wiki", "c", "fr",
+         "{{Pyramide|pop=12345|an=1999}}\n"),
+        ("r", "t/Lyon.wiki", "c", "fr", "'''Lyon''' est une ville.\n"),
+    ]
+    p = Pipeline(spark)
+    graph = p.run(spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ))
+    pop = p.per_page.filter(F.col("dataset") == "french_population").collect()
+    assert [(r.subject, r.value) for r in pop] == [("http://fr.dbpedia.org/resource/Lyon", "12345")]
+    assert graph.filter(F.col("dataset") == "french_population").count() == 0
 
 
 def test_run_parses_the_corpus_once(spark, monkeypatch):

@@ -1,8 +1,8 @@
 """Physical-plan shape of the extractor suite and the parse gate, over the
 small real-page fixture: the whole suite, and the job's quads stage with the
-mapping cascades, is one narrow pass (no shuffle, one explode), a subset that skips the infobox segment carries no Python UDF, and
-the parse's namespace gate keeps its no_pushdown guard through the
-optimizer."""
+mapping cascades, is one narrow pass (no shuffle, one explode), a subset that skips the infobox segment carries no Python UDF, the
+per_page stage carries none either, and the parse's namespace gate keeps
+its no_pushdown guard through the optimizer."""
 
 import re
 
@@ -36,14 +36,16 @@ def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
     checkpointed parse: the segments and both mapping cascades in one select,
     so no Union, no Exchange, a single explode and one Python pass that
     runs the infobox, mapping and table cascades (the explode's inferred
-    non-empty filter would evaluate them a second time)."""
+    non-empty filter would evaluate them a second time). The ``per_page``
+    stage over the same leaves runs no Python at all: the parse mints the
+    citation IRIs its cited facts carry."""
     from kgforge.pipeline import Pipeline
 
     plans = {}
     stage = Pipeline._stage
 
     def capture(self, name, compute, *args, **kw):
-        if name == "quads":
+        if name in ("quads", "per_page"):
             plans[name] = _physical(compute())
         return stage(self, name, compute, *args, **kw)
 
@@ -57,6 +59,9 @@ def test_quads_stage_is_one_select_over_the_parse_leaf(spark, monkeypatch):
     assert len(evals) == 1, plan
     for udf in ("infobox_props_udf", "mapping_udf", "table_udf"):
         assert udf in evals[0], evals[0]
+    per_page = plans["per_page"]
+    assert "cited_facts" in per_page and "nif_context" in per_page, per_page
+    assert "ArrowEvalPython" not in per_page and "BatchEvalPython" not in per_page, per_page
 
 
 @pytest.mark.plan_shape

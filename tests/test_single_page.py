@@ -74,9 +74,10 @@ def test_extract_page_with_side_pages(spark):
 
 
 def test_extract_page_scoped_include(spark):
-    out = extract_page(spark, PAGE, title="Testville", include=("nif",))
-    assert set(out) <= {"nif_context", "nif_page_structure", "nif_text_links"}
-    assert out["nif_context"]
+    out = extract_page(spark, PAGE, title="Testville", include=("per_page",))
+    assert set(out) <= {"nif_context", "nif_page_structure", "nif_text_links",
+                        "long_abstracts", "cited_facts", "french_population"}
+    assert out["nif_context"] and out["long_abstracts"]
 
 
 def test_infobox_ignore_properties_language_scoped(spark):

@@ -193,3 +193,47 @@ def test_plain_text_unchanged_by_marker_machinery():
     for l in r.links:
         if l.begin is not None:
             assert r.plain[l.begin:l.end].strip() != ""
+
+
+# the cited-facts gate as a Spark rlike (java.util.regex) before the parse
+# minted the citation IRI; the Python gate must accept exactly the same bodies
+_JAVA_CITE_GATE = r"(?i)\{\{\s*(?:cite[\s_]|citation\s*[|}]|literatur\s*[|}]|internetquelle\s*[|}])"
+
+
+def test_cite_gate_matches_java_rlike(spark):
+    from pyspark.sql import functions as F
+
+    from kgforge.wikitext import _CITE_IN_REF_RE
+
+    bodies = [
+        "{{cite web|url=http://a.example}}", "{{Cite_book|isbn=1}}", "{{ CITE\tnews|x=1}}",
+        "{{cite}}", "{{citeweb|url=u}}", "{{citation|url=u}}", "{{Citation }}",
+        "{{citationx|url=u}}", "{{Literatur|Titel=T}}", "{{internetquelle}}",
+        "{{\x0bcite web}}", "{{\fcite\rweb}}", "{{cite\x0bweb}}",
+        # Unicode whitespace and case folds that Python's default \s and
+        # IGNORECASE accept but Java's do not
+        "{{\u00a0cite web|url=u}}", "{{\u2003citation|url=u}}", "{{cite\u3000web|url=u}}",
+        "{{CİTE web}}", "{{cıtation|x}}", "{{lıteratur|x}}",
+        "plain text", "", "{cite web}", "{{ {{cite web|url=u}} }}",
+    ]
+    df = spark.createDataFrame([(b,) for b in bodies], "raw string")
+    java = [r.ok for r in df.select(F.col("raw").rlike(_JAVA_CITE_GATE).alias("ok")).collect()]
+    assert [bool(_CITE_IN_REF_RE.search(b)) for b in bodies] == java
+    assert any(java) and not all(java)
+
+
+def test_first_cite_iri():
+    from kgforge.vocab import citation_iri
+    from kgforge.wikitext import first_cite_iri
+
+    assert first_cite_iri("{{cite web|url=http://a.example|title=T}}") == citation_iri(
+        [("url", "http://a.example"), ("title", "T")]
+    )
+    # the first citation template wins; other templates are skipped
+    assert first_cite_iri(
+        "{{small|x}} {{Cite book|isbn=123}} {{cite web|url=http://b.example}}"
+    ) == citation_iri([("isbn", "123")])
+    # no gate match, or a gate match without a citation template name
+    assert first_cite_iri("Plain source") is None
+    assert first_cite_iri("{{cite}}") is None
+    assert first_cite_iri("{{ cite web|url=http://a.example}}") is None
