@@ -2528,7 +2528,6 @@ def _qc_over(d: DataFrame) -> DataFrame:
 
 _BUDGET_FRAC = 0.25  # token budget as a fraction of corpus tokens
 _BS_BUCKETS = 4096  # score buckets for the distributed threshold search
-_LAST_BS_DOCS: list = []  # one-slot cache for the per-doc stats table
 _BS_COLLECT_CAP = 4096  # max rows any threshold-search step may collect
 
 
@@ -2552,17 +2551,13 @@ def _budget_select(spark, sf_dir):
     an exact ordered cumsum. Net semantics equal the exact greedy prefix
     because the bucket function is monotone in score and ties share a
     bucket. The DuckDB oracle replays the exact window cumsum."""
-    from kgforge.caching import one_slot_persist
-
     d = _t(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     # the narrow (doc_id, n_tokens, score, bkt) table feeds the threshold
-    # search probes AND the final decision — persisted per call (one-slot
-    # lifecycle) so the corpus is tokenized ONCE, and every later pass
-    # moves 16 bytes/doc instead of re-reading text (guide §8: decide
-    # with small rows)
-    docs = one_slot_persist(
-        _LAST_BS_DOCS,
+    # search probes AND the final decision — checkpointed by this call so
+    # the corpus is tokenized ONCE, and every later pass moves 16 bytes/doc
+    # instead of re-reading text (guide §8: decide with small rows)
+    docs = (
         d.select(
             "doc_id",
             F.size(toks).cast("bigint").alias("n_tokens"),
@@ -2575,7 +2570,8 @@ def _budget_select(spark, sf_dir):
                 F.lit(_BS_BUCKETS - 1),
                 F.floor(F.col("score") * _BS_BUCKETS).cast("int"),
             ),
-        ),
+        )
+        .localCheckpoint()
     )
     stats = {
         r.bkt: (r.toks, r.n)

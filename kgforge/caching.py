@@ -1,16 +1,18 @@
-"""Bounded persist lifecycle shared by repeat-call cache sites, and the
-bounded size gate (``fits``) shared by the driver-or-distributed decisions.
+"""Plan and size helpers shared by the operators: the pushdown guard
+(``no_pushdown``), the bounded size gate (``fits``) behind the
+driver-or-distributed decisions, driver rows as a local relation
+(``local_strings``) and per-round lineage truncation
+(``truncate_lineage``).
 
-``one_slot_persist`` persists a DataFrame and releases the PREVIOUS call's
-table for the same slot — the idiom that fixed the round-2 linker leak
-(a persist per call that was never unpersisted: the bench doubled storage
-by running every query twice).  Side effect callers accept: a still-lazy
-result DataFrame from an earlier call loses its cache when a later call
-claims the slot — it recomputes correctly, just without the cached read.
+No module keeps a cached DataFrame between calls. A derived table that
+feeds several actions of one call is a ``localCheckpoint`` owned by that
+call (its blocks go with the frame); inputs that are already leaves (a
+pipeline stage) are read as they are.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -48,13 +50,13 @@ def fits(df: DataFrame, cap: int) -> bool:
     return cap > 0 and df.limit(cap + 1).count() <= cap
 
 
-def one_slot_persist(slot: list, df: DataFrame) -> DataFrame:
-    """Persist ``df``; unpersist whatever the slot held before."""
-    df = df.persist()
-    while slot:
-        slot.pop().unpersist()
-    slot.append(df)
-    return df
+def local_strings(spark, names: tuple[str, ...], rows) -> DataFrame:
+    """A table of string columns ``names`` from driver-side ``rows``, made
+    through Arrow so that it is a local relation: plans read it (collect,
+    broadcast) without a Spark job, where ``createDataFrame`` of a list
+    parallelizes an RDD that costs one."""
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table([pa.array(c, pa.string()) for c in cols], names=list(names)))
 
 
 _REGISTERED_CKPT_DIR: list = []  # first checkpoint dir registered on the context

@@ -32,6 +32,9 @@ Scale notes (the round-1 verdict's #1 scale-killer, fixed here):
   boost is recovered with a narrow (page, link) pair join instead).
 - Candidate fanout is documented and bounded: ≤ 3 rows per token
   (1/2/3-grams), capitalized-first-token filtered before any join.
+- No module-level cache: the dictionary reads its source datasets from the
+  pipeline's ``quads`` leaf, and the pruned dict is a ``localCheckpoint``
+  owned by the ``link_mentions`` call, shared by the size probe and the join.
 """
 
 from __future__ import annotations
@@ -50,28 +53,18 @@ MIN_FORM_COUNT = 1        # raise at web scale to drop single-occurrence aliases
 BROADCAST_MAX_ROWS = 2_000_000  # pruned-dict broadcast gate (rows)
 
 
-# one-slot cache for the slim (anchor/labels/redirects) projection of the
-# quad graph: build_surface_forms derives FOUR inputs from these three
-# datasets, and without the slot each derivation re-scans the full quad
-# cache (~1s per scan at sf0.1 against <10k useful rows)
-_LAST_SF_SRC: list = []
-
-
 def build_surface_forms(quads: DataFrame) -> DataFrame:
     """quads → (surface_form, entity_iri, language, n, prior).
 
     Per-language, like the reference's extraction: cross-language IRI
     unification is a separate post-processing concern (CanonicalizeUris,
     scripts/) — without the language scope, red-link IRIs minted by pages of
-    another language alias the same surface form."""
-    from .caching import one_slot_persist
+    another language alias the same surface form.
 
-    quads = one_slot_persist(
-        _LAST_SF_SRC,
-        quads.filter(
-            F.col("dataset").isin(V.ANCHOR_TEXT, V.LABELS, V.REDIRECTS)
-        ).select("dataset", "subject", "value", "language"),
-    )
+    ``quads`` is read four times (anchors, labels, and both sides of the
+    redirect-title join), so it should be a leaf: the pipeline's ``quads``
+    stage is a dataset-partitioned parquet table or a local checkpoint, and
+    each read prunes to its dataset."""
     anchors = quads.filter(F.col("dataset") == V.ANCHOR_TEXT).select(
         F.lower(F.trim(F.col("value"))).alias("surface_form"),
         F.col("subject").alias("entity_iri"),
@@ -205,10 +198,6 @@ def _candidate_mentions(parsed: DataFrame) -> DataFrame:
     )
 
 
-# one-slot cache: the previous call's persisted dict (released on next call)
-_LAST_SF: list = []
-
-
 def link_mentions(
     parsed: DataFrame,
     surface_forms: DataFrame,
@@ -232,12 +221,12 @@ def link_mentions(
             F.col("prior"),
         )
     )
-    # persist the pruned dict so the size probe and the join share ONE
-    # computation, but keep the storage bounded: each call releases the
-    # previous call's dict (kgforge/caching.py — the round-2 leak fix)
-    from .caching import fits, one_slot_persist
+    # checkpointed so the size probe and the join share ONE computation of
+    # the dict; the blocks are owned by this call's frame (Spark's context
+    # cleaner drops them once it is garbage), so nothing outlives the run
+    from .caching import fits
 
-    sf = one_slot_persist(_LAST_SF, sf)
+    sf = sf.localCheckpoint()
     small = fits(sf, broadcast_max_rows)
 
     cands = _candidate_mentions(parsed)

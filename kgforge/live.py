@@ -52,11 +52,19 @@ from .schema import CORPUS_SCHEMA
 QUAD_COLS = ["dataset", "subject", "predicate", "value", "context", "datatype"]
 
 
-def page_store(parsed: DataFrame, template_redirects: dict[str, str] | None = None) -> DataFrame:
+def page_store(
+    parsed: DataFrame,
+    template_redirects: dict[str, str] | None = None,
+    mappings=None,
+    ontology=None,
+) -> DataFrame:
     """Parsed corpus → the live cache: (page_id, language, quads array).
     Persist it partitioned/bucketed by page_id for O(batch) incremental
-    updates; ``store_quads`` recovers the flat graph."""
-    return page_quads(parsed, template_redirects)
+    updates; ``store_quads`` recovers the flat graph. ``mappings`` and
+    ``ontology`` are the mapping rules and ontology, as ``Pipeline.run``
+    takes them: pass the job's own so the store publishes its mapping
+    quads."""
+    return page_quads(parsed, template_redirects, mappings, ontology)
 
 
 def store_quads(store: DataFrame) -> DataFrame:
@@ -161,6 +169,8 @@ def start_live_stream(
     publish_dir: str,
     checkpoint_dir: str,
     template_redirects: dict[str, str] | None = None,
+    mappings=None,
+    ontology=None,
 ):
     """The whole DBpedia-Live cycle as ONE Structured Streaming job
     (feeder → PageProcessor → Publisher, live/.../main/Main.java wiring):
@@ -173,13 +183,14 @@ def start_live_stream(
     ``store_dir/v=<id>`` (overwrite); a replayed batch rewrites identical
     deterministic content. The reference's Publisher appends timestamped
     files instead, which duplicates on redelivery — divergence in our
-    favor, documented here."""
+    favor, documented here. ``template_redirects``, ``mappings`` and
+    ``ontology`` are passed to ``page_store``."""
     from .parse import prepare
 
     stream = stream_corpus(spark, input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        bstore = page_store(prepare(batch_df), template_redirects).persist()
+        bstore = page_store(prepare(batch_df), template_redirects, mappings, ontology).persist()
         ver = _latest_version(store_dir)
         if ver is None:
             old = bstore.limit(0)

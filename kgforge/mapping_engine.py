@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import vocab as V
+from .caching import local_strings
 from .dataparsers import (
     _BR_SPLIT_RE,
     DIMENSION_OF_STANDARD,
@@ -1116,50 +1117,54 @@ def table_mapping_quads(
 # ---------------------------------------------------------------------------
 
 
+def _inconsistent_pairs(onto: Ontology, targets: set[str]) -> set[tuple[str, str]]:
+    """(class a, class b) with b in ``targets``, b not owl:Thing, a disjoint
+    with b (any ancestor pairs declared disjoint, ``Ontology.is_disjoint``)
+    and a not a subclass of b: the pairs that make a typed resource
+    inconsistent with a range or domain. Enumerated from the declared
+    disjoint pairs over each class's descendants, not over classes²."""
+    closures = {c: set(onto.closure(c)) for c in onto.classes}
+    below: dict[str, set[str]] = {}  # class → itself and its descendants
+    for c, anc in closures.items():
+        for x in anc:
+            below.setdefault(x, set()).add(c)
+    out = set()
+    for x, y in onto.disjoint:
+        for p, q in ((x, y), (y, x)):
+            for b in below.get(q, set()) & targets - {OWL_THING}:
+                out.update((a, b) for a in below.get(p, ()) if b not in closures[a])
+    return out
+
+
 def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> DataFrame:
     """Split mappingbased_objects_uncleaned into mappingbased_objects
     (cleaned) / _disjoint_range / _disjoint_domain by joining object (and
     subject) IRIs with instance_types and consulting ontology disjointness.
 
-    Spark plan: broadcast the (small) direct-type table of typed resources?
-    No — instance_types scales with the corpus, so this is a plain
-    shuffle join on the object IRI; the ontology lookup tables (range/domain
-    per property, pairwise class disjointness) are broadcast literals baked
-    into CASE expressions.
+    Spark plan: instance_types scales with the corpus, so the type lookups
+    are plain shuffle joins on the object and subject IRIs. The ontology
+    comes in as two small broadcast tables, each made in one call: the
+    object properties' (range, domain), and the inconsistent (type, class)
+    pairs (``_inconsistent_pairs``) — the reference's TypeConsistencyCheck
+    broadcasts the ontology likewise (SURVEY.md:337).
     """
     onto = ontology or default_ontology()
+    spark = quads.sparkSession
     objects = quads.filter(F.col("dataset") == V.MAPPINGBASED_OBJECTS)
     types = (
         quads.filter(F.col("dataset") == V.INSTANCE_TYPES)
         .select(F.col("subject").alias("r"), F.col("value").alias("rtype"))
         .dropDuplicates(["r"])
     )
-
-    # the literals are cast to string element types: an ontology without
-    # object properties or disjoint classes gives empty ones, whose void
-    # element type cannot be indexed by a string column
-    def class_map(get_target):
-        pairs = []
-        for piri, p in onto.properties.items():
-            if p.kind == "object":
-                tgt = get_target(p)
-                if tgt:
-                    pairs.append((piri, tgt))
-        return F.create_map(*[F.lit(x) for pair in pairs for x in pair]).cast("map<string,string>")
-
-    range_map = class_map(lambda p: p.range)
-    domain_map = class_map(lambda p: p.domain)
-    # disjointness as a broadcast literal set of "classA|classB" keys
-    dis_keys = set()
-    for a in onto.classes:
-        for b in onto.classes:
-            if onto.is_disjoint(a, b):
-                dis_keys.add(f"{a}|{b}")
-    # subtype: "sub|super" keys
-    sub_keys = {f"{c}|{s}" for c in onto.classes for s in onto.closure(c)}
-
-    dis_arr = F.array(*[F.lit(k) for k in sorted(dis_keys)]).cast("array<string>")
-    sub_arr = F.array(*[F.lit(k) for k in sorted(sub_keys)]).cast("array<string>")
+    props = [
+        (piri, p.range or None, p.domain or None)
+        for piri, p in onto.properties.items()
+        if p.kind == "object" and (p.range or p.domain)
+    ]
+    ranges = local_strings(spark, ("predicate", "rng", "dom"), props)
+    bad = local_strings(
+        spark, ("a", "b"), _inconsistent_pairs(onto, {t for p in props for t in p[1:] if t})
+    )
 
     j = (
         objects.join(types, objects["value"] == types["r"], "left")
@@ -1167,30 +1172,24 @@ def type_consistency(quads: DataFrame, ontology: Ontology | None = None) -> Data
         .withColumnRenamed("rtype", "obj_type")
     )
     stypes = types.select(F.col("r").alias("r2"), F.col("rtype").alias("subj_type"))
-    j = j.join(stypes, j["subject"] == stypes["r2"], "left").drop("r2")
-
-    rng = range_map[F.col("predicate")]
-    dom = domain_map[F.col("predicate")]
-    obj_key = F.concat(F.col("obj_type"), F.lit("|"), rng)
-    subj_key = F.concat(F.col("subj_type"), F.lit("|"), dom)
-
-    range_bad = (
-        F.col("obj_type").isNotNull()
-        & rng.isNotNull()
-        & (rng != OWL_THING)
-        & ~F.array_contains(sub_arr, obj_key)
-        & F.array_contains(dis_arr, F.concat(F.col("obj_type"), F.lit("|"), rng))
-    )
-    domain_bad = (
-        F.col("subj_type").isNotNull()
-        & dom.isNotNull()
-        & (dom != OWL_THING)
-        & ~F.array_contains(sub_arr, subj_key)
-        & F.array_contains(dis_arr, F.concat(F.col("subj_type"), F.lit("|"), dom))
+    j = (
+        j.join(stypes, j["subject"] == stypes["r2"], "left")
+        .drop("r2")
+        .join(F.broadcast(ranges), "predicate", "left")
+        .join(
+            F.broadcast(bad.select(
+                F.col("a").alias("obj_type"), F.col("b").alias("rng"), F.lit(True).alias("range_bad"))),
+            ["obj_type", "rng"], "left",
+        )
+        .join(
+            F.broadcast(bad.select(
+                F.col("a").alias("subj_type"), F.col("b").alias("dom"), F.lit(True).alias("domain_bad"))),
+            ["subj_type", "dom"], "left",
+        )
     )
     dataset = (
-        F.when(range_bad, F.lit("mappingbased_objects_disjoint_range"))
-        .when(domain_bad, F.lit("mappingbased_objects_disjoint_domain"))
+        F.when(F.col("range_bad"), F.lit("mappingbased_objects_disjoint_range"))
+        .when(F.col("domain_bad"), F.lit("mappingbased_objects_disjoint_domain"))
         .otherwise(F.lit("mappingbased_objects"))
     )
     return j.select(

@@ -281,9 +281,7 @@ class Pipeline:
     def _independent(self, *stages: tuple) -> list[DataFrame]:
         """``_stage(*args)`` for each of ``stages``, results in the given
         order. With a workdir the stages run concurrently under the caller's
-        job group (``session.concurrently``). Safe because no two of the
-        stages share a module-level cache: each has its own one-slot persist
-        (redirects._LAST_REDIRECT_EDGES, linker._LAST_SF_SRC / _LAST_SF)."""
+        job group (``session.concurrently``)."""
         if self.workdir is None:
             return [self._stage(*s) for s in stages]
         return concurrently(self.spark, [lambda s=s: self._stage(*s) for s in stages])
@@ -317,7 +315,7 @@ class Pipeline:
         # infobox/mapping dispatch sees through Template-ns redirects
         # (resolveMap)
         self.tred = tred = template_redirect_map(
-            parsed, relevant_targets=dispatch_relevant_targets()
+            parsed, relevant_targets=dispatch_relevant_targets(mappings)
         )
         # the extractor suite, the infobox cascade and the mapping engine
         # (instance types, mapping-based statements) in one pass

@@ -60,9 +60,6 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 DBO_PREFIX = "http://dbpedia.org/ontology/"
 SD_INSTANCE_TYPES = "sd_instance_types"
 
-# one-slot cache for the persisted tf table (released on the next call)
-_LAST_TF: list = []
-
 
 # ---------------------------------------------------------------------------
 # domain/range penalty (createScoreMap / typeDiffPenalty,
@@ -180,29 +177,27 @@ def sd_type_scores(
         )
     in_src = objects.select(F.col("object").alias("resource"), "predicate")
     # tf feeds FIVE downstream branches (N, pred totals, per-type counts,
-    # normalization, scoring) — persist so the triple scan + first shuffle
-    # happen once, not per branch; the N count below materializes it.
-    # One-slot lifecycle (kgforge/caching.py): each call releases the
-    # previous call's table so repeat bench/driver runs stay bounded
-    from .caching import one_slot_persist
-
+    # normalization, scoring) — checkpointed so the triple scan + first
+    # shuffle happen once, not per branch. The checkpoint is owned by this
+    # call: its blocks go when the returned frame does, so repeat
+    # bench/driver runs stay bounded and never evict each other.
     # r6 (guide §2.4 — two operations keyed the same way share one
     # exchange): repartition by RESOURCE before the groupBy.  Hash-
     # partitioning on a subset of the grouping keys satisfies the
     # aggregation's ClusteredDistribution, so the groupBy adds no second
     # exchange — and every downstream per-resource step (the untyped
     # anti-join, norm, the (resource, type) scoring aggregate, the
-    # norm⋈scored join and the final winner aggregate) inherits the cached
-    # partitioning and runs EXCHANGE-FREE (plan pinned in
+    # norm⋈scored join and the final winner aggregate) inherits the
+    # checkpoint's partitioning and runs EXCHANGE-FREE (plan pinned in
     # plans/r06/kg_sd_types_after.txt).  Skew bound: a resource carries at
     # most |predicates|·2 tf rows, so resource-keyed partitions are even.
-    tf_raw = one_slot_persist(
-        _LAST_TF,
+    tf_raw = (
         out_src.withColumn("dir", F.lit("out"))
         .unionByName(in_src.withColumn("dir", F.lit("in")))
         .repartition("resource")
         .groupBy("resource", "predicate", "dir")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf")),
+        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+        .localCheckpoint()
     )
 
     tf = tf_raw.filter(
@@ -235,8 +230,8 @@ def sd_type_scores(
     # SdTypeCreation.scala:530-536).  Deliberately a driver scalar: folding
     # N into the DAG as a 1-row broadcast join constant-folds into a
     # BroadcastNestedLoopJoin (measured).  r6: submitted CONCURRENTLY with
-    # the three stats collects (it was a serial job before them); the
-    # cache's per-partition locks make the first materialization race-safe.
+    # the three stats collects (it was a serial job before them); all four
+    # read the already materialized checkpoint.
     n_resources, counts_rows, tsizes_rows, ptot_rows = concurrently(spark, [
         tf_raw.select("resource").distinct().count,
         counts.collect,

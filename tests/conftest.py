@@ -42,3 +42,20 @@ def job_group(spark):
             jobs.outside = set(tracker.getJobIdsForGroup(None)) - before
 
     return run
+
+
+@pytest.fixture
+def force_join_closure(monkeypatch):
+    """``force_join_closure()`` routes every later ``transitive_closure``
+    call of the test through the log-round join path, as an edge set above
+    the driver cap would."""
+    from kgforge import redirects
+
+    closure = redirects.transitive_closure
+
+    def force():
+        monkeypatch.setattr(
+            redirects, "transitive_closure", lambda edges: closure(edges, driver_max_edges=0)
+        )
+
+    return force

@@ -54,11 +54,11 @@ def _corpus_v2(spark):
     )
 
 
-def _job_quads(spark, corpus):
+def _job_quads(spark, corpus, mappings=None):
     """The batch job's ``quads`` stage over ``corpus`` (run in memory) and
     the template-redirect map the run resolved."""
     p = Pipeline(spark)
-    p.run(corpus)
+    p.run(corpus, mappings=mappings)
     return p.quads, p.tred
 
 
@@ -80,15 +80,25 @@ def _sym_diff_empty(a, b):
     assert b.exceptAll(a).count() == 0
 
 
-@pytest.mark.parametrize("corpus", ["golden", "minidump"])
+@pytest.mark.parametrize("corpus", ["golden", "minidump", "minidump-real-rules"])
 def test_store_view_equals_job_quads_stage(spark, corpus):
     """The live store and the batch job share one per-page extraction: the
     store's graph view is the job's ``quads`` stage as a multiset, with the
-    mapping engine's output in both."""
+    mapping engine's output in both — also under the real per-language
+    community rules, given to both sides."""
     df = _corpus_v1(spark) if corpus == "golden" else spark.read.parquet(MINIDUMP)
-    quads, tred = _job_quads(spark, df)
-    _sym_diff_empty(store_quads(page_store(prepare(df), tred)), quads)
+    mappings = None
+    if corpus == "minidump-real-rules":
+        from kgforge.mappings_loader import dump_mappings_by_lang
+
+        mappings = dump_mappings_by_lang(sorted(r.lang for r in df.select("lang").distinct().collect()))
+    quads, tred = _job_quads(spark, df, mappings)
+    _sym_diff_empty(store_quads(page_store(prepare(df), tred, mappings)), quads)
     assert quads.filter(F.col("dataset").startswith("mappingbased_")).count() > 0
+    if mappings is not None:
+        # the real rules type far more pages than the three default ones
+        # (test_minidump.py::test_real_mappings_over_real_pages)
+        assert quads.filter(F.col("dataset") == "instance_types").count() == 76
 
 
 def test_incremental_equals_full_reextraction(spark, store1, job_quads_v2):

@@ -175,15 +175,25 @@ def test_job_and_driver_cache_build_one_graph(spark, tmp_path):
 _BOX = "{{Infobox person\n|name=Ann Example\n|birth_date={{%s|1950|1|2}}\n|occupation=Writer\n}}\n"
 
 
-def _tred_corpus(spark):
+def _tred_corpus(spark, page="Bd", target="Birth date", use="Bd"):
+    """Template:``page`` redirects to Template:``target``; Alice writes her
+    birth date with ``{{Birth date}}``, Bob with ``{{<use>}}``."""
     rows = [
-        ("r", "t/Template:Bd.wiki", "c", "en", "#REDIRECT [[Template:Birth date]]\n"),
+        ("r", f"t/Template:{page}.wiki", "c", "en", f"#REDIRECT [[Template:{target}]]\n"),
         ("r", "t/Alice.wiki", "c", "en", _BOX % "Birth date"),
-        ("r", "t/Bob.wiki", "c", "en", _BOX % "Bd"),
+        ("r", "t/Bob.wiki", "c", "en", _BOX % use),
     ]
     return spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     )
+
+
+def _infobox(quads):
+    rows = quads.filter(F.col("dataset") == "infobox_properties").collect()
+    by_page = {"Alice": set(), "Bob": set()}
+    for r in rows:
+        by_page[r.subject.rsplit("/", 1)[1]].add((r.predicate, r.value, r.datatype))
+    return by_page
 
 
 def test_run_resolves_template_redirects_from_the_parse(spark):
@@ -194,21 +204,42 @@ def test_run_resolves_template_redirects_from_the_parse(spark):
     from kgforge.extractors import run_extractors
     from kgforge.pipeline import Pipeline
 
-    def infobox(quads):
-        rows = quads.filter(F.col("dataset") == "infobox_properties").collect()
-        by_page = {"Alice": set(), "Bob": set()}
-        for r in rows:
-            by_page[r.subject.rsplit("/", 1)[1]].add((r.predicate, r.value, r.datatype))
-        return by_page
-
     p = Pipeline(spark)
     p.run(_tred_corpus(spark))
     assert p.tred == {"bd": "birth date"}
-    ib = infobox(p.quads)
+    ib = _infobox(p.quads)
     assert ib["Bob"] == ib["Alice"]
     assert any(pred.endswith("/birthDate") for pred, _, _ in ib["Bob"])
-    bare = infobox(run_extractors(p.parsed, ["infobox"]))
+    bare = _infobox(run_extractors(p.parsed, ["infobox"]))
     assert bare["Bob"] != ib["Bob"]
+
+
+def test_template_redirect_names_match_the_parse(spark, force_join_closure):
+    """A redirect page and target written with no-break spaces give the
+    names the parse gives templates (``{{Bd x}}``), on the driver path and
+    on the join path alike, so the redirect resolves Bob's date."""
+    from kgforge.pipeline import Pipeline
+    from kgforge.redirects import template_redirect_map
+
+    p = Pipeline(spark)
+    p.run(_tred_corpus(spark, page="Bd\xa0x", target="Birth\xa0date", use="Bd x"))
+    assert p.tred == {"bd x": "birth date"}
+    ib = _infobox(p.quads)
+    assert ib["Bob"] == ib["Alice"]
+    assert any(pred.endswith("/birthDate") for pred, _, _ in ib["Bob"])
+    force_join_closure()
+    assert template_redirect_map(p.parsed) == p.tred
+
+
+def test_in_memory_run_leaves_no_cached_frame(spark):
+    """An in-memory run keeps nothing in Spark's cache manager once its
+    graph has been read: every shared table is a checkpoint owned by the
+    run's frames, none a module-level persist."""
+    from kgforge.pipeline import Pipeline
+
+    spark.catalog.clearCache()
+    Pipeline(spark).run(C.generate_corpus_df(spark, 60, partitions=2)).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_driver_hybrid_infobox_sees_template_redirects(spark, monkeypatch):

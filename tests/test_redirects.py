@@ -53,12 +53,16 @@ def test_distributed_closure_matches_driver_path(spark):
         [("x", "y"), ("y", "x"), ("a", "final")],
         [(f"n{i}", f"n{i+1}") for i in range(12)] + [("s", "s")],
         [("a", "b"), ("b", "a"), ("c", "a"), ("d", "c")],
+        # duplicate sources (two commits of one redirect page): both paths
+        # keep the smallest target
+        [("a", "z"), ("a", "b"), ("b", "c"), ("d", "d2"), ("d", "d1")],
     ]
     for pairs in fixtures:
         e = _edges(spark, pairs)
         driver = dict(transitive_closure(e).collect())
         dist = dict(transitive_closure(e, driver_max_edges=0).collect())
         assert dist == driver, pairs
+    assert driver == {"a": "c", "b": "c", "d": "d1"}
 
 
 def _tmpl_parsed(spark):
@@ -80,36 +84,35 @@ def _tmpl_parsed(spark):
     ))
 
 
-def test_template_redirect_map_fallback_matches_driver(spark):
-    """max_driver_rows=0 forces the distributed-resolve path (the bounded
-    probe is the round-2 scale-hardening item): the dict and the downstream
-    dispatch behavior must be identical to the driver path."""
+def test_template_redirect_map_fallback_matches_driver(spark, force_join_closure):
+    """The join path (an edge set above the driver cap) gives the same dict,
+    and the same downstream dispatch, as the driver path."""
     from kgforge.redirects import resolve_mapping_names, template_redirect_map
 
     parsed = _tmpl_parsed(spark)
     driver = template_redirect_map(parsed)
-    dist = template_redirect_map(parsed, max_driver_rows=0)
+    force_join_closure()
+    dist = template_redirect_map(parsed)
     assert driver == dist == {"a": "final target", "b": "final target", "c": "final target"}
     rules = {"final target": object()}
     assert resolve_mapping_names(rules, driver).keys() == resolve_mapping_names(rules, dist).keys()
 
 
-def test_template_redirect_map_relevant_targets_filter(spark):
+def test_template_redirect_map_relevant_targets_filter(spark, force_join_closure):
     from kgforge.redirects import template_redirect_map
 
     parsed = _tmpl_parsed(spark)
-    got = template_redirect_map(parsed, max_driver_rows=0,
-                                relevant_targets={"Final target"})
+    force_join_closure()
+    got = template_redirect_map(parsed, relevant_targets={"Final target"})
     assert got == {"a": "final target", "b": "final target", "c": "final target"}
-    none = template_redirect_map(parsed, max_driver_rows=0,
-                                 relevant_targets={"unused"})
+    none = template_redirect_map(parsed, relevant_targets={"unused"})
     assert none == {}
 
 
-def test_dispatch_relevant_targets_usage_bounds_collect(spark):
+def test_dispatch_relevant_targets_usage_bounds_collect(spark, force_join_closure):
     """VERDICT r3 #5: production call sites pass dispatch_relevant_targets()
-    so above the probe cap only usage-relevant pairs are collected — and the
-    dispatch output is unchanged vs the unbounded map."""
+    so only usage-relevant pairs are collected — and the dispatch output is
+    unchanged vs the unbounded map."""
     from kgforge.mapping_engine import default_mappings
     from kgforge.parse import prepare
     from kgforge.redirects import (
@@ -129,9 +132,10 @@ def test_dispatch_relevant_targets_usage_bounds_collect(spark):
     parsed = prepare(spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     ))
-    bounded = template_redirect_map(parsed, max_driver_rows=0, relevant_targets=targets)
-    assert bounded == {"sd": "start date"}  # unused redirect NOT collected
     full = template_redirect_map(parsed)
+    force_join_closure()
+    bounded = template_redirect_map(parsed, relevant_targets=targets)
+    assert bounded == {"sd": "start date"}  # unused redirect NOT collected
     mp = default_mappings()
     assert (resolve_mapping_names(mp, bounded).keys()
             == resolve_mapping_names(mp, full).keys())
@@ -150,11 +154,28 @@ def _jobs_in_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_dispatch_relevant_targets_flattens_per_language_rules():
+    """Per-language rules ({lang: {template: rule}}, the shape
+    dump_mappings_by_lang loads) give their template names, not the
+    language codes; per-language date templates count too."""
+    from kgforge.dates import TEMPLATE_DATES_BY_LANG
+    from kgforge.mapping_engine import default_mappings
+    from kgforge.redirects import dispatch_relevant_targets
+
+    rules = {"en": default_mappings(), "de": {"infobox ort": object()}}
+    targets = dispatch_relevant_targets(rules)
+    assert {"infobox person", "infobox ort", "birth date"} <= targets
+    assert not {"en", "de"} & targets
+    assert {k for specs in TEMPLATE_DATES_BY_LANG.values() for k in specs} <= targets
+    assert dispatch_relevant_targets(default_mappings()) == dispatch_relevant_targets()
+
+
 def test_template_redirect_probe_is_one_job(spark, monkeypatch):
     """Under the cap the bounded read is the collect itself: one job, however
-    many partitions the input has. A cap of 0 goes distributed without a
-    probe job (the closure is stubbed to an empty frame, which collects
-    without a job, so any job counted would be a probe's)."""
+    many partitions the input has, and the closed pairs come back as a local
+    table that collects without a job. The map is reached only through
+    ``transitive_closure``: stubbed to an empty frame, the map is empty and
+    no job runs."""
     from kgforge import redirects
 
     parsed = _tmpl_parsed(spark).repartition(6).localCheckpoint()
@@ -165,12 +186,28 @@ def test_template_redirect_probe_is_one_job(spark, monkeypatch):
 
     seen = []
 
-    def closure(edges, driver_max_edges):
-        seen.append(driver_max_edges)
+    def closure(edges):
+        seen.append(edges.columns)
         return edges.limit(0)
 
     monkeypatch.setattr(redirects, "transitive_closure", closure)
     got, jobs = _jobs_in_group(
-        spark, "kgforge-tred-zero",
-        lambda: redirects.template_redirect_map(parsed, max_driver_rows=0))
-    assert seen == [0] and got == {} and jobs == 0
+        spark, "kgforge-tred-stub", lambda: redirects.template_redirect_map(parsed))
+    assert seen == [["src", "dst"]] and got == {} and jobs == 0
+
+
+def test_transitive_redirect_quads_builds_in_one_job(spark):
+    """Building the dataset on a small edge set runs one job: the closure's
+    bounded read."""
+    from kgforge import redirects
+
+    quads = spark.createDataFrame(
+        [("en", "redirects", s, "p", d, None, None) for s, d in [("a", "b"), ("b", "c")]]
+        + [("en", "labels", "a", "p", "A", None, None)],
+        "language string, dataset string, subject string, predicate string, value string, "
+        "context string, datatype string",
+    )
+    out, jobs = _jobs_in_group(
+        spark, "kgforge-tred-build", lambda: redirects.transitive_redirect_quads(quads))
+    assert jobs == 1
+    assert {(r.subject, r.value) for r in out.collect()} == {("a", "c"), ("b", "c")}
